@@ -63,27 +63,10 @@ object Bench {
     "q_stream_ann_ingest",   // streaming IVF ingest + search
     "q_bpe_encode")          // BPE tokenizer training + corpus encode
 
-  /** Queries whose first execution fits and memoizes an ML model per
-    * (session, dir) — the TF-IDF featurization and the k-means blocking fit.
-    * A repeat execution would measure the post-fit cache hit, not the
-    * operator, so for these every rep first drops the memoized fit (and its
-    * InMemoryRelation) — each rep re-runs the full fit and the min is a fair
-    * steady-state of the fit cost. The caches are re-primed by the final rep,
-    * so any downstream fit reuser still shares it exactly like the
-    * reference's persisted features parquet (q_billmatch moved to the
-    * pinned-label featurizedCounts pass in r11 — its first rep pays that
-    * featurization, later reps reuse it, the persisted-features semantics). */
-  private val fitsOnce = Set("q_tfidf_features", "q_kmeans_blocks")
-
-  /** One timed execution (prepare runs outside the timed region — e.g. drop
-    * memoized ML fits so a rep measures the fit, not its cache). */
+  /** One timed execution, or None when the query throws: a failed query is
+    * never banked as a (fast) time. */
   private def timeOnce(spark: SparkSession, sfDir: String, name: String,
-                       fn: (SparkSession, String) => DataFrame,
-                       prepare: () => Unit): Double = {
-    // Label prepare's jobs separately (ADVICE r13: they used to inherit the
-    // PREVIOUS query's "bench:" label in the event log).
-    spark.sparkContext.setJobDescription(s"prepare:$name")
-    prepare()
+                       fn: (SparkSession, String) => DataFrame): Option[Double] = {
     // Label the jobs of each measured query (guide §1.5) so an event-log /
     // UI reading of a bench run attributes stages to queries by name.
     spark.sparkContext.setJobDescription(s"bench:$name")
@@ -95,11 +78,12 @@ object Bench {
     // quiesced heap without changing what the engine executes.
     System.gc()
     val t0 = System.nanoTime()
-    try { fn(spark, sfDir).count() }
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] $name failed: ${e.getMessage}")
-    }
-    val dt = (System.nanoTime() - t0) / 1e9
+    val dt =
+      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      }
     // clear the label so post-bench jobs don't inherit the last query's
     // "bench:" group (ADVICE r13); outside the timed region
     spark.sparkContext.setJobDescription(null)
@@ -119,35 +103,42 @@ object Bench {
     *     by >2× (evidence a burst hit some rep) gets up to
     *     SPARK_GRAFT_BENCH_EXTRA (default 2) extra reps; extra reps can only
     *     lower a best-of estimate, never inflate it.
-    * SPARK_GRAFT_BENCH_REPS=1 restores single-shot (no guard). */
-  private def runAll(spark: SparkSession, sfDir: String,
-                     work: Seq[(String, (SparkSession, String) => DataFrame, () => Unit)],
-                     reps: Int): Seq[(String, Double)] = {
+    * SPARK_GRAFT_BENCH_REPS=1 restores single-shot (no guard).
+    * A query that fails on any rep is never re-run: it is dropped from the
+    * timed results and named in the second list (work order). */
+  private[graft] def runAll(spark: SparkSession, sfDir: String,
+                            work: Seq[(String, (SparkSession, String) => DataFrame)],
+                            reps: Int): (Seq[(String, Double)], Seq[String]) = {
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
-    for (pass <- 1 to math.max(1, reps); (name, fn, prep) <- work) {
-      val dt = timeOnce(spark, sfDir, name, fn, prep)
-      times(name) = times(name) :+ dt
-      System.err.println(f"[bench] pass $pass $name%-22s $dt%8.2f s")
-    }
+    val failed = scala.collection.mutable.Set.empty[String]
+    def rep(name: String, fn: (SparkSession, String) => DataFrame,
+            label: String): Unit =
+      timeOnce(spark, sfDir, name, fn) match {
+        case Some(dt) =>
+          times(name) = times(name) :+ dt
+          System.err.println(f"[bench] $label%-6s $name%-22s $dt%8.2f s")
+        case None => failed += name
+      }
+    for (pass <- 1 to math.max(1, reps); (name, fn) <- work if !failed(name))
+      rep(name, fn, s"pass $pass")
     if (reps > 1) {
       val extra = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA", "2").toInt
-      for ((name, fn, prep) <- work) {
-        var v = times(name)
+      for ((name, fn) <- work) {
+        def spread = times(name).max / times(name).min
         var budget = extra
-        while (budget > 0 && v.max > 2.0 * v.min) {
-          val dt = timeOnce(spark, sfDir, name, fn, prep)
-          System.err.println(f"[bench] guard  $name%-22s $dt%8.2f s (spread ${v.max / v.min}%.1fx)")
-          v = v :+ dt; budget -= 1
+        while (budget > 0 && !failed(name) && spread > 2.0) {
+          rep(name, fn, f"guard (spread $spread%.1fx)")
+          budget -= 1
         }
-        times(name) = v
       }
     }
-    work.map { case (name, _, _) =>
+    val timed = work.map(_._1).filterNot(failed).map { name =>
       val dt = times(name).min
       System.err.println(f"[bench] $name%-22s $dt%8.2f s (best of ${times(name).size})")
       name -> dt
     }
+    (timed, work.map(_._1).filter(failed))
   }
 
   // ------------------------------------------------------ fresh-JVM phase
@@ -160,10 +151,7 @@ object Bench {
     * in-set passes, the headline set is re-run in SMALL FAMILIES (consecutive
     * chunks, default 4 queries) each in its OWN child JVM — same classpath,
     * same JVM flags, same reps/guard logic (the child is this very main,
-    * gated by SPARK_GRAFT_BENCH_CHILD). Families keep the headline order so
-    * intentional cache-sharing neighbours (featurization memo → its
-    * downstream consumers) stay co-resident, exactly like the reference's
-    * persisted-features reuse.
+    * gated by SPARK_GRAFT_BENCH_CHILD). Families keep the headline order.
     * Knobs: SPARK_GRAFT_BENCH_ISOLATE=0 disables; SPARK_GRAFT_BENCH_FAMILY
     * sizes the chunks; SPARK_GRAFT_BENCH_CHILD_TIMEOUT (sec) bounds a child.
     * A child failure degrades to the in-set number for its queries — it can
@@ -336,13 +324,20 @@ object Bench {
     System.err.println(s"[bench] detail write failed (continuing): ${e.getMessage}")
   }
 
+  /** `,"key":["a","b"]` — or nothing for an empty list, so the field is
+    * additive. */
+  private[graft] def nameListField(key: String, names: Seq[String]): String =
+    if (names.isEmpty) ""
+    else names.map("\"" + _ + "\"").mkString(s""","$key":[""", ",", "]")
+
   /** The isolate-mode driver-contract line: compact on purpose — one
-    * canonical per-query map plus scalars. BenchSpec asserts the worst-case
+    * canonical per-query map, the `isolated_failed` / `failed` name lists
+    * (`failureFields`, pre-rendered) and scalars. BenchSpec asserts the worst-case
     * rendering of the full headline set fits the tail-window budget. */
   private[graft] def contractLine(total: Double, canonical: Seq[(String, Double)],
-      isoFailedField: String, familySize: Int, calib: Double,
+      failureFields: String, familySize: Int, calib: Double,
       sfDir: String): String =
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(canonical)}%s$isoFailedField%s,"isolation":"fresh-jvm-family-$familySize","calib":$calib%.3f,"sf":"$sfDir%s"}"""
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(canonical)}%s$failureFields%s,"isolation":"fresh-jvm-family-$familySize","calib":$calib%.3f,"sf":"$sfDir%s"}"""
 
   /** Guard the driver-contract budget at print time: if a future headline-set
     * widening pushes the line past the harness tail window, shout on stderr —
@@ -370,7 +365,7 @@ object Bench {
     // first-touch cost. Toy data only — nothing the queries read is cached.
     // Guarded: a warmup failure must never stop the measured queries or the
     // driver-contract JSON line (the same failure in a measured query is
-    // caught by time()).
+    // caught by timeOnce and named as failed).
     try {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -444,17 +439,16 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val work = names.flatMap { name =>
       SparkEntry.queries.get(name) match {
-        case Some(q) =>
-          val prep: () => Unit =
-            if (fitsOnce(name)) () => graft.queries.MlQueries.clearFitCaches()
-            else () => ()
-          Some((name, q, prep))
+        case Some(q) => Some(name -> q)
         case None =>
           System.err.println(s"[bench] unknown query: $name (skipped)")
           None
       }
     }
-    val results = runAll(spark, sfDir, work, reps)
+    val (results, failed) = runAll(spark, sfDir, work, reps)
+    // failed queries carry no time; name them so a consumer can tell a
+    // failure from a query that was never in the set
+    val failedField = nameListField("failed", failed)
     val isolate = !isChild &&
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
     if (!isolate) {
@@ -468,9 +462,9 @@ object Bench {
         // them — a dev-mode run would emit spurious flags and bank
         // misleading out_of_band lists. Bands ride along as context only.
         writeDetail(
-          s"""{"queries_in_set":${jsonMap(results)},"queries_normalized":${jsonMap(results.map { case (k, v) => k -> v / calib })},"bands":${jsonBands(bands, results.map(_._1))},"out_of_band":"skipped: in-set timings are not comparable to isolated-round bands","calib":$calib,"sf":"$sfDir"}""")
+          s"""{"queries_in_set":${jsonMap(results)},"queries_normalized":${jsonMap(results.map { case (k, v) => k -> v / calib })},"bands":${jsonBands(bands, results.map(_._1))},"out_of_band":"skipped: in-set timings are not comparable to isolated-round bands"$failedField,"calib":$calib,"sf":"$sfDir"}""")
       }
-      printContract(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(results)}%s$calibField%s,"sf":"$sfDir%s"}""")
+      printContract(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(results)}%s$failedField%s$calibField%s,"sf":"$sfDir%s"}""")
       spark.stop()
       return
     }
@@ -490,11 +484,8 @@ object Bench {
     // parse miss) fall back to in-set numbers; name them in the artifact so a
     // cross-round consumer can tell a genuine isolated measurement from a
     // degraded one (ADVICE r8) instead of trusting the isolation label alone.
-    val isoFailed = results.map(_._1).filterNot(iso.contains)
-    val isoFailedField =
-      if (isoFailed.isEmpty) ""
-      else isoFailed.map("\"" + _ + "\"")
-        .mkString(""","isolated_failed":[""", ",", "]")
+    val isoFailedField = nameListField("isolated_failed",
+      results.map(_._1).filterNot(iso.contains))
     // Host-epoch-normalized seconds (sec / calib) make the next throughput
     // epoch shift self-evident (VERDICT r8 #8) — but the raw maps live in the
     // sidecar, NOT the contract line, which must fit the harness tail window.
@@ -508,9 +499,9 @@ object Bench {
     val oobField = oob.map("\"" + _ + "\"")
       .mkString(""","out_of_band":[""", ",", "]")
     writeDetail(
-      s"""{"queries":${jsonMap(canonical)},"queries_in_set":${jsonMap(results)},"queries_isolated":${jsonMap(isoSeq)}$isoFailedField$normField,"bands":${jsonBands(bands, canonical.map(_._1))}$oobField,"isolation":"fresh-jvm-family-$familySize","calib":$calib,"sf":"$sfDir"}""")
-    printContract(contractLine(total, canonical, isoFailedField, familySize,
-      calib, sfDir))
+      s"""{"queries":${jsonMap(canonical)},"queries_in_set":${jsonMap(results)},"queries_isolated":${jsonMap(isoSeq)}$isoFailedField$failedField$normField,"bands":${jsonBands(bands, canonical.map(_._1))}$oobField,"isolation":"fresh-jvm-family-$familySize","calib":$calib,"sf":"$sfDir"}""")
+    printContract(contractLine(total, canonical, isoFailedField + failedField,
+      familySize, calib, sfDir))
     spark.stop()
   }
 }

@@ -41,12 +41,8 @@ object BillMatch {
     val blocking = args.lift(5).getOrElse("kmeans")
     val spark = GraftSession.local()
 
-    // 1. features (clean → tokenize → stopwords → TF-IDF), corpus spread
-    //    across partitions (single-file testdata artifact)
+    // corpus spread across partitions (single-file testdata artifact)
     val docs = Tables.spread(Tables.documents(spark, sfDir))
-    val feats = FeaturePipeline.features(docs, FeatureConfig(numTextFeatures = 1024))
-      .select("doc_id", "lang", "n_chars", "features")
-      .cache()
 
     val sims = blocking match {
       case "minhash" =>
@@ -67,6 +63,10 @@ object BillMatch {
             ((lit(1.0) - col("jaccard_dist")) * 100.0).as("similarity"))
       case _ =>
         // workflow 1:
+        // 1. features (clean → tokenize → stopwords → TF-IDF)
+        val feats = FeaturePipeline.features(docs, FeatureConfig(numTextFeatures = 1024))
+          .select("doc_id", "lang", "n_chars", "features")
+          .cache()
         // 2. k-means blocking (the reference's ~27× all-pairs cut)
         val (model, clustered) = Clustering.kmeans(feats, k = k, maxIter = 20)
         println(f"[billmatch] kmeans wssse=${model.summary.trainingCost}%.3e")

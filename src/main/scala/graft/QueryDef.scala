@@ -32,20 +32,12 @@ final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None,
     scopesSessionConf: Boolean = false,
-    expect: Option[GateExpect] = None,
-    refitsMemoizedFit: Boolean = false) {
+    expect: Option[GateExpect] = None) {
   /** Mark as session-conf-scoping: Verify runs it outside the batch pool. */
   def serial: QueryDef = copy(scopesSessionConf = true)
   /** Pin the sf0.01 row count (and optional non-float checksum). */
   def expectAtGate(rows: Long, checksum: String = null): QueryDef =
     copy(expect = Some(GateExpect(rows, Option(checksum))))
-  /** Mark a pinned query whose fn consults a session-level FIT MEMO
-    * (MlQueries.kmeansCache): Verify's repeat gate must drop the fit
-    * caches before each repetition or the repeats re-count a memoized
-    * model instead of re-training one — vacuous for exactly the
-    * seeded-fit flake class the gate exists to catch. Queries that fit
-    * fresh on every call don't need (and shouldn't pay for) the clear. */
-  def refitGate: QueryDef = copy(refitsMemoizedFit = true)
 }
 
 object QueryDef {

@@ -237,18 +237,6 @@ object ScaleProbe {
         Thread.sleep(300)
         (dt, rows, metrics.snapshot())
       }.minBy(_._1)
-    // ML fits memoize per (session, dir): without the cache drop a repeat
-    // rep would measure the post-fit cache hit, not the fit (the Bench
-    // fitsOnce discipline). reps=2 for the fit ladder: each rep is a full
-    // featurize+fit, the second rep suffices to shed first-touch noise.
-    def timeFit(name: String, dir: String, reps: Int = 2): (Double, Long) =
-      (1 to reps).map { _ =>
-        graft.queries.MlQueries.clearFitCaches()
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-        ((System.nanoTime() - t0) / 1e9, rows)
-      }.minBy(_._1)
-
     def rowDone(q: String, factors: Seq[Int]): Boolean =
       factors.forall(f => ckpt.contains((q, f)))
     def factorsOf(q: String): Seq[Int] =
@@ -316,9 +304,6 @@ object ScaleProbe {
           .select(col("dst").as("src"), col("src").as("dst")))
       graft.graph.GraphOps.stronglyConnectedComponents(dir2)
     }
-    // timeFit returns (seconds, output rows) — checkpoint with metrics zeroed
-    def noMetrics(v: (Double, Long)): (Double, Long, ProbeMetrics) =
-      (v._1, v._2, ProbeMetrics(0L, 0L, 0L))
     val sccRows =
       if (only.forall(_.contains("q_scc")))
         Seq("q_scc(whole-graph)" ->
@@ -332,7 +317,8 @@ object ScaleProbe {
         Seq("q_kmeans_blocks(fit)" ->
           graphFactors.map(f =>
             f -> checkpointed("q_kmeans_blocks(fit)", f)(
-              noMetrics(timeFit("q_kmeans_blocks", dirFor(f))))._1).toMap)
+              timeDf(SparkEntry.queries("q_kmeans_blocks")(spark, _),
+                dirFor(f)))._1).toMap)
       else Nil
     // (q_minhash_lsh / q_corpus_build fit ladders moved BELOW the tail and
     // multimodal sections: the ML-estimator LSH fit costs ~200 s at 1× —
@@ -793,7 +779,8 @@ object ScaleProbe {
     val dupMlRows = Seq("q_minhash_lsh", "q_corpus_build")
       .filter(q => only.forall(_.contains(q))).map { q =>
         q -> dupHeavyFactors.map { f =>
-          val v = checkpointed(s"$q(fit)", f)(noMetrics(timeFit(q, dirFor(f))))
+          val v = checkpointed(s"$q(fit)", f)(
+            timeDf(SparkEntry.queries(q)(spark, _), dirFor(f)))
           f -> ((v._1, v._2))
         }.toMap
       }
@@ -807,10 +794,8 @@ object ScaleProbe {
     // ~quadratically in the factor; the ladder's question is whether the
     // branch MACHINERY (support-minhash signatures, 16-band slicing, the
     // id-only bucket join, the constraint verify) stays banded — read the
-    // spill/shuffle columns against the rows column. timeDf's first rep
-    // pays the memoized count-featurization; the best-of-3 min measures
-    // the branch over cached features (the persisted-features production
-    // shape).
+    // spill/shuffle columns against the rows column. Every rep builds its
+    // own count-featurization.
     val budgetKey = "q_candidates_budget(all-LSH)"
     val budgetRows: Seq[(String, Map[Int, (Double, Long, ProbeMetrics)])] =
       if (only.forall(_.exists(e => budgetKey.startsWith(e))))
@@ -820,8 +805,6 @@ object ScaleProbe {
               dirFor(f)))
         }.toMap)
       else Nil
-    // drop the per-dir feature memos the ladder primed (4 corpus dirs)
-    if (budgetRows.nonEmpty) graft.queries.MlQueries.clearFitCaches()
 
     // deadline-skipped rows render as "—" (measured numbers only, never a
     // guess); α needs both the 10× and 100× points

@@ -157,23 +157,8 @@ object Verify {
                   sys.error(s"gate expectation: checksum=$got, pinned $pinned")
               }
               // in-session repeat gate: fresh builds must agree with the pin.
-              // For fit-MEMOIZING queries (QueryDef.refitGate) the memos are
-              // dropped before each repetition — without this a memoized fit
-              // (q_kmeans_blocks' clustered8) would be re-counted, not
-              // re-trained, and the repeat gate would be vacuous for exactly
-              // the seeded-fit class it exists to catch (r11 self-review;
-              // this gate-with-real-refits is what caught q_kmeans_blocks).
-              // Scoped to flagged queries AND to the fit memo alone
-              // (MlQueries.clearFitMemo): this body runs inside the
-              // concurrent batch pool, so clearing the shared feature
-              // caches here would unpersist them out from under other
-              // running pool queries — and a racing getOrElseUpdate could
-              // double-evaluate, orphaning an InMemoryRelation (ADVICE
-              // r11). The gate's target is the seeded FIT; the feature
-              // input is deterministic and stays cached.
+              // Nothing is memoized across calls, so every repeat re-trains.
               (2 to pinRepeats).foreach { i =>
-                if (qd.refitsMemoizedFit)
-                  graft.queries.MlQueries.clearFitMemo(spark, sfDir)
                 val dfi = qd.fn(spark, sfDir)
                 val rowsI = dfi.count()
                 if (rowsI != e.rows)

@@ -86,98 +86,34 @@ object MlQueries {
       s"($j, [${u.mkString(", ")}])"
     }.mkString(", ")
 
-  private val featCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private val featCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Shared k-means blocking (k=8) over [[featurized]] — the reference
-    * likewise wrote the clustered features parquet once and fed it to every
-    * downstream stage (ExtractCandidates.scala:145). Since r11 the only
-    * registry consumer is q_kmeans_blocks (q_billmatch and
-    * q_candidates_budget moved to pinned block labels so their full
-    * pipelines gate in DuckDB); the memo still shares the fit with any
-    * ad-hoc composition. The frame itself is deliberately NOT cached —
-    * model.transform over the cached features is a trivial map, and an
-    * InMemoryRelation here would inflate Catalyst's size estimate and flip
-    * downstream pair⋈features joins from broadcast to a shuffle of the wide
-    * vectors (measured 6× slower). */
-  private def clustered8(s: SparkSession, d: String): DataFrame =
-    kmeansCache.getOrElseUpdate((s, d),
-      Clustering.kmeans(featurized(s, d), k = 8, maxIter = 10,
-        fitOrderCol = Some("doc_id"))._2)
-
   /** The testdata ships one small parquet file per table = ONE input split,
     * which would serialize every per-row featurization map on a single core.
-    * Spread it across a fixed fan-out (fixed, not defaultParallelism, so the
-    * k-means init sampling sees identical partitioning on any machine). On a
-    * real 100 TB table the scan is already thousands of splits and this
-    * repartition would be dropped — the reference's count-based repartition
-    * (ExtractCandidates.scala:102) is the same testdata-scale fix. */
+    * Spread it across a FIXED fan-out of 32, not a slot-scaled one: q_dimsum's
+    * pin depends on the partition count, because DimsumFork seeds each
+    * partition's sampler with `XORShiftRandom(partitionIndex)`
+    * (DimsumFork.scala), so a different fan-out draws different samples.
+    * The seeded fits do not depend on it: `Clustering.sampleFit` hash-sorts
+    * their sample into one partition. The repartition is NOT dropped on a
+    * well-split input — it shuffles at every scale. */
   private def spread(df: DataFrame): DataFrame = df.repartition(32)
 
   /** documents → (doc_id, lang, n_chars, features) with TF-IDF features.
-    * Cached per (session, dir): the k-means fit, the candidate self-join, and
-    * the pair→vector joins all reuse this frame — without the cache the whole
-    * clean→tokenize→TF→IDF lineage recomputes on every reuse (the reference
-    * cached its features parquet for the same reason,
-    * ExtractCandidates.scala:106). */
+    * Built fresh on every call (the IDF fit runs eagerly here) and never
+    * cached, so no query's output or timing depends on what ran before it
+    * in the session. */
   private def featurized(s: SparkSession, d: String): DataFrame =
-    featCache.getOrElseUpdate((s, d),
-      FeaturePipeline.features(spread(Tables.documents(s, d)), tfidfCfg)
-        .select("doc_id", "lang", "n_chars", "features")
-        .cache())
+    FeaturePipeline.features(spread(Tables.documents(s, d)), tfidfCfg)
+      .select("doc_id", "lang", "n_chars", "features")
 
   /** No-IDF murmur3-hashed COUNT features (1024 buckets) — the fully
     * DuckDB-replayable featurization (mm_hash CTE + per-bucket COUNT) used
     * by the pinned-block-label [sql] gates (q_billmatch,
-    * q_candidates_budget, q_candidates_budget_exact). Cached per
-    * (session, dir) like [[featurized]]: three gates share one
-    * clean→tokenize→hash pass. */
+    * q_candidates_budget, q_candidates_budget_exact). Uncached, like
+    * [[featurized]]. */
   private def featurizedCounts(s: SparkSession, d: String): DataFrame =
-    featCountCache.getOrElseUpdate((s, d),
-      FeaturePipeline.features(spread(Tables.documents(s, d)),
-        FeatureConfig(numTextFeatures = 1024, useIdf = false))
-        .select("doc_id", "lang", "n_chars", "features")
-        .cache())
-
-  /** Drop the memoized feature frames + k-means fit (and unpersist the
-    * cached features so Spark's CacheManager cannot plan-match a rebuilt
-    * lineage onto the old InMemoryRelation). Benchmark hook: lets Bench
-    * re-measure the FIT cost on every repetition instead of the cache hit;
-    * also Verify's repeat-gate hook for fit-memoizing pins.
-    * Entries are removed one-by-one with the atomic (key, value) remove —
-    * a sweep-then-clear() would silently drop (never unpersist) a frame a
-    * concurrent getOrElseUpdate inserted between the two steps (r11
-    * self-review); with per-entry removal a racing insert simply survives
-    * with its cache intact. */
-  def clearFitCaches(): Unit = {
-    for ((k, df) <- featCache.toSeq if featCache.remove(k, df))
-      { scala.util.Try(df.unpersist(blocking = true)); () }
-    for ((k, df) <- featCountCache.toSeq if featCountCache.remove(k, df))
-      { scala.util.Try(df.unpersist(blocking = true)); () }
-    kmeansCache.toSeq.foreach { case (k, v) => kmeansCache.remove(k, v); () }
-  }
-
-  /** Drop ONLY the memoized seeded FIT for this (session, dir) — Verify's
-    * repeat-gate hook (QueryDef.refitGate). The repeat gate must re-TRAIN
-    * the seeded model, not re-count a memo, but it must NOT evict the
-    * shared feature caches: Verify runs pinned queries inside a concurrent
-    * batch pool, and a full [[clearFitCaches]] there unpersisted
-    * featCache/featCountCache out from under concurrently running pool
-    * queries (repeated evictions per gate run — exactly the cost the
-    * pool-scoping comment says the design avoids) while a racing
-    * getOrElseUpdate could double-evaluate and orphan an InMemoryRelation
-    * (ADVICE r11). The fit memo's value is an UNcached frame
-    * (model.transform over the cached features — see [[clustered8]]), so
-    * removal needs no unpersist and a racing re-insert leaks nothing. */
-  def clearFitMemo(s: SparkSession, d: String): Unit = {
-    kmeansCache.remove((s, d)); ()
-  }
+    FeaturePipeline.features(spread(Tables.documents(s, d)),
+      FeatureConfig(numTextFeatures = 1024, useIdf = false))
+      .select("doc_id", "lang", "n_chars", "features")
 
   val defs: Map[String, QueryDef] = Map(
 
@@ -241,10 +177,11 @@ object MlQueries {
 
     // ----- M8: k-means blocking labels (reference Utils.scala:129-149)
     "q_kmeans_blocks" -> QueryDef.rowsOnly { (s, d) =>
-      val clustered = clustered8(s, d)
+      val (_, clustered) = Clustering.kmeans(featurized(s, d), k = 8,
+        maxIter = 10, fitOrderCol = Some("doc_id"))
       clustered.groupBy("prediction").agg(count(lit(1)).as("n"))
         .orderBy("prediction")
-    }.expectAtGate(8L, "4460179844691033791").refitGate,
+    }.expectAtGate(8L, "4460179844691033791"),
 
     // ----- M8 alternative: bisecting k-means blocking (the reference's
     // commented alternative, feature/Utils.scala:138)

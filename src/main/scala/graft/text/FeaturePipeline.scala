@@ -105,8 +105,10 @@ object FeaturePipeline {
       fitTransform(df, cfg)._2
     else {
       import org.apache.spark.sql.graft.bridge
-      val stop = StopWordsRemover.loadDefaultStopWords("english") ++
-        cfg.extraStopWords
+      // lowercased like the stock (case-insensitive) StopWordsRemover: the
+      // kernel matches the set against lowercased text
+      val stop = (StopWordsRemover.loadDefaultStopWords("english") ++
+        cfg.extraStopWords).map(_.toLowerCase(java.util.Locale.ROOT))
       val tfCol = bridge.column(graft.expressions.CleanTokenTf(
         bridge.expression(lower(col(cfg.inputCol))),
         cfg.numTextFeatures, stop.toSeq))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** CI coverage for the bench driver itself (VERDICT r8 #1): round 8 shipped
   * a bench whose host-calibration job crashed deterministically under ANSI
   * mode before any query was measured — the queries were CI-gated but the
@@ -50,13 +52,31 @@ class BenchSpec extends SparkSpec {
     // headline query at a worst-case-width time and a nonempty isolated_failed
     // list, and hold it under budget with margin for the trailing sbt line.
     val worst = Bench.headline.map(_ -> 9999.999)
-    val isoFailed = worst.take(3).map("\"" + _._1 + "\"")
-      .mkString(""","isolated_failed":[""", ",", "]")
+    val isoFailed = Bench.nameListField("isolated_failed", worst.take(3).map(_._1))
     val line = Bench.contractLine(329999.967, worst, isoFailed, 4, 0.139,
       "/root/testdata/sf0.1")
     assert(line.length <= 1900,
       s"contract line ${line.length} chars > 1900-char budget")
     assert(Bench.parseQueriesJson(line).size == Bench.headline.size)
+  }
+
+  test("a query that throws gets no time and is named as failed") {
+    var boomCalls = 0
+    val boom: (SparkSession, String) => DataFrame = { (_, _) =>
+      boomCalls += 1
+      sys.error("injected failure")
+    }
+    val ok: (SparkSession, String) => DataFrame = (s, _) => s.range(10).toDF()
+    val (timed, failed) = Bench.runAll(spark, sfDir,
+      Seq("q_boom" -> boom, "q_ok" -> ok), reps = 2)
+    assert(timed.map(_._1) == Seq("q_ok"), s"timed: $timed")
+    assert(failed == Seq("q_boom"))
+    assert(boomCalls == 1, "a failed query must not be re-run")
+    val line = Bench.contractLine(timed.map(_._2).sum, timed,
+      Bench.nameListField("failed", failed), 4, 0.1, sfDir)
+    assert(line.contains(""""failed":["q_boom"]"""), line)
+    assert(Bench.parseQueriesJson(line).keySet == Set("q_ok"))
+    assert(Bench.nameListField("failed", Nil) == "")
   }
 
   test("child-JSON parse round-trips a bench output line") {

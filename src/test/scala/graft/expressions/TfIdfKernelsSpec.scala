@@ -65,6 +65,12 @@ class TfIdfKernelsSpec extends SparkSpec {
         FeatureConfig(numTextFeatures = n, useIdf = true, minDocFreq = mdf))
   }
 
+  test("mixed-case extraStopWords: kernel == case-insensitive stock remover") {
+    for (useIdf <- Seq(false, true))
+      compare(advDocs, FeatureConfig(numTextFeatures = 1024, useIdf = useIdf,
+        extraStopWords = Seq("Quick", "ZEBRA")))
+  }
+
   test("fuzz parity against the stock pipeline (counts + idf)") {
     val rnd = new scala.util.Random(13)
     val alphabet = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJ0123456789 ,:;?!._-'\"()\t\n"
