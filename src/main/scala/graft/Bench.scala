@@ -63,13 +63,20 @@ object Bench {
     "q_stream_ann_ingest",   // streaming IVF ingest + search
     "q_bpe_encode")          // BPE tokenizer training + corpus encode
 
-  /** One timed execution, or None when the query throws: a failed query is
-    * never banked as a (fast) time. */
+  // Fixed measurement policy (no env knobs): base passes, extra reps a
+  // query may get from the spread guard, the child JVMs' family size and
+  // timeout, and the cross-round band window.
+  private val defaultReps = 3
+  private val extraReps = 2
+  private val familySize = 4
+  private val childTimeoutSec = 900
+  private val bandRounds = 5
+
+  /** One timed execution with its engine profile, or None when the query
+    * throws: a failed query is never banked as a (fast) time. */
   private def timeOnce(spark: SparkSession, sfDir: String, name: String,
-                       fn: (SparkSession, String) => DataFrame): Option[Double] = {
-    // Label the jobs of each measured query (guide §1.5) so an event-log /
-    // UI reading of a bench run attributes stages to queries by name.
-    spark.sparkContext.setJobDescription(s"bench:$name")
+                       fn: (SparkSession, String) => DataFrame,
+                       metrics: QueryMetrics): Option[(Double, QueryProfile)] = {
     // Untimed GC between measured queries: the r7-widened set interleaves
     // multi-GB-churn queries (winnowing, stream upsert, k-means fits), and
     // carried GC debt was observed inflating UNCHANGED queries 2-4x vs
@@ -77,17 +84,16 @@ object Bench {
     // Collecting outside the timed region measures each operator against a
     // quiesced heap without changing what the engine executes.
     System.gc()
+    metrics.reset()
     val t0 = System.nanoTime()
-    val dt =
-      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        None
-      }
-    // clear the label so post-bench jobs don't inherit the last query's
-    // "bench:" group (ADVICE r13); outside the timed region
-    spark.sparkContext.setJobDescription(null)
-    dt
+    try {
+      fn(spark, sfDir).count()
+      val dt = (System.nanoTime() - t0) / 1e9
+      Some((dt, metrics.snapshot()))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      None
+    }
   }
 
   /** Stall-robust best-of-reps. This VM stalls in minutes-long bursts
@@ -100,45 +106,48 @@ object Bench {
     *     other work — a burst pollutes one pass of many queries, not every
     *     rep of one.
     *  2. SPREAD GUARD: after the base passes, any query whose reps disagree
-    *     by >2× (evidence a burst hit some rep) gets up to
-    *     SPARK_GRAFT_BENCH_EXTRA (default 2) extra reps; extra reps can only
-    *     lower a best-of estimate, never inflate it.
-    * SPARK_GRAFT_BENCH_REPS=1 restores single-shot (no guard).
+    *     by >2× (evidence a burst hit some rep) gets up to `extraReps` extra
+    *     reps; extra reps can only lower a best-of estimate, never inflate it.
+    * reps=1 is single-shot (no guard).
     * A query that fails on any rep is never re-run: it is dropped from the
-    * timed results and named in the second list (work order). */
+    * timed results and named in the second list (work order). The third
+    * result is each timed query's profile from its best rep. */
   private[graft] def runAll(spark: SparkSession, sfDir: String,
                             work: Seq[(String, (SparkSession, String) => DataFrame)],
-                            reps: Int): (Seq[(String, Double)], Seq[String]) = {
+                            reps: Int)
+      : (Seq[(String, Double)], Seq[String], Map[String, QueryProfile]) = {
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
+    val best = scala.collection.mutable.Map.empty[String, QueryProfile]
     val failed = scala.collection.mutable.Set.empty[String]
+    val metrics = QueryMetrics.attach(spark)
     def rep(name: String, fn: (SparkSession, String) => DataFrame,
             label: String): Unit =
-      timeOnce(spark, sfDir, name, fn) match {
-        case Some(dt) =>
+      timeOnce(spark, sfDir, name, fn, metrics) match {
+        case Some((dt, profile)) =>
+          if (times(name).forall(dt < _)) best(name) = profile
           times(name) = times(name) :+ dt
           System.err.println(f"[bench] $label%-6s $name%-22s $dt%8.2f s")
         case None => failed += name
       }
-    for (pass <- 1 to math.max(1, reps); (name, fn) <- work if !failed(name))
-      rep(name, fn, s"pass $pass")
-    if (reps > 1) {
-      val extra = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA", "2").toInt
-      for ((name, fn) <- work) {
+    try {
+      for (pass <- 1 to math.max(1, reps); (name, fn) <- work if !failed(name))
+        rep(name, fn, s"pass $pass")
+      if (reps > 1) for ((name, fn) <- work) {
         def spread = times(name).max / times(name).min
-        var budget = extra
+        var budget = extraReps
         while (budget > 0 && !failed(name) && spread > 2.0) {
           rep(name, fn, f"guard (spread $spread%.1fx)")
           budget -= 1
         }
       }
-    }
+    } finally metrics.detach()
     val timed = work.map(_._1).filterNot(failed).map { name =>
       val dt = times(name).min
       System.err.println(f"[bench] $name%-22s $dt%8.2f s (best of ${times(name).size})")
       name -> dt
     }
-    (timed, work.map(_._1).filter(failed))
+    (timed, work.map(_._1).filter(failed), best.toMap.filter(p => !failed(p._1)))
   }
 
   // ------------------------------------------------------ fresh-JVM phase
@@ -149,25 +158,21 @@ object Bench {
     * in-sweep vs 9.8 s clean-JVM; SCALE.md r7 note), and an in-process
     * System.gc() between queries demonstrably did not cure it. So after the
     * in-set passes, the headline set is re-run in SMALL FAMILIES (consecutive
-    * chunks, default 4 queries) each in its OWN child JVM — same classpath,
-    * same JVM flags, same reps/guard logic (the child is this very main,
-    * gated by SPARK_GRAFT_BENCH_CHILD). Families keep the headline order.
-    * Knobs: SPARK_GRAFT_BENCH_ISOLATE=0 disables; SPARK_GRAFT_BENCH_FAMILY
-    * sizes the chunks; SPARK_GRAFT_BENCH_CHILD_TIMEOUT (sec) bounds a child.
-    * A child failure degrades to the in-set number for its queries — it can
-    * weaken evidence, never block the driver-contract JSON line. */
-  private def runIsolated(names: Seq[String], familySize: Int)
-      : Map[String, Double] = {
+    * chunks of `familySize` queries) each in its OWN child JVM — same
+    * classpath, same JVM flags, same reps/guard logic (the child is this very
+    * main, gated by SPARK_GRAFT_BENCH_CHILD). Families keep the headline
+    * order; `childTimeoutSec` bounds a child. A child failure degrades to
+    * the in-set number for its queries — it can weaken evidence, never
+    * block the driver-contract JSON line. */
+  private def runIsolated(names: Seq[String]): Map[String, Double] = {
     import scala.jdk.CollectionConverters._
     val javaBin = new java.io.File(new java.io.File(
       System.getProperty("java.home"), "bin"), "java").getAbsolutePath
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
     val cp = System.getProperty("java.class.path")
-    val timeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CHILD_TIMEOUT", "900").toInt
     val out = scala.collection.mutable.Map.empty[String, Double]
-    for (family <- names.grouped(math.max(1, familySize))) {
+    for (family <- names.grouped(familySize)) {
       val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
       System.err.println(s"[bench] isolated JVM: ${family.mkString(",")}")
       val buf = new StringBuilder
@@ -178,13 +183,13 @@ object Bench {
         val proc = scala.sys.process.Process(cmd, new java.io.File("."),
           "SPARK_GRAFT_BENCH_CHILD" -> "1",
           "SPARK_GRAFT_BENCH_QUERIES" -> family.mkString(",")).run(logger)
-        val deadline = System.nanoTime() + timeoutSec * 1000000000L
+        val deadline = System.nanoTime() + childTimeoutSec * 1000000000L
         var alive = proc.isAlive()
         while (alive && System.nanoTime() < deadline) {
           Thread.sleep(500); alive = proc.isAlive()
         }
         if (alive) {
-          System.err.println(s"[bench] isolated child TIMED OUT (${timeoutSec}s), killing")
+          System.err.println(s"[bench] isolated child TIMED OUT (${childTimeoutSec}s), killing")
           proc.destroy()
         } else if (proc.exitValue() != 0)
           System.err.println(s"[bench] isolated child exit ${proc.exitValue()}")
@@ -217,12 +222,11 @@ object Bench {
   /** Cross-round noise bands (VERDICT r11 #5): per query, the [min, max]
     * envelope of the canonical seconds across the LAST `bandRounds`
     * committed BENCH_r*.json artifacts in `dir` at the same scale factor
-    * (highest round numbers win; SPARK_GRAFT_BENCH_BAND_ROUNDS overrides
-    * the default 5). Sub-second headline rows swing ±40% with host epoch
-    * while nothing in their code changes (r10→r11: q_cosine_topk 0.78→1.10
-    * matching its r07 value exactly) — the band makes that classifiable at
-    * BANK time instead of leaving every future reader to re-derive it from
-    * round archaeology. WINDOWED, not all-rounds (VERDICT r12 #2): early
+    * (highest round numbers win). Sub-second headline rows swing ±40% with
+    * host epoch while nothing in their code changes (r10→r11: q_cosine_topk
+    * 0.78→1.10 matching its r07 value exactly) — the band makes that
+    * classifiable at BANK time instead of leaving every future reader to
+    * re-derive it from round archaeology. WINDOWED, not all-rounds (VERDICT r12 #2): early
     * rounds were 10-70× slower on several queries (q_triangles r-early max
     * 36.99 vs current 0.51), so an all-rounds envelope made the SLOW side
     * of those bands unreachable — a genuine 5× regression would sit inside
@@ -240,7 +244,6 @@ object Bench {
   private[graft] def loadRoundBands(dir: java.io.File = new java.io.File("."),
                                     sfDir: String = "sf0.1")
       : Map[String, (Double, Double)] = {
-    val bandRounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_BAND_ROUNDS", "5").toInt
     // "0.1" from either "/root/testdata/sf0.1" or the wrapper's bare "0.1"
     def sfNorm(s: String): Option[String] = "[0-9.]+$".r.findFirstIn(s.trim)
     // first occurrence NOT preceded by a backslash (the tail echo is escaped)
@@ -278,7 +281,7 @@ object Bench {
         }
       } catch { case _: Throwable => None }
     }
-    maps.sortBy(-_._1).take(math.max(1, bandRounds)).flatMap(_._2)
+    maps.sortBy(-_._1).take(bandRounds).flatMap(_._2)
       .groupBy(_._1).map { case (k, vs) =>
         val ds = vs.map(_._2)
         k -> (ds.min, ds.max)
@@ -350,6 +353,29 @@ object Bench {
     println(line)
   }
 
+  /** One rep of the host-speed calibration job (r8). BENCH artifacts are
+    * compared ACROSS rounds, but the rounds run in different host epochs —
+    * the r8 A/B (SCALE.md r8 note: the exact r6 commit re-run interleaved
+    * with HEAD on identical data produced identical times, both ~1.7x the r6
+    * artifact) proved the r6->r7 "regression" was host throughput, not
+    * engine code. This fixed pure-CPU, shuffle-free, data-independent job
+    * (xxhash64 fold over range, whole-stage codegen'd, 32 partitions) gives
+    * every artifact a denominator: divide per-query times by calib to
+    * compare engine work across host epochs. ~1-2 s per rep. The fold sums
+    * DOUBLES: summing raw xxhash64 longs over 4e8 uniform values overflows
+    * Long essentially surely, and under Spark 4's default ANSI mode that is
+    * a SparkArithmeticException — exactly the crash that zeroed BENCH_r08
+    * (VERDICT r8 #1). Cast-to-double keeps the measured work (the hash)
+    * identical while making the reduction overflow-proof. Callers choose
+    * their own rep policy. */
+  private[graft] def calibRep(spark: SparkSession): Double = {
+    import org.apache.spark.sql.functions.{col, sum, xxhash64}
+    val t0 = System.nanoTime()
+    spark.range(0L, 400000000L, 1L, 32)
+      .select(sum(xxhash64(col("id")).cast("double"))).collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(
@@ -401,34 +427,14 @@ object Bench {
       System.err.println(s"[bench] warmup failed (continuing): ${e.getMessage}")
     }
     val isChild = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
-    // Host-speed calibration (r8): BENCH artifacts are compared ACROSS
-    // rounds, but the rounds run in different host epochs — the r8 A/B
-    // (SCALE.md r8 note: the exact r6 commit re-run interleaved with HEAD on
-    // identical data produced identical times, both ~1.7x the r6 artifact)
-    // proved the r6->r7 "regression" was host throughput, not engine code.
-    // This fixed pure-CPU, shuffle-free, data-independent reference job
-    // (xxhash64 fold over range, whole-stage codegen'd, 32 partitions) gives
-    // every artifact a denominator: divide per-query times by calib to
-    // compare engine work across host epochs. Best-of-3; ~1-2 s per rep.
-    // The fold sums DOUBLES: summing raw xxhash64 longs over 4e8 uniform
-    // values overflows Long essentially surely, and under Spark 4's default
-    // ANSI mode that is a SparkArithmeticException — exactly the crash that
-    // zeroed BENCH_r08 (VERDICT r8 #1). Cast-to-double keeps the measured
-    // work (the hash) identical while making the reduction overflow-proof,
-    // and the whole block is guarded like warmup: an environment failure in
+    // Best-of-3 calibration, guarded like warmup: an environment failure in
     // calibration must never cost the measured queries or the JSON line
     // (calib degrades to 0.0 = "no denominator this round").
     val calib: Double =
       if (isChild) 0.0
       else try {
         (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          spark.range(0L, 400000000L, 1L, 32)
-            .select(org.apache.spark.sql.functions.sum(
-              org.apache.spark.sql.functions.xxhash64(
-                org.apache.spark.sql.functions.col("id")).cast("double")))
-            .collect()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val dt = calibRep(spark)
           System.err.println(f"[bench] calib rep $dt%.2f s")
           dt
         }.min
@@ -436,7 +442,6 @@ object Bench {
         System.err.println(s"[bench] calibration failed (continuing, calib=0): ${e.getMessage}")
         0.0
       }
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val work = names.flatMap { name =>
       SparkEntry.queries.get(name) match {
         case Some(q) => Some(name -> q)
@@ -445,26 +450,12 @@ object Bench {
           None
       }
     }
-    val (results, failed) = runAll(spark, sfDir, work, reps)
+    val (results, failed, profiles) = runAll(spark, sfDir, work, defaultReps)
     // failed queries carry no time; name them so a consumer can tell a
     // failure from a query that was never in the set
     val failedField = nameListField("failed", failed)
-    val isolate = !isChild &&
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
-    if (!isolate) {
-      val total = results.map(_._2).sum
-      val calibField = if (isChild) "" else f""","calib":$calib%.3f"""
-      if (!isChild && calib > 0.0) {
-        val bands = loadRoundBands(sfDir = sfDir)
-        // NO out-of-band flagging here (ADVICE r12): the bands are built
-        // from prior rounds' CANONICAL values (min of in-set and fresh-JVM
-        // isolated), and warm-JVM in-set timings run systematically above
-        // them — a dev-mode run would emit spurious flags and bank
-        // misleading out_of_band lists. Bands ride along as context only.
-        writeDetail(
-          s"""{"queries_in_set":${jsonMap(results)},"queries_normalized":${jsonMap(results.map { case (k, v) => k -> v / calib })},"bands":${jsonBands(bands, results.map(_._1))},"out_of_band":"skipped: in-set timings are not comparable to isolated-round bands"$failedField,"calib":$calib,"sf":"$sfDir"}""")
-      }
-      printContract(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(results)}%s$failedField%s$calibField%s,"sf":"$sfDir%s"}""")
+    if (isChild) {
+      printContract(f"""{"metric":"total","value":${results.map(_._2).sum}%.3f,"unit":"sec","queries":${jsonMap(results)}%s$failedField%s,"sf":"$sfDir%s"}""")
       spark.stop()
       return
     }
@@ -473,8 +464,7 @@ object Bench {
     // in-set and isolated — both are times the engine actually achieved; the
     // raw maps are emitted alongside so a regression can be separated from
     // measurement-environment drift without re-running anything.
-    val familySize = sys.env.getOrElse("SPARK_GRAFT_BENCH_FAMILY", "4").toInt
-    val iso = runIsolated(results.map(_._1), familySize)
+    val iso = runIsolated(results.map(_._1))
     val canonical = results.map { case (k, v) =>
       k -> math.min(v, iso.getOrElse(k, v))
     }
@@ -498,8 +488,11 @@ object Bench {
     val oob = flagOutOfBand(canonical, bands)
     val oobField = oob.map("\"" + _ + "\"")
       .mkString(""","out_of_band":[""", ",", "]")
+    // engine profiles of the in-set best reps (children report times only)
+    val profilesJson = results.flatMap { case (k, _) =>
+      profiles.get(k).map("\"" + k + "\":" + _.json) }.mkString("{", ",", "}")
     writeDetail(
-      s"""{"queries":${jsonMap(canonical)},"queries_in_set":${jsonMap(results)},"queries_isolated":${jsonMap(isoSeq)}$isoFailedField$failedField$normField,"bands":${jsonBands(bands, canonical.map(_._1))}$oobField,"isolation":"fresh-jvm-family-$familySize","calib":$calib,"sf":"$sfDir"}""")
+      s"""{"queries":${jsonMap(canonical)},"queries_in_set":${jsonMap(results)},"queries_isolated":${jsonMap(isoSeq)}$isoFailedField$failedField$normField,"bands":${jsonBands(bands, canonical.map(_._1))}$oobField,"profiles":$profilesJson,"isolation":"fresh-jvm-family-$familySize","calib":$calib,"sf":"$sfDir"}""")
     printContract(contractLine(total, canonical, isoFailedField + failedField,
       familySize, calib, sfDir))
     spark.stop()

@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
-    val b = SparkSession.builder()
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -35,17 +35,6 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
       .config("spark.ui.enabled", "false")
-    // Profiling knob (guide §1/§7): SPARK_GRAFT_EVENTLOG_DIR=<dir> turns on
-    // the standard Spark event log so a bench/verify run can be attributed
-    // stage by stage offline (task time, shuffle bytes, spill, GC) without
-    // the live UI. Off by default — measurement infrastructure only, no
-    // effect on any query plan.
-    sys.env.get("SPARK_GRAFT_EVENTLOG_DIR").fold(b) { dir =>
-      new java.io.File(dir).mkdirs()
-      b.config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", dir)
-    }
-  }
 
   /** Apply engine-required configs to an existing session (e.g. one created by
     * the driver) — runtime confs only. */

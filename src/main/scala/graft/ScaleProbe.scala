@@ -148,31 +148,23 @@ object ScaleProbe {
         // unmeasured warmup rep: the probe runs calib on a COLD session
         // (Bench warms the whole stack first), and first-touch codegen/JIT
         // otherwise inflates the stamp ~2× — measured 0.307 vs the warm 0.138
-        def rep(): Double = {
-          val t0 = System.nanoTime()
-          spark.range(0L, 400000000L, 1L, 32)
-            .select(org.apache.spark.sql.functions.sum(
-              org.apache.spark.sql.functions.xxhash64(
-                org.apache.spark.sql.functions.col("id")).cast("double")))
-            .collect()
-          (System.nanoTime() - t0) / 1e9
-        }
-        rep()
-        (1 to 2).map(_ => rep()).min
+        Bench.calibRep(spark)
+        (1 to 2).map(_ => Bench.calibRep(spark)).min
       }
       catch { case e: Throwable =>
         System.err.println(s"[probe] calib failed (rows stamped 0): ${e.getMessage}")
         0.0
       }
     System.err.println(f"[probe] host calib $probeCalib%.3f s")
-    val ckpt = scala.collection.mutable.Map.empty[(String, Int), (Double, Long, ProbeMetrics)]
+    val ckpt = scala.collection.mutable.Map.empty[(String, Int), (Double, Long, QueryProfile)]
     val rowEpoch = scala.collection.mutable.Map.empty[(String, Int), String]
     if (ckptFile.exists()) {
       val re = """\{"label":"(.*?)","f":(\d+),"sec":([0-9.eE+\-]+),"rows":(\d+),"spill":(\d+),"shuffle":(\d+),"gc":(\d+)(?:,"commit":"([^"]*)","dir":"([^"]*)")?(?:,"calib":[0-9.eE+\-]+)?\}""".r
       scala.io.Source.fromFile(ckptFile, "UTF-8").getLines().foreach {
         case re(l, f, s, r, sp, sh, g, commit, _) =>
           val k = (l, f.toInt)
-          ckpt(k) = (s.toDouble, r.toLong, ProbeMetrics(sp.toLong, sh.toLong, g.toLong))
+          ckpt(k) = (s.toDouble, r.toLong, QueryProfile(spillBytes = sp.toLong,
+            shuffleWriteBytes = sh.toLong, gcMillis = g.toLong))
           rowEpoch(k) = Option(commit).getOrElse("pre-r9")
         case _ => ()
       }
@@ -187,9 +179,9 @@ object ScaleProbe {
     // the gaps. NaN is the in-memory skip sentinel — it is never banked.
     val deadline: Long = sys.env.get("SPARK_GRAFT_PROBE_DEADLINE")
       .map(_.toLong).getOrElse(Long.MaxValue)
-    val skipped = (Double.NaN, 0L, ProbeMetrics(0L, 0L, 0L))
+    val skipped = (Double.NaN, 0L, QueryProfile())
     def checkpointed(label: String, f: Int)(
-        compute: => (Double, Long, ProbeMetrics)): (Double, Long, ProbeMetrics) =
+        compute: => (Double, Long, QueryProfile)): (Double, Long, QueryProfile) =
       ckpt.get((label, f)) match {
         case Some(v) => v
         case None if System.currentTimeMillis() / 1000 > deadline =>
@@ -215,10 +207,8 @@ object ScaleProbe {
       }
 
     // Task-metric listener: per-run sums of spill/shuffle/GC, to attribute a
-    // superlinear segment to spill (memory pressure) vs output volume. The
-    // probe runs queries serially, so a global accumulator is race-free.
-    val metrics = new ProbeMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    // superlinear segment to spill (memory pressure) vs output volume.
+    val metrics = QueryMetrics.attach(spark)
 
     // toRdd.count(), NOT Dataset.count(): count() plants an Aggregate on top
     // and Catalyst then prunes every computed column (and drops sorts), so a
@@ -226,15 +216,12 @@ object ScaleProbe {
     // the plan's actual output rows with all expressions evaluated.
     // Returns (best-of-3 seconds, output rows, metrics of the best rep).
     def timeDf(mk: String => org.apache.spark.sql.DataFrame,
-               dir: String): (Double, Long, ProbeMetrics) =
+               dir: String): (Double, Long, QueryProfile) =
       (1 to 3).map { _ =>
         metrics.reset()
         val t0 = System.nanoTime()
         val rows = mk(dir).queryExecution.toRdd.count()
         val dt = (System.nanoTime() - t0) / 1e9
-        // listener bus is async and has no public flush — a short drain pause
-        // is enough for the per-task metric events of a finished job
-        Thread.sleep(300)
         (dt, rows, metrics.snapshot())
       }.minBy(_._1)
     def rowDone(q: String, factors: Seq[Int]): Boolean =
@@ -490,7 +477,7 @@ object ScaleProbe {
     // spill/shuffle checkpoint fields (the mmBytes convention).
     val recallKey = "q_ann_recall(pq m8k16 hash-fit)"
     val recallFactors = Seq(1, 10)
-    val recallRows: Seq[(String, Map[Int, (Double, Long, ProbeMetrics)])] =
+    val recallRows: Seq[(String, Map[Int, (Double, Long, QueryProfile)])] =
       if (only.forall(_.exists(e => recallKey.startsWith(e)))) {
         def recallDir(f: Int) =
           if (f == 1) base else s"${work.getPath}/recall_x$f"
@@ -541,7 +528,8 @@ object ScaleProbe {
               .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
             val hits = exactTop.map { case (q, ex) =>
               pqTop.getOrElse(q, Set.empty).intersect(ex).size.toLong }.sum
-            (sec, hits, ProbeMetrics(corpusN, nProbes * 10L, 0L))
+            (sec, hits, QueryProfile(spillBytes = corpusN,
+              shuffleWriteBytes = nProbes * 10L))
           }
         }.toMap)
       } else Nil
@@ -610,7 +598,7 @@ object ScaleProbe {
           (lit(20) * (gaps + 1) + within).cast("long").as("covered_tokens"))
       })
     val tailFactors = Seq(10, 50, 100)
-    val tailRows: Seq[(String, Map[Int, (Double, Long, ProbeMetrics)])] =
+    val tailRows: Seq[(String, Map[Int, (Double, Long, QueryProfile)])] =
       tailVariants
         .filter { case (label, _) =>
           only.forall(o => o.exists(q => label.startsWith(q))) }
@@ -632,7 +620,7 @@ object ScaleProbe {
     // actually learned.
     val bpeMergeCounts = Seq(32, 128, 512)
     val runBpeLadder = only.forall(_.contains("q_bpe_merge_ladder"))
-    val bpeRows: Seq[(String, Map[Int, (Double, Long, ProbeMetrics)])] =
+    val bpeRows: Seq[(String, Map[Int, (Double, Long, QueryProfile)])] =
       if (runBpeLadder) {
         val allBanked = (for {
           v <- Seq("learn", "learnScalable"); m <- bpeMergeCounts
@@ -677,7 +665,6 @@ object ScaleProbe {
                     val t0 = System.nanoTime()
                     val learned = train(words, m).size.toLong
                     val dt = (System.nanoTime() - t0) / 1e9
-                    Thread.sleep(300)
                     (dt, learned, metrics.snapshot())
                   }.minBy(_._1)
                 }
@@ -761,7 +748,7 @@ object ScaleProbe {
           val r = jpegDecodeDf(100)
             .agg(sum("n_px").cast("long"), sum("n_bytes").cast("long"))
             .collect()(0)
-          (0.0, r.getLong(0), ProbeMetrics(r.getLong(1), 0L, 0L))
+          (0.0, r.getLong(0), QueryProfile(spillBytes = r.getLong(1)))
         }
         Some((v._2, v._3.spillBytes))
       } else None
@@ -797,7 +784,7 @@ object ScaleProbe {
     // spill/shuffle columns against the rows column. Every rep builds its
     // own count-featurization.
     val budgetKey = "q_candidates_budget(all-LSH)"
-    val budgetRows: Seq[(String, Map[Int, (Double, Long, ProbeMetrics)])] =
+    val budgetRows: Seq[(String, Map[Int, (Double, Long, QueryProfile)])] =
       if (only.forall(_.exists(e => budgetKey.startsWith(e))))
         Seq(budgetKey -> dupHeavyFactors.map { f =>
           f -> checkpointed(budgetKey, f)(
@@ -1119,27 +1106,4 @@ object ScaleProbe {
     println(s"wrote $outMd")
     spark.stop()
   }
-}
-
-/** Immutable snapshot of the per-run task-metric sums. */
-final case class ProbeMetrics(spillBytes: Long, shuffleWriteBytes: Long,
-                              gcMillis: Long)
-
-/** Sums task metrics between reset() calls — the probe runs queries serially
-  * on one SparkContext, so a single global accumulator is race-free. */
-final class ProbeMetricsListener extends org.apache.spark.scheduler.SparkListener {
-  private val spill = new java.util.concurrent.atomic.AtomicLong
-  private val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-  private val gc = new java.util.concurrent.atomic.AtomicLong
-  override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-    val m = e.taskMetrics
-    if (m != null) {
-      spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      gc.addAndGet(m.jvmGCTime)
-    }
-  }
-  def reset(): Unit = { spill.set(0); shuffleWrite.set(0); gc.set(0) }
-  def snapshot(): ProbeMetrics =
-    ProbeMetrics(spill.get, shuffleWrite.get, gc.get)
 }

@@ -68,13 +68,28 @@ case class CleanTokenBuckets(child: Expression, numFeatures: Int,
 
 object CleanTokenBuckets {
 
-  /** One linear scan; see the class doc for the exact pipeline replayed.
-    * Static so whole-stage-generated Java calls it directly — the body is a
-    * tight char loop, not expression-tree work, so a method call costs
-    * nothing and keeps the generated method small. */
+  /** The distinct sorted buckets of the shared [[scan]]. */
   def eval(s: String, numFeatures: Int,
            stopSet: java.util.HashSet[String]): Array[Long] = {
-    val seen = new Array[Boolean](numFeatures)
+    val counts = new Array[Int](numFeatures)
+    val out = new Array[Long](scan(s, stopSet, counts))
+    var b = 0
+    var o = 0
+    while (o < out.length) {
+      if (counts(b) > 0) { out(o) = b.toLong; o += 1 }
+      b += 1
+    }
+    out
+  }
+
+  /** One linear scan (the pipeline in the class doc) that adds each kept
+    * token's count to `counts(bucket)`, `counts.length` buckets, and returns
+    * the number of distinct buckets hit. Static so whole-stage-generated
+    * Java calls it directly — the body is a tight char loop, not
+    * expression-tree work, so a method call costs nothing and keeps the
+    * generated method small. Shared with [[CleanTokenTf]]. */
+  def scan(s: String, stopSet: java.util.HashSet[String],
+           counts: Array[Int]): Int = {
     var nSeen = 0
     val sb = new java.lang.StringBuilder(24)
     var i = 0
@@ -91,8 +106,9 @@ object CleanTokenBuckets {
           if (sb.length >= 3) { // \b\w{1,2}\b deleted 1-2 char runs
             val tok = sb.toString
             if (!stopSet.contains(tok)) {
-              val b = graft.text.Murmur3.bucket(tok, numFeatures, 42)
-              if (!seen(b)) { seen(b) = true; nSeen += 1 }
+              val b = graft.text.Murmur3.bucket(tok, counts.length, 42)
+              if (counts(b) == 0) nSeen += 1
+              counts(b) += 1
             }
           }
           if (sb.length > 0) sb.setLength(0)
@@ -100,13 +116,6 @@ object CleanTokenBuckets {
       }
       i += 1
     }
-    val out = new Array[Long](nSeen)
-    var b = 0
-    var o = 0
-    while (o < nSeen) {
-      if (seen(b)) { out(o) = b.toLong; o += 1 }
-      b += 1
-    }
-    out
+    nSeen
   }
 }

@@ -67,37 +67,12 @@ case class CleanTokenTf(child: Expression, numFeatures: Int,
 
 object CleanTokenTf {
 
-  /** One linear scan (the CleanTokenBuckets loop with counts); returns the
-    * serialized sparse VectorUDT row (type=0, size, indices, values). */
+  /** The [[CleanTokenBuckets.scan]] counts as the serialized sparse
+    * VectorUDT row (type=0, size, indices, values). */
   def eval(s: String, numFeatures: Int,
            stopSet: java.util.HashSet[String]): InternalRow = {
     val counts = new Array[Int](numFeatures)
-    var nSeen = 0
-    val sb = new java.lang.StringBuilder(24)
-    var i = 0
-    val n = s.length
-    while (i <= n) {
-      val c = if (i < n) s.charAt(i) else ' ' // virtual terminator flushes
-      val deleted = (c >= '0' && c <= '9') || c == ',' || c == ':' ||
-        c == ';' || c == '?' || c == '!'
-      if (!deleted) {
-        // Java regex \w (ASCII): [a-zA-Z0-9_] — digits unreachable here
-        val word = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || c == '_'
-        if (word) sb.append(c)
-        else {
-          if (sb.length >= 3) { // \b\w{1,2}\b deleted 1-2 char runs
-            val tok = sb.toString
-            if (!stopSet.contains(tok)) {
-              val b = graft.text.Murmur3.bucket(tok, numFeatures, 42)
-              if (counts(b) == 0) nSeen += 1
-              counts(b) += 1
-            }
-          }
-          if (sb.length > 0) sb.setLength(0)
-        }
-      }
-      i += 1
-    }
+    val nSeen = CleanTokenBuckets.scan(s, stopSet, counts)
     val idx = new Array[Int](nSeen)
     val vals = new Array[Double](nSeen)
     var b = 0

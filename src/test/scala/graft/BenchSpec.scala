@@ -67,10 +67,12 @@ class BenchSpec extends SparkSpec {
       sys.error("injected failure")
     }
     val ok: (SparkSession, String) => DataFrame = (s, _) => s.range(10).toDF()
-    val (timed, failed) = Bench.runAll(spark, sfDir,
+    val (timed, failed, profiles) = Bench.runAll(spark, sfDir,
       Seq("q_boom" -> boom, "q_ok" -> ok), reps = 2)
     assert(timed.map(_._1) == Seq("q_ok"), s"timed: $timed")
     assert(failed == Seq("q_boom"))
+    assert(profiles.keySet == Set("q_ok") && profiles("q_ok").tasks > 0,
+      s"profiles: $profiles")
     assert(boomCalls == 1, "a failed query must not be re-run")
     val line = Bench.contractLine(timed.map(_._2).sum, timed,
       Bench.nameListField("failed", failed), 4, 0.1, sfDir)

@@ -1,0 +1,70 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit}
+
+/** The per-query listener Bench and ScaleProbe share: the reset/snapshot
+  * window holds exactly the measured query's jobs, streaming micro-batches
+  * included, and the bus drain makes repeated readings exact. */
+class QueryMetricsSpec extends SparkSpec {
+
+  private def measure(metrics: QueryMetrics)(run: => Unit): QueryProfile = {
+    metrics.reset()
+    run
+    metrics.snapshot()
+  }
+
+  private def withMetrics[T](f: QueryMetrics => T): T = {
+    val metrics = QueryMetrics.attach(spark)
+    try f(metrics) finally metrics.detach()
+  }
+
+  private def shuffled: DataFrame =
+    spark.range(0L, 20000L, 1L, 4).groupBy((col("id") % 7).as("k"))
+      .agg(count(lit(1)).as("n"))
+
+  test("a shuffling query reports its stages, tasks and shuffle bytes") {
+    withMetrics { metrics =>
+      val p = measure(metrics)(shuffled.collect())
+      assert(p.stages >= 2 && p.tasks > 0 && p.shuffleWriteBytes > 0, p)
+      assert(p.topStages.nonEmpty && p.topStages.size <= 3, p)
+      assert(p.json.startsWith("{\"stages\":"), p.json)
+    }
+  }
+
+  test("a second measurement does not include the first") {
+    withMetrics { metrics =>
+      val first = measure(metrics)(shuffled.collect())
+      val second = measure(metrics)(spark.range(0L, 100L, 1L, 2).collect())
+      assert(second.tasks < first.tasks && second.shuffleWriteBytes == 0L,
+        s"first $first, second $second")
+    }
+  }
+
+  test("a streaming replay's micro-batch jobs are counted with no job label") {
+    val session = spark
+    import session.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(java.sql.Timestamp, Double)]
+    ms.addData((java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
+      (java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), 2.0))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+    withMetrics { metrics =>
+      val p = measure(metrics) {
+        graft.streaming.Streaming.replayToTable(
+          graft.streaming.Streaming.tumblingAgg(
+            ms.toDF().toDF("ts", "value").withColumn("event_type", lit("w"))),
+          "query_metrics_stream")
+      }
+      assert(p.tasks > 0, p)
+    }
+  }
+
+  test("repeated measurements of one query agree on the task count") {
+    withMetrics { metrics =>
+      val tasks = (1 to 10).map(_ => measure(metrics)(shuffled.collect()).tasks)
+      assert(tasks.distinct.size == 1 && tasks.head > 0, tasks)
+    }
+  }
+}
