@@ -7,6 +7,7 @@ import graft.io.Tables
 import graft.post.Post
 import graft.similarity.Kernels
 import graft.text.{FeatureConfig, FeaturePipeline}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end bill-match pipeline — the engine's single-command
@@ -33,13 +34,18 @@ import org.apache.spark.sql.functions._
 object BillMatch {
 
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local()
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** The whole pipeline on a caller-owned session, which stays open. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir   = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val outDir  = args.lift(1).getOrElse("/tmp/billmatch_out")
     val measure  = args.lift(2).getOrElse("cosine")
     val k        = args.lift(3).map(_.toInt).getOrElse(8)
     val topK     = args.lift(4).map(_.toInt).getOrElse(100)
     val blocking = args.lift(5).getOrElse("kmeans")
-    val spark = GraftSession.local()
 
     // corpus spread across partitions (single-file testdata artifact)
     val docs = Tables.spread(Tables.documents(spark, sfDir))
@@ -108,6 +114,5 @@ object BillMatch {
     println(s"[billmatch] docs=$nDocs pairs=$nPairs blocking=$blocking measure=$measure k=$k")
     topRows.foreach(r => println(s"[billmatch] top: $r"))
     println(s"[billmatch] wrote $outDir/pairs.parquet and $outDir/graph.parquet")
-    spark.stop()
   }
 }

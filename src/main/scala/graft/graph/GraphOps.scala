@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.graphx.lib.ShortestPaths
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -12,10 +13,12 @@ import org.apache.spark.sql.functions._
   * the GraphFrames jar is unavailable offline, so:
   *  - GraphX (shipped with Spark) powers triangle count and shortest paths —
   *    both integer-valued, so results are engine-exact;
-  *  - PageRank is ALSO provided as a pure-DataFrame iterative implementation
-  *    ([[pageRankDF]]) because (a) it is oracle-checkable and (b) at 100 TB a
-  *    join-based rank iteration lets Catalyst/AQE handle partitioning and skew,
-  *    where GraphX pins its own RDD partitioning.
+  *  - the PageRank family ([[pageRankDF]], [[pageRankWeightedDF]],
+  *    [[personalizedPageRankDF]]) runs on one co-partitioned RDD superstep
+  *    kernel with one shuffle per iteration and partition-count-independent
+  *    sums, so it stays oracle-checkable. It replaced DataFrame loops whose
+  *    one plan grew numIter joins deep, which AQE ran stage by stage,
+  *    re-planning the rest of the plan after each.
   *
   * All operators treat the graph as UNDIRECTED (the reference's similarity
   * graph is undirected): edges are canonicalized src<dst then mirrored
@@ -99,88 +102,89 @@ object GraphOps {
     stronglyConnectedComponents(directed, math.max(1L, n).min(Int.MaxValue).toInt)
   }
 
-  /** G2: PageRank as an iterative DataFrame computation, semantics identical
-    * to GraphX staticPageRank: rank₀ = 1.0; rankₖ₊₁ = reset + (1−reset)·Σ
-    * rankₖ(neighbor)/deg(neighbor). Isolated vertices keep rank = reset…1.0
-    * per GraphX convention (they receive no contributions).
+  /** G2: PageRank, semantics identical to GraphX staticPageRank: rank₀ = 1.0;
+    * rankₖ₊₁ = reset + (1−reset)·Σ rankₖ(neighbor)/deg(neighbor). Isolated
+    * vertices keep rank = reset…1.0 per GraphX convention (they receive no
+    * contributions).
     *
-    * Scale: each iteration is one shuffled join rank⋈edges + one groupBy —
-    * both keyed on vertex id, so AQE reuses the partitioning; the degree table
-    * is computed once and cached. On LONG runs (numIter > 16) the rank frame
-    * is localCheckpoint-ed every 8 iterations: the logical plan otherwise
-    * grows linearly with numIter (analysis/optimization cost explodes, and a
-    * failure would replay the whole chain). Short runs skip it — the eager
-    * materialization costs more than the lineage it trims (measured 4× on
-    * the 10-iteration gate query).
-    */
+    * Scale: one superstep of [[rankKernel]] per iteration, so a run costs the
+    * input's own stages, the adjacency shuffle and the result stage plus one
+    * stage per iteration. The DataFrame loop it replaced built one plan
+    * numIter joins deep; AQE ran it as 33 one-task stages at numIter = 10 and
+    * re-planned the remaining plan after each (BillMatch's graph step on a
+    * 4-core host: 12.3 s over 33 stages, now 1.7 s over 14). */
   def pageRankDF(canonical: DataFrame, numIter: Int,
-                 resetProb: Double = 0.15): DataFrame = {
-    val sym = symmetric(canonical)
-    val vertices = sym.select(col("src").as("vertex")).distinct()
-    // r13 (guide §2.4): attach the degree to each edge ONCE and cache THAT —
-    // the loop previously joined the degree table every iteration (numIter
-    // extra joins of an edge-scale frame; GraphX's edge-attached degree is
-    // the same shape). rank/deg arithmetic unchanged.
-    val degrees = sym.groupBy(col("src").as("vertex"))
-      .agg(count(lit(1)).as("deg"))
-    val edgesWithDeg = sym
-      .join(degrees.withColumnRenamed("vertex", "src"), "src")
-      .select(col("src"), col("dst"), col("deg")).cache()
-
-    var ranks = vertices.withColumn("rank", lit(1.0))
-    for (i <- 0 until numIter) {
-      val contribs = edgesWithDeg
-        .join(ranks.withColumnRenamed("vertex", "src"), "src")
-        .select(col("dst").as("vertex"), (col("rank") / col("deg")).as("contrib"))
-        .groupBy("vertex").agg(sum("contrib").as("msum"))
-      ranks = vertices
-        .join(contribs, Seq("vertex"), "left")
-        .select(col("vertex"),
-          (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("msum"), lit(0.0)))
-            .as("rank"))
-      if (numIter > 16 && (i + 1) % 8 == 0 && i + 1 < numIter)
-        ranks = ranks.localCheckpoint()
-    }
-    ranks
-  }
+                 resetProb: Double = 0.15): DataFrame =
+    rankKernel(symmetric(canonical).withColumn("weight", lit(1.0)), numIter,
+      resetProb, init = _ => 1.0, teleport = _ => resetProb)
 
   /** WEIGHTED PageRank over (src, dst, weight) canonical undirected edges —
     * the reference's normalized-edge-weight mode (GraphUtils.scala:24-31
     * passes similarity weights to PageRank): each vertex distributes its rank
     * proportionally to incident edge weight, i.e. contrib(u→v) =
-    * rank(u)·w(u,v)/Σw(u,·). Same iteration shape (and scale behavior) as
+    * rank(u)·w(u,v)/Σw(u,·). Same kernel (and scale behavior) as
     * [[pageRankDF]]; weighted degree replaces the count degree. Unit weights
     * reduce it to the unweighted form. */
   def pageRankWeightedDF(edges: DataFrame, numIter: Int,
-                         resetProb: Double = 0.15): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"), col("weight"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("weight")))
-    val vertices = sym.select(col("src").as("vertex")).distinct()
-    // degree attached to edges once, as in [[pageRankDF]] (r13)
-    val wdeg = sym.groupBy(col("src").as("vertex"))
-      .agg(sum("weight").as("wdeg"))
-    val edgesWithDeg = sym
-      .join(wdeg.withColumnRenamed("vertex", "src"), "src")
-      .select(col("src"), col("dst"), col("weight"), col("wdeg")).cache()
+                         resetProb: Double = 0.15): DataFrame =
+    rankKernel(edges.select(col("src"), col("dst"), col("weight"))
+        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"),
+          col("weight"))),
+      numIter, resetProb, init = _ => 1.0, teleport = _ => resetProb)
 
-    var ranks = vertices.withColumn("rank", lit(1.0))
-    for (i <- 0 until numIter) {
-      val contribs = edgesWithDeg
-        .join(ranks.withColumnRenamed("vertex", "src"), "src")
-        .select(col("dst").as("vertex"),
-          (col("rank") * col("weight") / col("wdeg")).as("contrib"))
-        .groupBy("vertex").agg(sum("contrib").as("msum"))
-      ranks = vertices
-        .join(contribs, Seq("vertex"), "left")
-        .select(col("vertex"),
-          (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("msum"), lit(0.0)))
-            .as("rank"))
-      if (numIter > 16 && (i + 1) % 8 == 0 && i + 1 < numIter)
-        ranks = ranks.localCheckpoint()
+  /** The superstep kernel of the PageRank family. `sym` holds both directions
+    * of every edge as (src, dst, weight). Vertex v starts at `init(v)`, and
+    * each iteration sets rank(v) = teleport(v) + (1−resetProb)·Σ
+    * rank(u)·w(u,v)/wdeg(u) over its in-edges, with wdeg(u) = Σ w(u,·).
+    *
+    * The adjacency (src → wdeg, out-edges) and the ranks share one
+    * HashPartitioner sized by spark.sql.shuffle.partitions, so an iteration
+    * shuffles its contributions to their destinations once and joins
+    * partition by partition. Each iteration's ranks are rebuilt from the
+    * edge shuffle's and the contribution shuffle's outputs, so lineage never
+    * chains ranks across iterations: nothing is cached or checkpointed, and
+    * a lost block is recomputed from shuffle files. Per-partition hash maps
+    * stand in for `join`/`cogroup`, whose spillable maps cost 4× the task
+    * CPU (q_pagerank at sf0.1 on 4 cores). A vertex sums its contributions in ascending (source,
+    * value) order and its out-weights in ascending (destination, weight)
+    * order, so the ranks are bit-identical at any partition count. */
+  private def rankKernel(sym: DataFrame, numIter: Int, resetProb: Double,
+                         init: Long => Double, teleport: Long => Double): DataFrame = {
+    val spark = sym.sparkSession
+    import spark.implicits._
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val links = sym
+      .select(col("src").cast("long"), col("dst").cast("long"), col("weight").cast("double"))
+      .rdd.map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
+      .partitionBy(part)
+      .mapPartitions(edges => sortedGroups(edges).iterator.map { case (src, out) =>
+        (src, (sumInOrder(out), out)) }, preservesPartitioning = true)
+    val damp = 1.0 - resetProb
+    var ranks = links.mapPartitions(_.map { case (v, _) => (v, init(v)) },
+      preservesPartitioning = true)
+    for (_ <- 0 until numIter) {
+      val contribs = links.zipPartitions(ranks) { (adjacency, vertexRanks) =>
+        val rank = vertexRanks.toMap
+        adjacency.flatMap { case (src, (wdeg, out)) =>
+          out.iterator.map { case (dst, w) => (dst, (src, rank(src) * w / wdeg)) }
+        }
+      }.partitionBy(part)
+      ranks = links.zipPartitions(contribs, preservesPartitioning = true) { (adjacency, in) =>
+        val msum = sortedGroups(in).map { case (v, c) => v -> sumInOrder(c) }
+        adjacency.map { case (v, _) => (v, teleport(v) + damp * msum.getOrElse(v, 0.0)) }
+      }
     }
-    ranks
+    ranks.toDF("vertex", "rank")
   }
+
+  /** Pairs grouped by key, each group in ascending (id, value) order. */
+  private def sortedGroups(it: Iterator[(Long, (Long, Double))]): Map[Long, Array[(Long, Double)]] =
+    it.toArray.groupMap(_._1)(_._2).map { case (k, group) =>
+      k -> group.sorted(Ordering.Tuple2(Ordering.Long, Ordering.Double.TotalOrdering))
+    }
+
+  private def sumInOrder(group: Array[(Long, Double)]): Double =
+    group.foldLeft(0.0)(_ + _._2)
 
   /** DuckDB oracle for [[pageRankWeightedDF]]; `edgesSql` must yield canonical
     * (src, dst, weight) rows. Same unrolled-CTE shape as the unweighted
@@ -213,34 +217,15 @@ object GraphOps {
     * set (uniformly across it) instead of all vertices — the "similar to
     * THESE bills" ranking over the similarity graph (the probe-bill queries
     * of reference docs/example1.md:13-17 as a whole-graph operator). Same
-    * iteration shape as [[pageRankDF]]; rank starts on the sources and
-    * diffuses along edges, so scores are proximity to the source set. */
+    * kernel as [[pageRankDF]]; rank starts on the sources and diffuses along
+    * edges, so scores are proximity to the source set. */
   def personalizedPageRankDF(canonical: DataFrame, sources: Seq[Long],
                              numIter: Int, resetProb: Double = 0.15): DataFrame = {
-    val sym = symmetric(canonical)
-    val vertices = sym.select(col("src").as("vertex")).distinct()
-    val degrees = sym.groupBy(col("src").as("vertex"))
-      .agg(count(lit(1)).as("deg")).cache()
-    val inSrc = col("vertex").isin(sources: _*)
+    val inSrc = sources.toSet
     val share = 1.0 / sources.size
-
-    var ranks = vertices.withColumn("rank",
-      when(inSrc, lit(share)).otherwise(lit(0.0)))
-    for (i <- 0 until numIter) {
-      val contribs = sym
-        .join(ranks.withColumnRenamed("vertex", "src"), "src")
-        .join(degrees.withColumnRenamed("vertex", "src"), "src")
-        .select(col("dst").as("vertex"), (col("rank") / col("deg")).as("contrib"))
-        .groupBy("vertex").agg(sum("contrib").as("msum"))
-      ranks = vertices
-        .join(contribs, Seq("vertex"), "left")
-        .select(col("vertex"),
-          (when(inSrc, lit(resetProb * share)).otherwise(lit(0.0)) +
-            lit(1.0 - resetProb) * coalesce(col("msum"), lit(0.0))).as("rank"))
-      if (numIter > 16 && (i + 1) % 8 == 0 && i + 1 < numIter)
-        ranks = ranks.localCheckpoint()
-    }
-    ranks
+    rankKernel(symmetric(canonical).withColumn("weight", lit(1.0)), numIter,
+      resetProb, init = v => if (inSrc(v)) share else 0.0,
+      teleport = v => if (inSrc(v)) resetProb * share else 0.0)
   }
 
   /** DuckDB oracle for [[personalizedPageRankDF]] — the [[pageRankOracleSql]]
@@ -313,8 +298,9 @@ object GraphOps {
     * Scale: per iteration, one join labels⋈edges + one two-key groupBy + one
     * per-vertex argmax AGGREGATION (min(struct(-c, label)) — partial
     * map-side, no per-vertex sort) — all keyed on vertex id (AQE reuses the
-    * partitioning); same localCheckpoint policy as [[pageRankDF]] for long
-    * runs. */
+    * partitioning). On long runs (numIter > 16) the labels are
+    * localCheckpoint-ed every 8 iterations: the logical plan otherwise grows
+    * linearly with numIter. */
   def labelPropagationDF(canonical: DataFrame, numIter: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sym = symmetric(canonical)
@@ -460,10 +446,10 @@ object GraphOps {
     * the arithmetic — an L2 norm would add a sqrt-of-sum whose rounding
     * differences compound across iterations.
     *
-    * Scale: per iteration two shuffled join+aggs keyed on vertex id (the same
-    * exchange reuse as [[pageRankDF]]) plus two single-row max aggregates that
-    * broadcast back — no driver collect. Unlike pageRankDF, the state is
-    * localCheckpoint-ed EVERY iteration: each normalization references its
+    * Scale: per iteration two shuffled join+aggs keyed on vertex id (AQE
+    * reuses the partitioning) plus two single-row max aggregates that
+    * broadcast back — no driver collect. The state is localCheckpoint-ed
+    * EVERY iteration: each normalization references its
     * raw-score frame twice (score and max-of-score), so without truncation
     * the logical plan QUADRUPLES per iteration — 4^k subtrees hang Catalyst
     * analysis long before execution. One eager materialization of the
@@ -473,8 +459,7 @@ object GraphOps {
     // cached (r13): the loop reads the edge frame TWICE per iteration (hub
     // contribution join + auth contribution join) — 2·numIter recomputes of
     // whatever lineage produced the edges (q_hits derives them from a
-    // customer self-join) without the cache; same caller-owned cache
-    // convention as [[pageRankDF]]'s degree-attached edges
+    // customer self-join) without the cache
     val edges = directed.select(col("src"), col("dst")).cache()
     val vertices = edges.select(col("src").as("vertex"))
       .union(edges.select(col("dst"))).distinct().cache()

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object GraphQueries {
 
   /** (src, dst) canonical edges: same nation, 0 < keyDiff <= 2. */
-  private def customerEdges(s: SparkSession, d: String): DataFrame = {
+  private[graft] def customerEdges(s: SparkSession, d: String): DataFrame = {
     val c = Tables.customer(s, d).select("c_custkey", "c_nationkey")
     val a = c.alias("a")
     val b = c.alias("b")

@@ -1,9 +1,10 @@
 package graft
 
-/** Registry queries keep no state across calls: a run leaves the session's
-  * persisted RDDs and cached plans as it found them, and a second run gives
-  * the same result as the first. The four queries cover both registry
-  * featurizations (TF-IDF and hashed counts) and the seeded k-means fit.
+/** Registry queries keep no state across calls: a run adds no persisted
+  * RDD and no cached plan to the session, and a second run gives
+  * the same result as the first. The queries cover both registry
+  * featurizations (TF-IDF and hashed counts), the seeded k-means fit and
+  * the three PageRank operators.
   * The test session is shared across suites, so every check compares
   * before with after rather than against zero. Results compare as row
   * count plus Verify's non-float checksum — the pin gate's notion of
@@ -11,20 +12,26 @@ package graft
   */
 class StatelessRegistrySpec extends SparkSpec {
 
-  private def cachedState: (Int, Int) = (
-    spark.sparkContext.getPersistentRDDs.size,
+  /** Persisted RDD ids and the CacheManager entry count. Ids, not a count:
+    * the context cleaner may unpersist another suite's garbage-collected
+    * RDDs (GraphX graphs) while a query runs, and that is not the query's
+    * state. */
+  private def cachedState: (Set[Int], Int) = (
+    spark.sparkContext.getPersistentRDDs.keySet.toSet,
     org.apache.spark.sql.graft.CacheProbe.entries(spark))
 
   for (name <- Seq("q_tfidf_features", "q_kmeans_blocks", "q_dimsum",
-                   "q_billmatch"))
+                   "q_billmatch", "q_pagerank", "q_pagerank_weighted",
+                   "q_pagerank_personalized"))
     test(s"$name leaves no cached state and repeats its result") {
       val runs = (1 to 2).map { run =>
         val before = cachedState
         val df = SparkEntry.queries(name)(spark, sfDir)
         val result = (df.count(), Verify.checksum(df))
-        assert(cachedState == before,
-          s"run $run of $name changed (persisted RDDs, cache entries) " +
-            s"from $before to $cachedState")
+        val after = cachedState
+        assert((after._1 -- before._1).isEmpty && after._2 == before._2,
+          s"run $run of $name persisted RDDs ${after._1 -- before._1} or " +
+            s"changed the cache entries from ${before._2} to ${after._2}")
         result
       }
       assert(runs(0)._1 > 0L, s"$name returned no rows")

@@ -84,6 +84,21 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
+  test("pageRankDF runs its setup stages plus one stage per iteration") {
+    // SETUP_STAGES: the canonical-edge dedup exchange, the adjacency shuffle
+    // and the result stage. The DataFrame loop, one plan numIter joins deep,
+    // ran 46 stages here.
+    val SETUP_STAGES = 3
+    val metrics = graft.QueryMetrics.attach(spark)
+    try {
+      metrics.snapshot() // drain earlier events before the window opens
+      metrics.reset()
+      GraphOps.pageRankDF(canonical, numIter = 10).collect()
+      val stages = metrics.snapshot().stages
+      assert(stages <= 10 + SETUP_STAGES, s"$stages stages for 10 iterations")
+    } finally metrics.detach()
+  }
+
   test("labelPropagationDF: deterministic communities, hand-computed") {
     // 4 synchronous iterations with the (count DESC, label ASC) tie-break,
     // traced by hand: the two triangles settle on labels 1 and 3; the
