@@ -26,18 +26,18 @@ object Ivf {
   /** `centroids`: (centroid_id, cvec); `assigned`: input + centroid_id. */
   final case class Index(centroids: DataFrame, assigned: DataFrame)
 
-  /** @param fitOrderCol when set, the coarse-quantizer k-means trains on a
-    *        DETERMINISTICALLY ORDERED single-partition sample (ascending
-    *        `xxhash64(fitOrderCol)` — decorrelated from id order, see
-    *        Clustering.sampleFit — first `fitSampleRows` rows) instead of
-    *        the full
-    *        distributed frame: a distributed fit's float reductions follow
-    *        task completion order, so repeated builds can disagree in the
-    *        last ulp and occasionally move a centroid (the r10 q_ann_pq
-    *        gate-flake class). Pinned gates pass the id column here; the
-    *        bounded single-task fit is also the production shape — k
-    *        centroids need thousands of training points, not the corpus.
-    *        Assignment (`transform`) stays fully distributed either way. */
+  /** @param fitOrderCol the coarse-quantizer k-means trains on the
+    *        bounded hash-ordered sample of [[graft.cluster.Clustering.fitSample]]
+    *        (ascending `xxhash64(fitOrderCol)` when set — pinned gates pass
+    *        the id column — else `xxhash64` of the vector itself), collected
+    *        once and fitted on the driver
+    *        ([[graft.cluster.Clustering.driverKMeans]]): the stock MLlib fit
+    *        on that sample in one partition, bit for bit, so repeated
+    *        builds agree at any partition or core count (a distributed
+    *        fit's reductions follow task completion order — the r10
+    *        q_ann_pq gate-flake class). k centroids need thousands of
+    *        training points, not the corpus; assignment (`transform`) stays
+    *        fully distributed. */
   def build(df: DataFrame, vecCol: String, k: Int,
             seed: Long = 12345L, maxIter: Int = 20,
             fitOrderCol: Option[String] = None,
@@ -45,13 +45,10 @@ object Ivf {
     val spark = df.sparkSession
     import spark.implicits._
     val withVec = df.withColumn("__mlvec", array_to_vector(col(vecCol)))
-    // one shared deterministic sample-fit harness engine-wide (r11)
-    val model = graft.cluster.Clustering.sampleFit(
-        withVec, fitOrderCol, fitSampleRows) { fitIn =>
+    val model = graft.cluster.Clustering.driverKMeans(withVec,
       new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-        .setFeaturesCol("__mlvec").setPredictionCol("__centroid")
-        .fit(fitIn)
-    }
+        .setFeaturesCol("__mlvec").setPredictionCol("__centroid"),
+      fitOrderCol, fitSampleRows)
     val assigned = model.transform(withVec)
       .withColumnRenamed("__centroid", "centroid_id")
       .drop("__mlvec")

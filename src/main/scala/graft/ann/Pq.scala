@@ -1,7 +1,8 @@
 package graft.ann
 
-import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.clustering.{DriverKMeansFit, KMeans}
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,8 +22,8 @@ import org.apache.spark.sql.functions._
   * subvector is a centroid (k ≥ distinct subvectors per subspace) — then PQ
   * ranking equals exact L2 ranking, which is the equivalence the spec pins.
   *
-  * 100 TB shape: m sequential k-means fits over ONE cached slice projection
-  * (centroid sets are k·dsub doubles each — driver-side by construction);
+  * 100 TB shape: m driver-side k-means fits over ONE collected, bounded
+  * slice sample (centroid sets are k·dsub doubles each);
   * encoding is m broadcast-hash transforms, no shuffle; search broadcasts
   * (query, table) pairs against the codes table — the corpus is scanned
   * once, and only codes ever move.
@@ -35,20 +36,22 @@ object Pq {
 
   /** Train subspace codebooks and encode the corpus.
     *
-    * The codebook fit is DETERMINISTIC by construction: each subspace
-    * k-means runs over a single-partition slice sample in ascending
-    * xxhash64(id) order (Clustering.sampleFit), so the seeded init
-    * sampling and every float accumulation see one fixed operand
-    * order — a distributed fit's task-completion-order reduction drift
-    * occasionally moved a centroid enough to flip which top-5 candidates
-    * `search` reports (the r10 q_ann_pq gate flake). Hash order, not raw
-    * id order: an id-prefix sample is biased when ids correlate with
-    * content (ADVICE r11); the hash sample is deterministic AND
-    * decorrelated. This is also the standard production shape: PQ
-    * codebooks are conventionally trained on a bounded sample (m·k
-    * centroids need ~thousands of points, not the corpus), so the
-    * single-task fit costs O(fitSampleRows·k·maxIter) regardless of
-    * corpus size while ENCODING stays fully distributed.
+    * The codebook fit is DETERMINISTIC by construction: the m subspace
+    * k-means fits train on ONE collect of the bounded slice sample in
+    * ascending xxhash64(id) order (Clustering.fitSample) and run on the
+    * driver (DriverKMeansFit — MLlib's fit on that sample in one
+    * partition, bit for bit), so the seeded init sampling and every float
+    * accumulation see one fixed operand order — a distributed fit's
+    * task-completion-order reduction drift occasionally moved a centroid
+    * enough to flip which top-5 candidates `search` reports (the r10
+    * q_ann_pq gate flake). Hash order, not raw id order: an id-prefix
+    * sample is biased when ids correlate with content (ADVICE r11); the
+    * hash sample is deterministic AND decorrelated. This is also the
+    * standard production shape: PQ codebooks are conventionally trained on
+    * a bounded sample (m·k centroids need ~thousands of points, not the
+    * corpus), so the fits cost one collect plus O(fitSampleRows·k·maxIter)
+    * driver time regardless of corpus size while ENCODING stays fully
+    * distributed.
     *
     * @param df     corpus; `vecCol` is array<double> of uniform length d
     * @param m      number of subspaces; must divide d
@@ -65,7 +68,7 @@ object Pq {
     require(d % m == 0, s"m=$m must divide dim=$d")
     val dsub = d / m
 
-    // one slice projection reused by all m fits; cache it — each fit scans it
+    // one slice projection read by the sample collect and the encoding
     val sliced = df.select(
       (col(idCol).as("__id") +:
         (0 until m).map(j =>
@@ -73,15 +76,14 @@ object Pq {
             .as(s"__sub$j"))): _*)
       .cache()
     try {
-      // one shared deterministic sample-fit harness engine-wide (r11);
-      // all m fits scan the same materialized partition
-      val models = graft.cluster.Clustering.sampleFit(
-          sliced, Some("__id"), fitSampleRows) { fitInput =>
-        (0 until m).map { j =>
+      // one collect serves all m driver fits
+      val sample = graft.cluster.Clustering.fitSample(sliced, "__id", fitSampleRows)
+      val rows = sample.select((0 until m).map(j => col(s"__sub$j")): _*).collect()
+      val models = (0 until m).map { j =>
+        DriverKMeansFit(
           new KMeans().setK(k).setSeed(seed + j).setMaxIter(maxIter)
-            .setFeaturesCol(s"__sub$j").setPredictionCol(s"__code$j")
-            .fit(fitInput)
-        }
+            .setFeaturesCol(s"__sub$j").setPredictionCol(s"__code$j"),
+          sample, rows.map(_.getAs[Vector](j)))
       }
       val encoded = models.zipWithIndex
         .foldLeft(sliced) { case (acc, (model, _)) => model.transform(acc) }

@@ -1,6 +1,6 @@
 package graft.cluster
 
-import org.apache.spark.ml.clustering.{BisectingKMeans, BisectingKMeansModel, KMeans, KMeansModel, LDA, LDAModel}
+import org.apache.spark.ml.clustering.{BisectingKMeans, BisectingKMeansModel, DriverKMeansFit, KMeans, KMeansModel, LDA, LDAModel}
 import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
 import org.apache.spark.sql.DataFrame
@@ -14,61 +14,76 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
-  /** K-means blocking (reference feature/Utils.scala:129-149). Returns the
-    * input plus a `prediction` column, and the model (for WSSSE =
-    * summary.trainingCost, the Spark-4 home of computeCost). */
-  /** When `fitOrderCol` is set, the model trains on a DETERMINISTICALLY
-    * ORDERED single-partition sample (ascending `xxhash64(order column)`,
-    * first `fitSampleRows` rows) while `transform` stays fully distributed:
-    * a distributed fit's float reductions follow task completion order, so
-    * repeated seeded fits can land on different local optima — Verify's
-    * real-refit repeat gate caught q_kmeans_blocks doing exactly that
-    * (r11; the q_ann_pq class). Pinned gates pass the id column; this is
-    * also the production blocking-fit shape — k blocking centroids need
-    * thousands of training rows, not the corpus (the Pq/Ivf.build
-    * convention). */
-  /** THE deterministic sample-fit harness — every seeded fit in the engine
-    * (k-means/bisecting/LDA here, Ivf/Pq.build in graft.ann) goes through
-    * this one body so a future determinism tweak cannot silently miss a
-    * copy. Some(order): hash-sort → bounded sample → ONE partition, cached
+  /** THE deterministic fit sample: the first `fitSampleRows` rows in
+    * ascending `xxhash64(order column)` order (raw column as the collision
+    * tiebreak), NOT in raw-column order: the first rows of a raw-id sort
+    * are the corpus's smallest-id PREFIX, a biased slice whenever ids
+    * correlate with content — time-ordered crawls, sharded sources
+    * (ADVICE r11). The hash order is equally deterministic (same rows →
+    * same sample in the same order, machine-independent) but decorrelated
+    * from insertion/time order — a uniform pseudo-random sample with a
+    * replayable seed. At gate scale the sample is the whole corpus either
+    * way; the bound exists for the 100 TB shape (k centroids need
+    * thousands of training rows, not the corpus). Every seeded fit in the
+    * engine trains on this frame: k-means here and in graft.ann on its
+    * collected rows ([[driverKMeans]]), bisecting k-means and LDA on it
+    * cached in one partition ([[sampleFit]]). */
+  private[graft] def fitSample(df: DataFrame, orderCol: String,
+                               fitSampleRows: Int): DataFrame =
+    df.sort(xxhash64(col(orderCol)), col(orderCol)).limit(fitSampleRows)
+
+  /** The MLlib harness for the fits with no driver replay (bisecting
+    * k-means, LDA): Some(order): the [[fitSample]] in ONE partition, cached
     * and materialized before the fit (every iteration then reads the same
-    * cached partition in the same order), released after. None: the fit
-    * runs on `df` as given (distributed — the caller accepts
-    * reduction-order drift).
-    *
-    * The sample is ordered by `xxhash64(order column)` (raw column as the
-    * collision tiebreak), NOT by the raw column: taking the first
-    * `fitSampleRows` rows of a raw-id sort trains on the corpus's
-    * smallest-id PREFIX, which is a biased slice whenever ids correlate
-    * with content — time-ordered crawls, sharded sources (ADVICE r11).
-    * The hash order is equally deterministic (same rows → same sample →
-    * same fit, machine-independent) but decorrelated from insertion/time
-    * order — a uniform pseudo-random sample with a replayable seed. At
-    * gate scale the sample is the whole corpus either way; the ordering
-    * choice exists for the 100 TB bound. */
+    * cached partition in the same order — a distributed fit's float
+    * reductions follow task completion order, so repeated seeded fits can
+    * land on different local optima), released after. None: the fit runs
+    * on `df` as given (distributed — the caller accepts reduction-order
+    * drift). */
   private[graft] def sampleFit[M](df: DataFrame, fitOrderCol: Option[String],
                                   fitSampleRows: Int)(fit: DataFrame => M): M =
     fitOrderCol match {
       case Some(ord) =>
-        val fitIn = df.sort(xxhash64(col(ord)), col(ord))
-          .limit(fitSampleRows).coalesce(1).cache()
+        val fitIn = fitSample(df, ord, fitSampleRows).coalesce(1).cache()
         fitIn.count()
         try fit(fitIn)
         finally { fitIn.unpersist(blocking = false); () }
       case None => fit(df)
     }
 
+  /** Every seeded k-means fit in the engine: ONE collect of the
+    * [[fitSample]] — ordered by `fitOrderCol`, or with none by the vector
+    * column `est.getFeaturesCol` itself (its hash, ties broken by the
+    * vector, so the point sequence does not depend on how `df` is
+    * partitioned) — then MLlib's fit replayed on the driver
+    * ([[org.apache.spark.ml.clustering.DriverKMeansFit]]): the centers,
+    * iteration count and cost of the stock fit on that sample in one
+    * partition, with no Spark job after the collect. `fitSampleRows`
+    * bounds the driver memory the points take. */
+  private[graft] def driverKMeans(df: DataFrame, est: KMeans, fitOrderCol: Option[String],
+                                  fitSampleRows: Int): KMeansModel =
+    DriverKMeansFit(est,
+      fitSample(df, fitOrderCol.getOrElse(est.getFeaturesCol), fitSampleRows))
+
+  /** K-means blocking (reference feature/Utils.scala:129-149). Returns the
+    * input plus a `prediction` column, and the model (for WSSSE =
+    * summary.trainingCost, the Spark-4 home of computeCost).
+    *
+    * The model is fitted on the driver ([[driverKMeans]]) over the bounded
+    * hash-ordered sample — the `fitOrderCol` hash order when set (pinned
+    * gates pass the id column), else the feature vectors' own hash
+    * order — so the fit is the same at any partition count and core count
+    * and costs one collect, not ~45 Spark stages. Assignment (`transform`)
+    * stays fully distributed. With or without `fitOrderCol`, a corpus above
+    * `fitSampleRows` rows trains on its first `fitSampleRows` rows in that
+    * order only. */
   def kmeans(df: DataFrame, k: Int, maxIter: Int = 40, seed: Long = 12345L,
              featuresCol: String = "features",
-             initMode: String = "k-means||",
              fitOrderCol: Option[String] = None,
              fitSampleRows: Int = 1 << 17): (KMeansModel, DataFrame) = {
-    val model = sampleFit(df, fitOrderCol, fitSampleRows) { fitIn =>
-      new KMeans()
-        .setK(k).setMaxIter(maxIter).setSeed(seed).setInitMode(initMode)
-        .setFeaturesCol(featuresCol)
-        .fit(fitIn)
-    }
+    val model = driverKMeans(df,
+      new KMeans().setK(k).setMaxIter(maxIter).setSeed(seed).setFeaturesCol(featuresCol),
+      fitOrderCol, fitSampleRows)
     (model, model.transform(df))
   }
 

@@ -57,7 +57,7 @@ case class CleanTokenBuckets(child: Expression, numFeatures: Int,
     nullSafeCodeGen(ctx, ev, c => {
       s"""
       ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        graft.expressions.CleanTokenBuckets.eval(
+        graft.expressions.CleanTokenBuckets$$.MODULE$$.eval(
           $c.toString(), $numFeatures, $stopRef));"""
     })
   }

@@ -56,7 +56,7 @@ case class CleanTokenTf(child: Expression, numFeatures: Int,
     val stopRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
     nullSafeCodeGen(ctx, ev, c => {
       s"""
-      ${ev.value} = graft.expressions.CleanTokenTf.eval(
+      ${ev.value} = graft.expressions.CleanTokenTf$$.MODULE$$.eval(
         $c.toString(), $numFeatures, $stopRef);"""
     })
   }
@@ -101,7 +101,7 @@ case class IdfScale(child: Expression, idf: Array[Double])
     val idfRef = ctx.addReferenceObj("idf", idf, "double[]")
     nullSafeCodeGen(ctx, ev, a => {
       s"""
-      ${ev.value} = graft.expressions.IdfScale.eval($a, $idfRef);"""
+      ${ev.value} = graft.expressions.IdfScale$$.MODULE$$.eval($a, $idfRef);"""
     })
   }
 

@@ -92,8 +92,8 @@ object MlQueries {
     * pin depends on the partition count, because DimsumFork seeds each
     * partition's sampler with `XORShiftRandom(partitionIndex)`
     * (DimsumFork.scala), so a different fan-out draws different samples.
-    * The seeded fits do not depend on it: `Clustering.sampleFit` hash-sorts
-    * their sample into one partition. The repartition is NOT dropped on a
+    * The seeded fits do not depend on it: they train on the hash-ordered
+    * `Clustering.fitSample`, in one sequence at any partition count. The repartition is NOT dropped on a
     * well-split input — it shuffles at every scale. */
   private def spread(df: DataFrame): DataFrame = df.repartition(32)
 

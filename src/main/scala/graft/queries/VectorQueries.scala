@@ -525,11 +525,11 @@ object VectorQueries {
         .transform(Tables.spread)
       // sample-bounded fit (r13): with nProbe = k the search scans EVERY
       // centroid partition, so the output is the exact top-K regardless of
-      // where the centroids sit — the distributed full-frame fit bought
-      // nothing this query's answer depends on, at 20 iterations of
-      // treeAggregate jobs. The deterministic hash-ordered sample fit is
-      // the engine-wide production shape (corpus-independent cost); the
-      // exact-answer property is what the DuckDB brute-force oracle gates.
+      // where the centroids sit — the fit's placement cannot move this
+      // query's answer. The deterministic hash-ordered sample, collected
+      // once and fitted on the driver, is the engine-wide production shape
+      // (corpus-independent cost); the exact-answer property is what the
+      // DuckDB brute-force oracle gates.
       val index = graft.ann.Ivf.build(t, "v", k = 16,
         fitOrderCol = Some("vec_id"))
       val probes = t.filter(col("vec_id") % 50 === 0)

@@ -61,6 +61,25 @@ class QueryMetricsSpec extends SparkSpec {
     }
   }
 
+  test("a k-means blocking fit and its assignment run a bounded number of stages") {
+    // one stage collects the fit sample (the fit itself is driver
+    // arithmetic), one runs the assignment; MLlib's distributed fit ran 53
+    // here (init jobs, two stages per iteration, solver-choice and
+    // cluster-size jobs)
+    val maxStages = 2
+    val feats = graft.text.FeaturePipeline.features(graft.io.Tables.documents(spark, sfDir),
+        graft.text.FeatureConfig(numTextFeatures = 1024))
+      .select("doc_id", "features").cache()
+    feats.count()
+    try withMetrics { metrics =>
+      val p = measure(metrics) {
+        val (_, clustered) = graft.cluster.Clustering.kmeans(feats, k = 8, maxIter = 20)
+        clustered.select("prediction").collect()
+      }
+      assert(p.stages > 0 && p.stages <= maxStages, p)
+    } finally { feats.unpersist(); () }
+  }
+
   test("repeated measurements of one query agree on the task count") {
     withMetrics { metrics =>
       val tasks = (1 to 10).map(_ => measure(metrics)(shuffled.collect()).tasks)

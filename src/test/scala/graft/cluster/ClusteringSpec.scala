@@ -44,6 +44,23 @@ class ClusteringSpec extends SparkSpec {
     assert(a == b, "sample-fit centers differ across input layouts")
   }
 
+  test("a fit with no order column is the same at any partition count") {
+    // the fit sample is then ordered by the vectors' own hash, so the
+    // point sequence (and with it every float sum) does not depend on how
+    // the input is split; a distributed fit's sums follow the split
+    val feats = graft.text.FeaturePipeline.features(graft.io.Tables.documents(spark, sfDir),
+        graft.text.FeatureConfig(numTextFeatures = 1024))
+      .select("doc_id", "features").cache()
+    def centerBits(parts: Int): Seq[Seq[Long]] =
+      Clustering.kmeans(feats.repartition(parts), k = 8, maxIter = 20)._1
+        .clusterCenters.toSeq.map(_.toArray.toSeq.map(java.lang.Double.doubleToLongBits))
+    try {
+      val one = centerBits(1)
+      for (parts <- Seq(3, 7))
+        assert(centerBits(parts) == one, s"centers at $parts partitions differ from 1")
+    } finally { feats.unpersist(); () }
+  }
+
   test("kmeans model exposes WSSSE via summary.trainingCost") {
     val (model, _) = Clustering.kmeans(blobs, k = 2, maxIter = 10)
     assert(model.summary.trainingCost >= 0.0)

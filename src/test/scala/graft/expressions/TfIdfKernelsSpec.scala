@@ -91,6 +91,34 @@ class TfIdfKernelsSpec extends SparkSpec {
     compare(docs, FeatureConfig(numTextFeatures = 1024, useIdf = false))
   }
 
+  test("the kernels compile: no interpreted fallback under CODEGEN_ONLY") {
+    // a case-class companion's `eval` gets no static forwarder (the class
+    // has its own instance `eval`), so generated code must reach the
+    // module; with fallback off a compile failure fails the query instead
+    // of silently running interpreted
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val before = keys.map { case (key, _) => key -> conf.getOption(key) }
+    keys.foreach { case (key, v) => conf.set(key, v) }
+    try {
+      // a parquet scan, not a local Seq: projections over a LocalRelation
+      // are folded by the optimizer through the interpreted path
+      val docs = graft.io.Tables.documents(spark, sfDir).select("doc_id", "text")
+      val n = docs.count()
+      val feats = FeaturePipeline.features(docs,
+        FeatureConfig(numTextFeatures = 64, useIdf = true))
+      assert(feats.select("features").collect().length == n)
+      val buckets = org.apache.spark.sql.graft.bridge.column(CleanTokenBuckets(
+        org.apache.spark.sql.graft.bridge.expression(lower(col("text"))), 64,
+        org.apache.spark.ml.feature.StopWordsRemover.loadDefaultStopWords("english").toSeq))
+      assert(docs.select(buckets).collect().length == n)
+    } finally before.foreach {
+      case (key, Some(v)) => conf.set(key, v)
+      case (key, None) => conf.unset(key)
+    }
+  }
+
   test("IdfScale dense branch replays IDFModel.transform on dense input") {
     val idf = Array(0.0, 0.5, 2.0)
     val in = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
