@@ -44,7 +44,7 @@ object Bench {
     "q_kmeans_blocks",   // k-means blocking fit
     "q_billmatch",       // flagship end-to-end pipeline (pinned-label [sql] form, r11)
     "q_pagerank",        // iterative graph
-    "q_triangles",       // GraphX triangle count
+    "q_triangles",       // superstep triangle count
     // r7 widening (VERDICT r6 #4): the heaviest ladder entries join the
     // per-round gate so extension-surface regressions are caught by BENCH,
     // not only by ad-hoc ScaleProbe runs. r6 ladder times are the floor.

@@ -50,7 +50,8 @@ object BillMatch {
     // corpus spread across partitions (single-file testdata artifact)
     val docs = Tables.spread(Tables.documents(spark, sfDir))
 
-    val sims = blocking match {
+    // frames this run caches, released after their last use
+    val (sims, cached) = blocking match {
       case "minhash" =>
         // workflow 2: binary TF features (set semantics) → one corpus-wide
         // MinHash LSH join → cross-lang predicate → scaled similarity
@@ -66,7 +67,7 @@ object BillMatch {
           .join(langs.select(col("doc_id").as("pk2"), col("lang").as("l2")), "pk2")
           .filter(col("l1") =!= col("l2"))
           .select(col("pk1"), col("pk2"),
-            ((lit(1.0) - col("jaccard_dist")) * 100.0).as("similarity"))
+            ((lit(1.0) - col("jaccard_dist")) * 100.0).as("similarity")) -> Nil
       case _ =>
         // workflow 1:
         // 1. features (clean → tokenize → stopwords → TF-IDF)
@@ -86,7 +87,7 @@ object BillMatch {
         Candidates.attachBothSides(pairs,
             clustered.select(col("doc_id"), col("features")), "doc_id", "features")
           .select(col("pk1"), col("pk2"),
-            kernel(col("features_1"), col("features_2")).as("similarity"))
+            kernel(col("features_1"), col("features_2")).as("similarity")) -> List(feats)
     }
 
     // 5. post-process: global top-K, parquet sink. The candidate joins already
@@ -110,7 +111,7 @@ object BillMatch {
     val nDocs = docs.count()
     val nPairs = simsP.count()
     val topRows = top.limit(5).collect()
-    simsP.unpersist()
+    (simsP :: top :: cached).foreach(_.unpersist())
     println(s"[billmatch] docs=$nDocs pairs=$nPairs blocking=$blocking measure=$measure k=$k")
     topRows.foreach(r => println(s"[billmatch] top: $r"))
     println(s"[billmatch] wrote $outDir/pairs.parquet and $outDir/graph.parquet")

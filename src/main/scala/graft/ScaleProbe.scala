@@ -278,13 +278,7 @@ object ScaleProbe {
         f -> checkpointed(q, f)(timeDf(SparkEntry.queries(q)(spark, _), dirFor(f)))._1).toMap
     }
     val sccProbe: String => org.apache.spark.sql.DataFrame = { dir =>
-      val c = graft.io.Tables.customer(spark, dir)
-        .select("c_custkey", "c_nationkey")
-      val e = c.alias("a").join(c.alias("b"),
-          col("a.c_nationkey") === col("b.c_nationkey") &&
-          col("b.c_custkey") > col("a.c_custkey") &&
-          col("b.c_custkey") <= col("a.c_custkey") + 2)
-        .select(col("a.c_custkey").as("src"), col("b.c_custkey").as("dst"))
+      val e = graft.queries.GraphQueries.customerEdges(spark, dir)
       // the q_scc gate's directionality rule, applied to the whole graph
       val dir2 = e.unionByName(
         e.filter((col("src") + col("dst")) % 3 === 0)

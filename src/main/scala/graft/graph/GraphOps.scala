@@ -1,30 +1,32 @@
 package graft.graph
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.graphx.lib.ShortestPaths
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /** Graph operators over (src, dst[, weight]) edge DataFrames (SURVEY G1-G4).
   *
   * The reference builds a GraphFrame from similarity matches and runs
   * PageRank / shortestPaths / triangleCount (reference graph/GraphUtils.scala:16-41);
-  * the GraphFrames jar is unavailable offline, so:
-  *  - GraphX (shipped with Spark) powers triangle count and shortest paths —
-  *    both integer-valued, so results are engine-exact;
-  *  - the PageRank family ([[pageRankDF]], [[pageRankWeightedDF]],
-  *    [[personalizedPageRankDF]]) runs on one co-partitioned RDD superstep
-  *    kernel with one shuffle per iteration and partition-count-independent
-  *    sums, so it stays oracle-checkable. It replaced DataFrame loops whose
-  *    one plan grew numIter joins deep, which AQE ran stage by stage,
-  *    re-planning the rest of the plan after each.
+  * the GraphFrames jar is unavailable offline. Every iterative operator here
+  * runs on one private primitive, [[superstep]], in the shape of Pregelix
+  * (a superstep is one message join plus one group-by) and GraphX (vertex
+  * state co-partitioned with adjacency): one shuffle per superstep, and a
+  * vertex combines its messages in ascending (source, value) order, so every
+  * output is bit-identical at any partition count and stays
+  * oracle-checkable. State is rebuilt from shuffle outputs: nothing is
+  * cached or checkpointed, and a lost block is recomputed from shuffle
+  * files. [[linkPrediction]] is not iterative and stays a DataFrame plan.
   *
-  * All operators treat the graph as UNDIRECTED (the reference's similarity
-  * graph is undirected): edges are canonicalized src<dst then mirrored
-  * internally where the algorithm needs both directions.
+  * The undirected operators treat every (src, dst) row as an edge in both
+  * directions (the reference's similarity graph is undirected); [[hitsDF]]
+  * and [[stronglyConnectedComponents]] take direction as the semantics.
   */
 object GraphOps {
+  import Ordering.Double.TotalOrdering
 
   /** Canonicalize an undirected edge list: src < dst, dedup. */
   def canonicalEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
@@ -39,83 +41,216 @@ object GraphOps {
     canonical.unionByName(
       canonical.select(col("dst").as("src"), col("src").as("dst")))
 
-  private def toGraphX(canonical: DataFrame): Graph[Int, Int] = {
-    val edgeRdd = canonical.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    Graph.fromEdges(edgeRdd, defaultValue = 0)
+  /** Result rows as a DataFrame, like `spark.implicits`' `toDF`. */
+  private implicit class Rows[T <: Product: TypeTag](rows: RDD[T]) {
+    def toDF(names: String*): DataFrame = SparkSession.active.createDataFrame(rows).toDF(names: _*)
   }
 
-  /** G1+G4: triangles per vertex via GraphX TriangleCount (integer-exact). */
+  /** Every vertex with its adjacency `A` and its state `S`. */
+  private type Vertices[A, S] = RDD[(Long, (A, S))]
+
+  /** `pairs` (vertex, x) grouped by vertex on one HashPartitioner sized by
+    * spark.sql.shuffle.partitions, each group handed to `build`. */
+  private def adjacency[X: ClassTag, A](spark: SparkSession, pairs: RDD[(Long, X)])(
+      build: Array[X] => A): RDD[(Long, A)] =
+    pairs.partitionBy(new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+      .mapPartitions(it => it.toArray.groupMap(_._1)(_._2).iterator.map { case (v, xs) =>
+        (v, build(xs)) }, preservesPartitioning = true)
+
+  /** Sorted (out, in) neighbours of every vertex, multiple edges repeated. */
+  private def directedNeighbours(edges: DataFrame): RDD[(Long, (Array[Long], Array[Long]))] =
+    adjacency(edges.sparkSession, edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .rdd.flatMap(r => Iterator((r.getLong(0), (r.getLong(1), true)),
+          (r.getLong(1), (r.getLong(0), false))))) { xs =>
+      (xs.collect { case (n, true) => n }.sorted, xs.collect { case (n, false) => n }.sorted)
+    }
+
+  /** Sorted distinct neighbours of every vertex, each row an undirected edge. */
+  private def neighbours(edges: DataFrame): RDD[(Long, Array[Long])] =
+    directedNeighbours(edges).mapValues { case (out, in) => (out ++ in).distinct.sorted }
+
+  private def start[A, S](adj: RDD[(Long, A)])(init: (Long, A) => S): Vertices[A, S] =
+    adj.map { case (v, a) => (v, (a, init(v, a))) }
+
+  /** One superstep. Each vertex hands its state to itself and `send`'s
+    * (destination, value) messages to others through ONE shuffle on the
+    * adjacency's partitioner; `update` then gives each vertex its next state
+    * from its adjacency, its state and its messages as (source, value) in
+    * ascending order. The result zips the adjacency with that shuffle's
+    * output, so a superstep reads one shuffle and lineage never chains
+    * supersteps. Per-partition hash maps stand in for `join`/`cogroup`,
+    * whose spillable maps cost 4× the task CPU (q_pagerank at sf0.1 on 4
+    * cores). */
+  private def superstep[A, S, T, M](adj: RDD[(Long, A)], verts: Vertices[A, S])(
+      send: (Long, A, S) => Iterator[(Long, M)])(
+      update: (Long, A, S, Array[(Long, M)]) => T)(
+      implicit order: Ordering[M]): Vertices[A, T] = {
+    val inbox = verts.flatMap { case (v, (a, s)) =>
+      Iterator.single(v -> (Left(s): Either[S, (Long, M)])) ++
+        send(v, a, s).map { case (dst, m) => dst -> Right((v, m)) }
+    }.partitionBy(adj.partitioner.get)
+    val byOrigin = Ordering.Tuple2(Ordering.Long, order)
+    adj.zipPartitions(inbox, preservesPartitioning = true) { (vertices, in) =>
+      val box = in.toArray
+      val state = box.collect { case (v, Left(s)) => v -> s }.toMap
+      val inboxes = box.collect { case (v, Right(m)) => v -> m }.groupMap(_._1)(_._2)
+      vertices.map { case (v, a) =>
+        val in = inboxes.getOrElse(v, Array.empty[(Long, M)]).sorted(byOrigin)
+        (v, (a, update(v, a, state(v), in)))
+      }
+    }
+  }
+
+  /** Applies `step` until no vertex is `active`, checked by one count job
+    * before each step; more than `maxSteps` steps fail with `noFixpoint`. */
+  @annotation.tailrec
+  private def toFixpoint[A, S](verts: Vertices[A, S], maxSteps: Int = Int.MaxValue,
+                               noFixpoint: => String = "")(active: S => Boolean)(
+      step: Vertices[A, S] => Vertices[A, S]): Vertices[A, S] =
+    if (verts.filter(x => active(x._2._2)).count() == 0) verts
+    else {
+      require(maxSteps > 0, noFixpoint)
+      toFixpoint(step(verts), maxSteps - 1, noFixpoint)(active)(step)
+    }
+
+  /** G1+G4: triangles per vertex, every vertex included (zero too), over
+    * degree-ordered forward adjacency: a vertex's forward neighbours come
+    * after it in (degree, id) order, so a forward set holds at most √(2E)
+    * vertices. Three supersteps: degrees to neighbours; each vertex sends
+    * its forward set to its forward neighbours (to each, the part after
+    * it), and the receiver intersects, finding every triangle once at its
+    * middle vertex; the middle vertex credits both ends. */
   def triangleCounts(canonical: DataFrame): DataFrame = {
-    val spark = canonical.sparkSession
-    import spark.implicits._
-    toGraphX(canonical).triangleCount().vertices
-      .map { case (id, n) => (id, n) }.toDF("vertex", "n_triangles")
+    val adj = neighbours(canonical)
+    val forward = superstep(adj, start(adj)((_, nbrs) => nbrs.length)) {
+      (_, nbrs, deg) => nbrs.iterator.map(_ -> deg)
+    } { (v, _, deg, in) =>
+      in.filter { case (u, du) => du > deg || (du == deg && u > v) }
+        .sortBy { case (u, du) => (du, u) }.map(_._1)
+    }
+    val middles = superstep(adj, forward) { (_, _, fwd) =>
+      fwd.indices.iterator.flatMap(i => fwd.iterator.drop(i + 1).map(fwd(i) -> _))
+    } { (_, _, fwd, in) =>
+      val mine = fwd.toSet
+      in.filter { case (_, w) => mine(w) }
+    }
+    superstep(adj, middles) { (_, _, found) =>
+      found.iterator.flatMap { case (u, w) => Iterator(u -> 1, w -> 1) }
+    } { (_, _, found, in) => found.length + in.length }
+      .map { case (v, (_, n)) => (v, n) }.toDF("vertex", "n_triangles")
   }
 
-  /** G3: hop distances from every vertex to each landmark via GraphX
-    * ShortestPaths (integer-exact); rows only for reachable pairs. */
+  /** G3: hop distances from every vertex to each landmark by BFS to a
+    * fixpoint; rows only for reachable pairs, none for a landmark absent
+    * from the graph. A vertex keeps a landmark → distance map, and only the
+    * landmarks it reached in the last superstep travel on: a landmark's
+    * first arrival is its shortest distance. Per BFS level, one superstep
+    * and one count job. */
   def shortestPathLengths(canonical: DataFrame, landmarks: Seq[Long]): DataFrame = {
-    val spark = canonical.sparkSession
-    import spark.implicits._
-    // ShortestPaths follows OUT-edges; feed the symmetric edge set so the
-    // undirected semantics hold.
-    val g = toGraphX(symmetric(canonical).distinct())
-    ShortestPaths.run(g, landmarks.map(_.asInstanceOf[VertexId]))
-      .vertices
-      .flatMap { case (id, spmap) => spmap.map { case (lm, d) => (id, lm.toLong, d) } }
+    val isLandmark = landmarks.toSet
+    val adj = neighbours(canonical)
+    val seeded = start(adj) { (v, _) =>
+      if (isLandmark(v)) (Map(v -> 0), Array(v)) else (Map.empty[Long, Int], Array.empty[Long])
+    }
+    toFixpoint(seeded)(_._2.nonEmpty) { verts =>
+      superstep(adj, verts) { case (_, nbrs, (dist, fresh)) =>
+        for (n <- nbrs.iterator; lm <- fresh.iterator) yield n -> (lm, dist(lm) + 1)
+      } { case (_, _, (dist, _), in) =>
+        val reached = in.iterator.map(_._2).filterNot(m => dist.contains(m._1)).toMap
+        (dist ++ reached, reached.keys.toArray)
+      }
+    }.flatMap { case (v, (_, (dist, _))) => dist.iterator.map { case (lm, d) => (v, lm, d) } }
       .toDF("vertex", "landmark", "distance")
   }
 
-  /** Connected components via GraphX (integer-exact: component id = min
-    * vertex id in the component). */
+  /** Connected components (component id = min vertex id in the component)
+    * by min-label propagation to a fixpoint. A label starts as the smallest
+    * id among the vertex and its neighbours, and only vertices whose label
+    * changed send, like GraphX's active set. Per superstep, one shuffle and
+    * one count job; supersteps ≤ the component diameter. */
   def connectedComponents(canonical: DataFrame): DataFrame = {
-    val spark = canonical.sparkSession
-    import spark.implicits._
-    toGraphX(canonical).connectedComponents().vertices
-      .map { case (id, cc) => (id, cc) }.toDF("vertex", "component")
+    val adj = neighbours(canonical)
+    toFixpoint(start(adj)((v, nbrs) => (nbrs.foldLeft(v)(math.min), true)))(_._2) { verts =>
+      superstep(adj, verts) { case (_, nbrs, (label, changed)) =>
+        if (changed) nbrs.iterator.map(_ -> label) else Iterator.empty
+      } { case (_, _, (label, _), in) =>
+        val min = in.foldLeft(label)((m, msg) => math.min(m, msg._2))
+        (min, min < label)
+      }
+    }.map { case (v, (_, (component, _))) => (v, component) }.toDF("vertex", "component")
   }
 
-  /** Strongly connected components over a DIRECTED (src, dst) edge list via
-    * GraphX (component id = min vertex id in the SCC; integer-exact). Unlike
-    * the operators above this one does NOT mirror edges — direction is the
-    * semantics. */
+  /** SCC vertex state: `comp` is final once `done`; `colour` is the forward
+    * min-colour; `flag` marks a change in the phase's last superstep. */
+  private final case class Scc(done: Boolean, comp: Long, colour: Long, flag: Boolean)
+
+  /** Strongly connected components over a DIRECTED (src, dst) edge list by
+    * GraphX's algorithm (component id = min vertex id in the SCC). Unlike
+    * the undirected operators this one does NOT mirror edges: direction is
+    * the semantics. Each of at most `numIter` rounds trims to a fixpoint (a
+    * vertex with no live in- or out-neighbour is its own SCC) and, except in
+    * the last round, then propagates min colours forward to a fixpoint and
+    * confirms each colour's SCC backward from its root, the vertex whose id
+    * is its colour. A vertex left live keeps its own id. */
   def stronglyConnectedComponents(directed: DataFrame, numIter: Int): DataFrame = {
-    val spark = directed.sparkSession
-    import spark.implicits._
-    val edgeRdd = directed.select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    Graph.fromEdges(edgeRdd, defaultValue = 0)
-      .stronglyConnectedComponents(numIter).vertices
-      .map { case (id, scc) => (id, scc) }.toDF("vertex", "component")
+    val adj = directedNeighbours(directed)
+    type V = Vertices[(Array[Long], Array[Long]), Scc]
+    // `begin` on each live vertex, then supersteps until no vertex is flagged
+    def phase(verts: V, begin: (Long, Scc) => Scc)(
+        send: ((Array[Long], Array[Long]), Scc) => Iterator[(Long, Long)])(
+        update: (Long, Scc, Array[(Long, Long)]) => Scc): V =
+      toFixpoint(verts.map { case (v, (a, s)) =>
+        (v, (a, if (s.done) s.copy(flag = false) else begin(v, s))) })(_.flag) {
+        superstep(adj, _)((_, a, s) => send(a, s)) { (v, _, s, in) =>
+          if (s.done) s.copy(flag = false) else update(v, s, in) }
+      }
+    var verts: V = start(adj)((v, _) => Scc(done = false, v, v, flag = false))
+    var round = 0
+    while (round < numIter && verts.filter(!_._2._2.done).count() > 0) {
+      round += 1
+      // trim: each live vertex tells its out-neighbours 1 and in-neighbours 0
+      verts = phase(verts, (_, s) => s.copy(flag = true)) { case ((out, in), s) =>
+        if (s.done) Iterator.empty else out.iterator.map(_ -> 1L) ++ in.iterator.map(_ -> 0L)
+      } { (v, _, in) =>
+        val trim = !(in.exists(_._2 == 1L) && in.exists(_._2 == 0L))
+        Scc(trim, v, v, trim)
+      }
+      if (round < numIter) {
+        val coloured = phase(verts, (v, s) => s.copy(colour = v, flag = true)) {
+          case ((out, _), s) => if (s.flag) out.iterator.map(_ -> s.colour) else Iterator.empty
+        } { (_, s, in) =>
+          val min = in.foldLeft(s.colour)((m, msg) => math.min(m, msg._2))
+          s.copy(colour = min, flag = min < s.colour)
+        }
+        val root = (v: Long, s: Scc) => Scc(s.colour == v, v, s.colour, s.colour == v)
+        verts = phase(coloured, root) {
+          case ((_, in), s) => if (s.flag) in.iterator.map(_ -> s.colour) else Iterator.empty
+        } { (_, s, in) =>
+          if (in.exists(_._2 == s.colour)) Scc(done = true, s.colour, s.colour, flag = true)
+          else s.copy(flag = false)
+        }
+      }
+    }
+    verts.map { case (v, (_, s)) => (v, s.comp) }.toDF("vertex", "component")
   }
 
-  /** Convergent SCC: iteration bound = vertex count, the hard upper bound on
-    * the condensation-DAG depth, so the result can never be the silently
-    * unconverged ids a too-small fixed bound yields. Costs nothing when the
-    * graph converges sooner — GraphX's outer loop exits as soon as every
-    * vertex is finalized (`while (numVertices > 0 && iter < numIter)`,
-    * graphx/lib/StronglyConnectedComponents.scala). The distinct-count is one
-    * tiny shuffle over the edge list, negligible next to the SCC Pregel. */
-  def stronglyConnectedComponents(directed: DataFrame): DataFrame = {
-    val n = directed.select(col("src")).union(directed.select(col("dst")))
-      .distinct().count()
-    stronglyConnectedComponents(directed, math.max(1L, n).min(Int.MaxValue).toInt)
-  }
+  /** Convergent SCC: rounds until every vertex is final. A round finalizes
+    * at least the smallest live vertex, the root of its own colour, so the
+    * result is never the silently unconverged ids a fixed bound can yield. */
+  def stronglyConnectedComponents(directed: DataFrame): DataFrame =
+    stronglyConnectedComponents(directed, Int.MaxValue)
 
   /** G2: PageRank, semantics identical to GraphX staticPageRank: rank₀ = 1.0;
     * rankₖ₊₁ = reset + (1−reset)·Σ rankₖ(neighbor)/deg(neighbor). Isolated
     * vertices keep rank = reset…1.0 per GraphX convention (they receive no
     * contributions).
     *
-    * Scale: one superstep of [[rankKernel]] per iteration, so a run costs the
+    * Scale: one superstep per iteration ([[rankKernel]]), so a run costs the
     * input's own stages, the adjacency shuffle and the result stage plus one
-    * stage per iteration. The DataFrame loop it replaced built one plan
-    * numIter joins deep; AQE ran it as 33 one-task stages at numIter = 10 and
-    * re-planned the remaining plan after each (BillMatch's graph step on a
-    * 4-core host: 12.3 s over 33 stages, now 1.7 s over 14). */
+    * stage per iteration. */
   def pageRankDF(canonical: DataFrame, numIter: Int,
                  resetProb: Double = 0.15): DataFrame =
-    rankKernel(symmetric(canonical).withColumn("weight", lit(1.0)), numIter,
+    rankKernel(canonical.withColumn("weight", lit(1.0)), numIter,
       resetProb, init = _ => 1.0, teleport = _ => resetProb)
 
   /** WEIGHTED PageRank over (src, dst, weight) canonical undirected edges —
@@ -127,91 +262,39 @@ object GraphOps {
     * reduce it to the unweighted form. */
   def pageRankWeightedDF(edges: DataFrame, numIter: Int,
                          resetProb: Double = 0.15): DataFrame =
-    rankKernel(edges.select(col("src"), col("dst"), col("weight"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"),
-          col("weight"))),
-      numIter, resetProb, init = _ => 1.0, teleport = _ => resetProb)
+    rankKernel(edges, numIter, resetProb, init = _ => 1.0, teleport = _ => resetProb)
 
-  /** The superstep kernel of the PageRank family. `sym` holds both directions
-    * of every edge as (src, dst, weight). Vertex v starts at `init(v)`, and
-    * each iteration sets rank(v) = teleport(v) + (1−resetProb)·Σ
-    * rank(u)·w(u,v)/wdeg(u) over its in-edges, with wdeg(u) = Σ w(u,·).
-    *
-    * The adjacency (src → wdeg, out-edges) and the ranks share one
-    * HashPartitioner sized by spark.sql.shuffle.partitions, so an iteration
-    * shuffles its contributions to their destinations once and joins
-    * partition by partition. Each iteration's ranks are rebuilt from the
-    * edge shuffle's and the contribution shuffle's outputs, so lineage never
-    * chains ranks across iterations: nothing is cached or checkpointed, and
-    * a lost block is recomputed from shuffle files. Per-partition hash maps
-    * stand in for `join`/`cogroup`, whose spillable maps cost 4× the task
-    * CPU (q_pagerank at sf0.1 on 4 cores). A vertex sums its contributions in ascending (source,
-    * value) order and its out-weights in ascending (destination, weight)
-    * order, so the ranks are bit-identical at any partition count. */
-  private def rankKernel(sym: DataFrame, numIter: Int, resetProb: Double,
+  /** The PageRank family on [[superstep]], over both directions of every
+    * (src, dst, weight) edge. Vertex v starts at `init(v)`, and each
+    * iteration sets rank(v) = teleport(v) + (1−resetProb)·Σ
+    * rank(u)·w(u,v)/wdeg(u) over its in-edges, with wdeg(u) = Σ w(u,·)
+    * summed in ascending (destination, weight) order. */
+  private def rankKernel(edges: DataFrame, numIter: Int, resetProb: Double,
                          init: Long => Double, teleport: Long => Double): DataFrame = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val links = sym
-      .select(col("src").cast("long"), col("dst").cast("long"), col("weight").cast("double"))
-      .rdd.map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      .partitionBy(part)
-      .mapPartitions(edges => sortedGroups(edges).iterator.map { case (src, out) =>
-        (src, (sumInOrder(out), out)) }, preservesPartitioning = true)
+    val links = adjacency(edges.sparkSession, edges
+        .select(col("src").cast("long"), col("dst").cast("long"), col("weight").cast("double"))
+        .rdd.flatMap(r => Iterator((r.getLong(0), (r.getLong(1), r.getDouble(2))),
+          (r.getLong(1), (r.getLong(0), r.getDouble(2)))))) { out =>
+      val sorted = out.sorted
+      (sumInOrder(sorted), sorted)
+    }
     val damp = 1.0 - resetProb
-    var ranks = links.mapPartitions(_.map { case (v, _) => (v, init(v)) },
-      preservesPartitioning = true)
-    for (_ <- 0 until numIter) {
-      val contribs = links.zipPartitions(ranks) { (adjacency, vertexRanks) =>
-        val rank = vertexRanks.toMap
-        adjacency.flatMap { case (src, (wdeg, out)) =>
-          out.iterator.map { case (dst, w) => (dst, (src, rank(src) * w / wdeg)) }
-        }
-      }.partitionBy(part)
-      ranks = links.zipPartitions(contribs, preservesPartitioning = true) { (adjacency, in) =>
-        val msum = sortedGroups(in).map { case (v, c) => v -> sumInOrder(c) }
-        adjacency.map { case (v, _) => (v, teleport(v) + damp * msum.getOrElse(v, 0.0)) }
-      }
-    }
-    ranks.toDF("vertex", "rank")
+    var ranks = start(links)((v, _) => init(v))
+    for (_ <- 0 until numIter)
+      ranks = superstep(links, ranks) { case (_, (wdeg, out), rank) =>
+        out.iterator.map { case (dst, w) => (dst, rank * w / wdeg) }
+      } { (v, _, _, in) => teleport(v) + damp * sumInOrder(in) }
+    ranks.map { case (v, (_, rank)) => (v, rank) }.toDF("vertex", "rank")
   }
-
-  /** Pairs grouped by key, each group in ascending (id, value) order. */
-  private def sortedGroups(it: Iterator[(Long, (Long, Double))]): Map[Long, Array[(Long, Double)]] =
-    it.toArray.groupMap(_._1)(_._2).map { case (k, group) =>
-      k -> group.sorted(Ordering.Tuple2(Ordering.Long, Ordering.Double.TotalOrdering))
-    }
 
   private def sumInOrder(group: Array[(Long, Double)]): Double =
     group.foldLeft(0.0)(_ + _._2)
 
   /** DuckDB oracle for [[pageRankWeightedDF]]; `edgesSql` must yield canonical
-    * (src, dst, weight) rows. Same unrolled-CTE shape as the unweighted
-    * oracle, with weighted degree and weighted contributions. */
+    * (src, dst, weight) rows. */
   def pageRankWeightedOracleSql(edgesSql: String, numIter: Int,
-                                resetProb: Double = 0.15, digits: Int = 6): String = {
-    val damp = 1.0 - resetProb
-    val iters = (1 to numIter).map { k =>
-      s"""r$k AS (
-        SELECT v.vertex, $resetProb + $damp * COALESCE(m.msum, 0.0) AS rank
-        FROM verts v LEFT JOIN (
-          SELECT s.dst AS vertex, SUM(r.rank * s.weight / d.wdeg) AS msum
-          FROM sym s JOIN r${k - 1} r ON r.vertex = s.src
-                     JOIN wdegs d ON d.vertex = s.src
-          GROUP BY s.dst) m ON m.vertex = v.vertex)"""
-    }.mkString(",\n")
-    s"""
-    WITH e0 AS ($edgesSql),
-    sym AS (SELECT src, dst, weight FROM e0
-            UNION ALL SELECT dst AS src, src AS dst, weight FROM e0),
-    verts AS (SELECT DISTINCT src AS vertex FROM sym),
-    wdegs AS (SELECT src AS vertex, SUM(weight) AS wdeg FROM sym GROUP BY src),
-    r0 AS (SELECT vertex, CAST(1.0 AS DOUBLE) AS rank FROM verts),
-    $iters
-    SELECT vertex, ROUND(rank, $digits) AS rank
-    FROM r$numIter ORDER BY vertex"""
-  }
+                                resetProb: Double = 0.15, digits: Int = 6): String =
+    rankOracleSql(edgesSql, numIter, resetProb, digits, "CAST(1.0 AS DOUBLE)", s"$resetProb")
 
   /** PERSONALIZED PageRank: teleport mass is restricted to the `sources`
     * set (uniformly across it) instead of all vertices — the "similar to
@@ -223,65 +306,58 @@ object GraphOps {
                              numIter: Int, resetProb: Double = 0.15): DataFrame = {
     val inSrc = sources.toSet
     val share = 1.0 / sources.size
-    rankKernel(symmetric(canonical).withColumn("weight", lit(1.0)), numIter,
+    rankKernel(canonical.withColumn("weight", lit(1.0)), numIter,
       resetProb, init = v => if (inSrc(v)) share else 0.0,
       teleport = v => if (inSrc(v)) resetProb * share else 0.0)
   }
 
-  /** DuckDB oracle for [[personalizedPageRankDF]] — the [[pageRankOracleSql]]
-    * unrolled-CTE scheme with the teleport term gated on source membership. */
+  /** DuckDB oracle for [[personalizedPageRankDF]]: the [[pageRankOracleSql]]
+    * scheme with the start rank and the teleport term gated on source
+    * membership. */
   def personalizedPageRankOracleSql(edgesSql: String, sources: Seq[Long],
                                     numIter: Int, resetProb: Double = 0.15,
                                     digits: Int = 6): String = {
-    val damp = 1.0 - resetProb
-    val srcList = sources.mkString(", ")
     val share = s"(CAST(1.0 AS DOUBLE) / ${sources.size})"
-    val iters = (1 to numIter).map { k =>
-      s"""r$k AS (
-        SELECT v.vertex,
-               (CASE WHEN v.vertex IN ($srcList) THEN $resetProb * $share ELSE 0.0 END)
-               + $damp * COALESCE(m.msum, 0.0) AS rank
-        FROM verts v LEFT JOIN (
-          SELECT s.dst AS vertex, SUM(r.rank / d.deg) AS msum
-          FROM sym s JOIN r${k - 1} r ON r.vertex = s.src
-                     JOIN degs d ON d.vertex = s.src
-          GROUP BY s.dst) m ON m.vertex = v.vertex)"""
-    }.mkString(",\n")
-    s"""
-    WITH e0 AS ($edgesSql),
-    sym AS (SELECT src, dst FROM e0 UNION ALL SELECT dst AS src, src AS dst FROM e0),
-    verts AS (SELECT DISTINCT src AS vertex FROM sym),
-    degs AS (SELECT src AS vertex, COUNT(*) AS deg FROM sym GROUP BY src),
-    r0 AS (SELECT vertex,
-                  CASE WHEN vertex IN ($srcList) THEN $share ELSE CAST(0.0 AS DOUBLE) END AS rank
-           FROM verts),
-    $iters
-    SELECT vertex, ROUND(rank, $digits) AS rank
-    FROM r$numIter ORDER BY vertex"""
+    val member = s"vertex IN (${sources.mkString(", ")})"
+    rankOracleSql(unitWeights(edgesSql), numIter, resetProb, digits,
+      s"CASE WHEN $member THEN $share ELSE CAST(0.0 AS DOUBLE) END",
+      s"CASE WHEN $member THEN $resetProb * $share ELSE 0.0 END")
   }
 
-  /** DuckDB oracle for [[pageRankDF]] on the same edge table expression: the
-    * fixed iteration count is UNROLLED into chained CTEs (r0..rN) — plain
-    * aggregations, no recursive-CTE aggregation restrictions. `edgesSql` must
-    * yield canonical (src, dst) rows. Ranks rounded to `digits` on both sides. */
+  /** DuckDB oracle for [[pageRankDF]] on the same edge table expression;
+    * `edgesSql` must yield canonical (src, dst) rows. */
   def pageRankOracleSql(edgesSql: String, numIter: Int,
-                        resetProb: Double = 0.15, digits: Int = 6): String = {
+                        resetProb: Double = 0.15, digits: Int = 6): String =
+    rankOracleSql(unitWeights(edgesSql), numIter, resetProb, digits,
+      "CAST(1.0 AS DOUBLE)", s"$resetProb")
+
+  private def unitWeights(edgesSql: String): String =
+    s"SELECT src, dst, CAST(1.0 AS DOUBLE) AS weight FROM ($edgesSql)"
+
+  /** The PageRank family's oracle: the fixed iteration count UNROLLED into
+    * chained CTEs (r0..rN) — plain aggregations, no recursive-CTE
+    * aggregation restrictions — over canonical (src, dst, weight) rows, with
+    * SQL expressions over `vertex` for the start rank and the teleport term.
+    * Ranks rounded to `digits` on both sides. */
+  private def rankOracleSql(edgesSql: String, numIter: Int, resetProb: Double,
+                            digits: Int, init: String, teleport: String): String = {
     val damp = 1.0 - resetProb
     val iters = (1 to numIter).map { k =>
       s"""r$k AS (
-        SELECT v.vertex, $resetProb + $damp * COALESCE(m.msum, 0.0) AS rank
+        SELECT vertex, ${teleport} + $damp * COALESCE(m.msum, 0.0) AS rank
         FROM verts v LEFT JOIN (
-          SELECT s.dst AS vertex, SUM(r.rank / d.deg) AS msum
+          SELECT s.dst AS vertex, SUM(r.rank * s.weight / d.wdeg) AS msum
           FROM sym s JOIN r${k - 1} r ON r.vertex = s.src
-                     JOIN degs d ON d.vertex = s.src
-          GROUP BY s.dst) m ON m.vertex = v.vertex)"""
+                     JOIN wdegs d ON d.vertex = s.src
+          GROUP BY s.dst) m USING (vertex))"""
     }.mkString(",\n")
     s"""
     WITH e0 AS ($edgesSql),
-    sym AS (SELECT src, dst FROM e0 UNION ALL SELECT dst AS src, src AS dst FROM e0),
+    sym AS (SELECT src, dst, weight FROM e0
+            UNION ALL SELECT dst AS src, src AS dst, weight FROM e0),
     verts AS (SELECT DISTINCT src AS vertex FROM sym),
-    degs AS (SELECT src AS vertex, COUNT(*) AS deg FROM sym GROUP BY src),
-    r0 AS (SELECT vertex, CAST(1.0 AS DOUBLE) AS rank FROM verts),
+    wdegs AS (SELECT src AS vertex, SUM(weight) AS wdeg FROM sym GROUP BY src),
+    r0 AS (SELECT vertex, $init AS rank FROM verts),
     $iters
     SELECT vertex, ROUND(rank, $digits) AS rank
     FROM r$numIter ORDER BY vertex"""
@@ -289,45 +365,24 @@ object GraphOps {
 
   /** Synchronous label propagation (community detection) with a DETERMINISTIC
     * update: labelₖ₊₁(v) = the label most frequent among v's neighbors'
-    * labelₖ, ties broken by SMALLEST label; isolated vertices keep their
-    * label (= their own id, the initialization). GraphX's LabelPropagation
+    * labelₖ, ties broken by SMALLEST label; a vertex with no message keeps
+    * its label (= its own id, the initialization). GraphX's LabelPropagation
     * breaks ties by hash-map iteration order — irreproducible across runs —
-    * so this DataFrame form is the one that can be oracle-checked and the
-    * one a pipeline should trust. Integer-exact throughout.
+    * so this form is the one that can be oracle-checked and the one a
+    * pipeline should trust. Integer-exact throughout.
     *
-    * Scale: per iteration, one join labels⋈edges + one two-key groupBy + one
-    * per-vertex argmax AGGREGATION (min(struct(-c, label)) — partial
-    * map-side, no per-vertex sort) — all keyed on vertex id (AQE reuses the
-    * partitioning). On long runs (numIter > 16) the labels are
-    * localCheckpoint-ed every 8 iterations: the logical plan otherwise grows
-    * linearly with numIter. */
+    * Scale: one superstep per iteration, the messages being neighbour
+    * labels; no job between iterations. */
   def labelPropagationDF(canonical: DataFrame, numIter: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sym = symmetric(canonical)
-    val vertices = sym.select(col("src").as("vertex")).distinct()
-    var labels = vertices.withColumn("label", col("vertex"))
-    for (i <- 0 until numIter) {
-      val counts = sym
-        .join(labels.withColumnRenamed("vertex", "dst"), "dst")
-        .groupBy(col("src").as("vertex"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      // per-vertex argmax as min(struct(-c, label)) — struct ordering gives
-      // (largest count, then smallest label), exactly the window's
-      // (c desc, label asc) rn=1 row, but as a partial-aggregating hash agg
-      // instead of a per-vertex sort: high-degree vertices never buffer
-      // their full neighbor-label census through an exchange (r9; c ≥ 1 so
-      // the negation cannot overflow)
-      val upd = counts
-        .groupBy("vertex")
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("__m"))
-        .select(col("vertex"), col("__m.label").as("__new"))
-      labels = labels
-        .join(upd, Seq("vertex"), "left")
-        .select(col("vertex"), coalesce(col("__new"), col("label")).as("label"))
-      if (numIter > 16 && (i + 1) % 8 == 0 && i + 1 < numIter)
-        labels = labels.localCheckpoint()
-    }
-    labels
+    val adj = neighbours(canonical)
+    var labels = start(adj)((v, _) => v)
+    for (_ <- 0 until numIter)
+      labels = superstep(adj, labels) { (_, nbrs, label) => nbrs.iterator.map(_ -> label) } {
+        (_, _, label, in) =>
+          if (in.isEmpty) label
+          else in.groupMapReduce(_._2)(_ => 1)(_ + _).minBy { case (l, n) => (-n, l) }._1
+      }
+    labels.map { case (v, (_, label)) => (v, label) }.toDF("vertex", "label")
   }
 
   /** DuckDB oracle for [[labelPropagationDF]]: the fixed iteration count
@@ -360,48 +415,51 @@ object GraphOps {
     FROM l$numIter ORDER BY vertex"""
   }
 
-  /** k-core membership by iterative peeling: repeatedly drop vertices whose
-    * degree WITHIN the surviving subgraph is < k, until fixpoint. The
-    * distributed-standard algorithm — each round is one join+agg keyed on
-    * vertex id; rounds are bounded by the longest removal cascade, and the
-    * loop THROWS if `maxRounds` is hit without converging rather than
-    * silently returning a non-core (the SCC numIter lesson from round 3).
-    * State is localCheckpoint-ed per round: the survivor set feeds the next
-    * round's plan twice (once per edge endpoint), so untruncated lineage
-    * would double per round. */
-  def kCoreDF(canonical: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
-    val sym = symmetric(canonical)
-    var surv = sym.select(col("src").as("vertex")).distinct().localCheckpoint()
-    var n = surv.count()
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      val next = sym
-        .join(surv.withColumnRenamed("vertex", "src"), "src")
-        .join(surv.withColumnRenamed("vertex", "dst"), "dst")
-        .groupBy(col("src").as("vertex")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("vertex")
-        .localCheckpoint()
-      val m = next.count()
-      changed = m != n
-      n = m; surv = next; round += 1
+  /** k-core peel state: the live degree (neighbours not yet peeled), the
+    * largest k whose core holds the vertex so far, and whether it left the
+    * core being peeled in the last round. */
+  private final case class Peel(deg: Int, core: Int, left: Boolean)
+
+  /** Peels the (k−1)-core (vertices with core = k − 1) to the k-core, to a
+    * fixpoint: round 1 drops the vertices of live degree < k, and each
+    * later round is one superstep in which only the vertices that left send.
+    * THROWS if `maxRounds` rounds end without a fixpoint rather than
+    * silently returning a non-core (the SCC numIter lesson from round 3). */
+  private def peel(adj: RDD[(Long, Array[Long])], verts: Vertices[Array[Long], Peel],
+                   k: Int, maxRounds: Int): Vertices[Array[Long], Peel] = {
+    val first = verts.map { case (v, (nbrs, p)) =>
+      (v, (nbrs, if (p.core != k - 1) p.copy(left = false)
+                 else if (p.deg < k) p.copy(left = true) else p.copy(core = k, left = false)))
     }
-    require(!changed, s"k-core peel did not converge in $maxRounds rounds")
-    surv
+    toFixpoint(first, maxRounds - 1, s"k-core peel did not converge in $maxRounds rounds")(_.left) {
+      superstep(adj, _) { (_, nbrs, p) => if (p.left) nbrs.iterator.map(_ -> 1) else Iterator.empty } {
+        (_, _, p, in) =>
+          val deg = p.deg - in.length
+          if (p.core == k && deg < k) Peel(deg, k - 1, left = true) else Peel(deg, p.core, left = false)
+      }
+    }
+  }
+
+  /** k-core membership: the vertices left after repeatedly dropping those
+    * whose degree WITHIN the surviving subgraph is < k. Rounds are bounded
+    * by the longest removal cascade; per round, one superstep and one count
+    * job. */
+  def kCoreDF(canonical: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
+    val adj = neighbours(canonical)
+    peel(adj, start(adj)((_, nbrs) => Peel(nbrs.length, k - 1, left = false)), k, maxRounds)
+      .filter(_._2._2.core == k).map(x => Tuple1(x._1)).toDF("vertex")
   }
 
   /** Coreness (max k such that the vertex survives the k-core peel) for
-    * k = 1..maxK; vertices outside every core report 0. maxK peels — fine for
-    * the small k a curation pipeline asks for; a full decomposition would
-    * switch to the degeneracy-ordering algorithm. */
+    * k = 1..maxK; vertices outside every core report 0. k-cores are nested,
+    * so the k+1 peel starts from the k-core's survivors: maxK peels in one
+    * pass, fine for the small k a curation pipeline asks for; a full
+    * decomposition would switch to the degeneracy-ordering algorithm. */
   def corenessDF(canonical: DataFrame, maxK: Int): DataFrame = {
-    val verts = symmetric(canonical).select(col("src").as("vertex")).distinct()
-    val cores = (1 to maxK)
-      .map(k => kCoreDF(canonical, k).withColumn("k", lit(k.toLong)))
-      .reduce(_ unionByName _)
-    verts
-      .join(cores.groupBy("vertex").agg(max("k").as("c")), Seq("vertex"), "left")
-      .select(col("vertex"), coalesce(col("c"), lit(0L)).as("coreness"))
+    val adj = neighbours(canonical)
+    (1 to maxK).foldLeft(start(adj)((_, nbrs) => Peel(nbrs.length, 0, left = false)))(
+        peel(adj, _, _, maxRounds = 50))
+      .map { case (v, (_, p)) => (v, p.core.toLong) }.toDF("vertex", "coreness")
   }
 
   /** DuckDB oracle for [[corenessDF]]: for each k the peel is unrolled to a
@@ -446,74 +504,40 @@ object GraphOps {
     * the arithmetic — an L2 norm would add a sqrt-of-sum whose rounding
     * differences compound across iterations.
     *
-    * Scale: per iteration two shuffled join+aggs keyed on vertex id (AQE
-    * reuses the partitioning) plus two single-row max aggregates that
-    * broadcast back — no driver collect. The state is localCheckpoint-ed
-    * EVERY iteration: each normalization references its
-    * raw-score frame twice (score and max-of-score), so without truncation
-    * the logical plan QUADRUPLES per iteration — 4^k subtrees hang Catalyst
-    * analysis long before execution. One eager materialization of the
-    * (vertex, hub, auth) state per iteration is the GraphX per-superstep
-    * caching pattern, and keeps every iteration's plan constant-size. */
+    * Scale: each half-step is one superstep (hub along out-edges, auth
+    * along in-edges) that leaves raw sums; their max is one small reduce
+    * job, applied in the next send. */
   def hitsDF(directed: DataFrame, numIter: Int): DataFrame = {
-    // cached (r13): the loop reads the edge frame TWICE per iteration (hub
-    // contribution join + auth contribution join) — 2·numIter recomputes of
-    // whatever lineage produced the edges (q_hits derives them from a
-    // customer self-join) without the cache
-    val edges = directed.select(col("src"), col("dst")).cache()
-    val vertices = edges.select(col("src").as("vertex"))
-      .union(edges.select(col("dst"))).distinct().cache()
-    var state = vertices.withColumn("hub", lit(1.0))
-      .withColumn("auth", lit(1.0))
-    // r14 (guide §2.4/§5 driver): each normalization used to run as
-    // crossJoin(broadcast(raw.agg(max))) — a broadcast-build JOB that
-    // replayed the half-iteration's join+agg lineage, after which the main
-    // flow computed the same frame AGAIN (2-3 evaluations of every
-    // edge-scale join per iteration). Now the raw frame is localCheckpointed
-    // once (one evaluation), the max is a one-row driver scalar over the
-    // materialized frame, and the division applies it as a literal —
-    // identical doubles in identical order (same sums, same raw/max
-    // division, same `> 0` guard with an empty frame degenerating to 0.0),
-    // so the ROUND(6) oracle gate is unaffected.
-    def scalarMax(df: DataFrame, c: String): Double =
-      df.agg(max(c)).head.get(0) match {
-        case null      => 0.0
-        case d: Double => d
-      }
+    val adj = directedNeighbours(directed)
+    // (raw hub, auth) until the last line; the first hub is 1.0 / 1.0
+    var scores = start(adj)((_, _) => (1.0, 1.0))
+    var hubMax = 1.0
     for (_ <- 0 until numIter) {
-      val hub = state.select(col("vertex"), col("hub"))
-      val araw = vertices
-        .join(edges.join(hub.withColumnRenamed("vertex", "src"), "src")
-                .groupBy(col("dst").as("vertex")).agg(sum("hub").as("s")),
-              Seq("vertex"), "left")
-        .select(col("vertex"), coalesce(col("s"), lit(0.0)).as("araw"))
-        .localCheckpoint()
-      val amax = scalarMax(araw, "araw")
-      val auth = araw.select(col("vertex"),
-        when(lit(amax) > 0, col("araw") / lit(amax)).otherwise(0.0)
-          .as("auth"))
-      val hraw = vertices
-        .join(edges.join(auth.withColumnRenamed("vertex", "dst"), "dst")
-                .groupBy(col("src").as("vertex")).agg(sum("auth").as("s")),
-              Seq("vertex"), "left")
-        .select(col("vertex"), coalesce(col("s"), lit(0.0)).as("hraw"))
-        .localCheckpoint()
-      val hmax = scalarMax(hraw, "hraw")
-      val hub1 = hraw.select(col("vertex"),
-        when(lit(hmax) > 0, col("hraw") / lit(hmax)).otherwise(0.0)
-          .as("hub"))
-      state = hub1.join(auth, "vertex").localCheckpoint()
+      val hm = hubMax
+      val rawAuth = superstep(adj, scores) { case (_, (out, _), (hub, _)) =>
+        out.iterator.map(_ -> normalized(hub, hm))
+      } { case (_, _, (hub, _), in) => (normalized(hub, hm), sumInOrder(in)) }
+      val am = rawAuth.map(_._2._2._2).fold(0.0)(math.max)
+      scores = superstep(adj, rawAuth) { case (_, (_, in), (_, auth)) =>
+        in.iterator.map(_ -> normalized(auth, am))
+      } { case (_, _, (_, auth), in) => (sumInOrder(in), normalized(auth, am)) }
+      hubMax = scores.map(_._2._2._1).fold(0.0)(math.max)
     }
-    state.select(col("vertex"), col("hub"), col("auth"))
+    val hm = hubMax
+    scores.map { case (v, (_, (hub, auth))) => (v, normalized(hub, hm), auth) }
+      .toDF("vertex", "hub", "auth")
   }
+
+  /** `raw / max`, or 0.0 when the max is not positive (an empty frame). */
+  private def normalized(raw: Double, max: Double): Double =
+    if (max > 0) raw / max else 0.0
 
   /** DuckDB oracle for [[hitsDF]]: iterations unrolled into chained CTEs
     * (ar/a/hr/h per step), max-normalized exactly like the DataFrame loop;
     * scores rounded to `digits` on both sides. Every CTE is AS MATERIALIZED:
     * each normalization references its raw frame twice, so DuckDB's default
-    * inlining would expand the chain 4^numIter-fold (the exact blowup
-    * [[hitsDF]] truncates with per-iteration localCheckpoint) — enough
-    * re-opened scans to exhaust the fd limit before it OOMs. */
+    * inlining would expand the chain 4^numIter-fold — enough re-opened
+    * scans to exhaust the fd limit before it OOMs. */
   def hitsOracleSql(edgesSql: String, numIter: Int, digits: Int = 6): String = {
     val iters = (1 to numIter).map { k =>
       s"""ar$k AS MATERIALIZED (
@@ -561,11 +585,7 @@ object GraphOps {
     * removed with a LEFT ANTI join on the canonical pair.
     */
   def linkPrediction(canonical: DataFrame): DataFrame = {
-    // the symmetric adjacency feeds FOUR plan branches (both join sides,
-    // the degree table, and — via canonical — the anti-join); persist it so
-    // the edge derivation computes once instead of replanning per branch
     val sym = symmetric(canonical)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = sym.groupBy(col("src").as("vertex"))
       .agg(count(lit(1)).as("deg"))
     val left = sym.select(col("src").as("w"), col("dst").as("u"))

@@ -3,7 +3,7 @@ package graft.queries
 import graft.QueryDef
 import graft.graph.GraphOps
 import graft.io.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph operators (SURVEY G1-G4) over a deterministic edge set derived from
@@ -18,15 +18,15 @@ import org.apache.spark.sql.functions._
   */
 object GraphQueries {
 
-  /** (src, dst) canonical edges: same nation, 0 < keyDiff <= 2. */
-  private[graft] def customerEdges(s: SparkSession, d: String): DataFrame = {
+  /** (src, dst) canonical edges: same nation, src < dst, and `near(src,
+    * dst)` on the two keys — by default the braided chain, keyDiff <= 2. */
+  private[graft] def customerEdges(s: SparkSession, d: String,
+      near: (Column, Column) => Column = (a, b) => b <= a + 2): DataFrame = {
     val c = Tables.customer(s, d).select("c_custkey", "c_nationkey")
-    val a = c.alias("a")
-    val b = c.alias("b")
-    a.join(b,
+    c.alias("a").join(c.alias("b"),
         col("a.c_nationkey") === col("b.c_nationkey") &&
         col("b.c_custkey") > col("a.c_custkey") &&
-        col("b.c_custkey") <= col("a.c_custkey") + 2)
+        near(col("a.c_custkey"), col("b.c_custkey")))
       .select(col("a.c_custkey").as("src"), col("b.c_custkey").as("dst"))
   }
 
@@ -72,7 +72,7 @@ object GraphQueries {
         .orderBy("vertex")
     },
 
-    // ----- G4: triangle count per vertex (GraphX TriangleCount; integer-exact)
+    // ----- G4: triangle count per vertex (forward-adjacency supersteps; integer-exact)
     "q_triangles" -> QueryDef.sql(s"""
       WITH e AS ($edgesSql),
       tri AS (SELECT a.src AS x, a.dst AS y, b.dst AS z
@@ -132,8 +132,9 @@ object GraphQueries {
         .orderBy("vertex")
     },
 
-    // ----- G-extension: connected components (GraphX; component id = min
-    // vertex id, oracle = recursive reachability closure with min-root rollup)
+    // ----- G-extension: connected components (min-label supersteps; component
+    // id = min vertex id, oracle = recursive reachability closure with
+    // min-root rollup)
     "q_connected_components" -> QueryDef.sql(s"""
       WITH RECURSIVE e AS ($edgesSql),
       sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
@@ -149,12 +150,13 @@ object GraphQueries {
     },
 
     // ----- G-extension: strongly connected components over a DIRECTED graph
-    // (GraphX SCC; component id = min vertex id in the SCC). Direction: the
-    // key-diff edges point low→high; every third edge (deterministic (src+dst)
-    // mod rule) also gets a back edge, closing cycles of varying length along
-    // each nation chain. Oracle = recursive reachability closure + mutual-
-    // reachability rollup, bounded to the same small subgraph as shortest
-    // paths so the closure stays gate-sized at any SF.
+    // (GraphX's algorithm on supersteps; component id = min vertex id in the
+    // SCC). Direction: the key-diff edges point low→high; every third edge
+    // (deterministic (src+dst) mod rule) also gets a back edge, closing
+    // cycles of varying length along each nation chain. Oracle = recursive
+    // reachability closure + mutual-reachability rollup, bounded to the same
+    // small subgraph as shortest paths so the closure stays gate-sized at
+    // any SF.
     "q_scc" -> QueryDef.sql(s"""
       WITH RECURSIVE e AS (
         $edgesSql AND b.c_custkey < $SP_MAX_KEY AND a.c_custkey < $SP_MAX_KEY),
@@ -186,7 +188,7 @@ object GraphQueries {
     // ----- G-extension: label propagation community detection — synchronous
     // LPA with the deterministic (count DESC, label ASC) tie-break, 4
     // iterations. GraphX's LabelPropagation tie-breaks on hash-map order and
-    // is irreproducible; the DataFrame form is exact, so the oracle unrolls
+    // is irreproducible; the superstep form is exact, so the oracle unrolls
     // the same fixed iterations (like q_pagerank). Communities here converge
     // toward the per-nation chain segments.
     "q_label_propagation" -> QueryDef.sql(
@@ -213,16 +215,8 @@ object GraphQueries {
               OR (b.c_custkey = a.c_custkey + 3 AND a.c_custkey % 3 = 0))
         WHERE a.c_custkey < $SP_MAX_KEY AND b.c_custkey < $SP_MAX_KEY""",
         maxK = 4, rounds = 12)) { (s, d) =>
-      val c = Tables.customer(s, d).select("c_custkey", "c_nationkey")
-      val a = c.alias("a"); val b = c.alias("b")
-      val edges = a.join(b,
-          col("a.c_nationkey") === col("b.c_nationkey") &&
-          col("b.c_custkey") > col("a.c_custkey") &&
-          (col("b.c_custkey") <= col("a.c_custkey") + 2 ||
-           (col("b.c_custkey") === col("a.c_custkey") + 3 &&
-            col("a.c_custkey") % 3 === 0)))
-        .filter(col("a.c_custkey") < SP_MAX_KEY && col("b.c_custkey") < SP_MAX_KEY)
-        .select(col("a.c_custkey").as("src"), col("b.c_custkey").as("dst"))
+      val edges = customerEdges(s, d, (a, b) =>
+        (b <= a + 2 || (b === a + 3 && a % 3 === 0)) && a < SP_MAX_KEY && b < SP_MAX_KEY)
       GraphOps.corenessDF(GraphOps.canonicalEdges(edges, "src", "dst"), maxK = 4)
         .orderBy("vertex")
     },
@@ -239,7 +233,7 @@ object GraphQueries {
         .orderBy("vertex")
     },
 
-    // ----- G3: landmark shortest paths (GraphX ShortestPaths; integer-exact;
+    // ----- G3: landmark shortest paths (BFS supersteps; integer-exact;
     // oracle = recursive BFS with UNION dedup, depth-bounded over the small
     // subgraph; landmarks data-derived, never pinned — see SP_WIN_MAX_KEY doc)
     "q_shortest_paths" -> QueryDef.sql(s"""
@@ -260,15 +254,8 @@ object GraphQueries {
         WHERE b.d < $SP_DEPTH)
       SELECT vertex, landmark, MIN(d) AS distance
       FROM bfs GROUP BY vertex, landmark ORDER BY vertex, landmark""") { (s, d) =>
-      val c = Tables.customer(s, d).select("c_custkey", "c_nationkey")
-      val a = c.alias("a"); val b = c.alias("b")
-      val raw = a.join(b,
-          col("a.c_nationkey") === col("b.c_nationkey") &&
-          col("b.c_custkey") > col("a.c_custkey") &&
-          col("b.c_custkey") <= col("a.c_custkey") + SP_KEY_WINDOW)
-        .filter(col("a.c_custkey") < SP_WIN_MAX_KEY &&
-          col("b.c_custkey") < SP_WIN_MAX_KEY)
-        .select(col("a.c_custkey").as("src"), col("b.c_custkey").as("dst"))
+      val raw = customerEdges(s, d, (a, b) =>
+        b <= a + SP_KEY_WINDOW && a < SP_WIN_MAX_KEY && b < SP_WIN_MAX_KEY)
       val edges = GraphOps.canonicalEdges(raw, "src", "dst")
       // landmarks = two smallest edge endpoints (bounded driver scalar: 2 rows)
       val landmarks = GraphOps.symmetric(edges)
@@ -290,13 +277,7 @@ object GraphQueries {
     "q_link_prediction" -> QueryDef.sql(
       GraphOps.linkPredictionOracleSql(lpEdgesSql) + "\n    ORDER BY u, v") {
       (s, d) =>
-      val c = Tables.customer(s, d).select("c_custkey", "c_nationkey")
-      val a = c.alias("a"); val b = c.alias("b")
-      val raw = a.join(b,
-          col("a.c_nationkey") === col("b.c_nationkey") &&
-          col("b.c_custkey") > col("a.c_custkey") &&
-          col("b.c_custkey") <= col("a.c_custkey") + LP_KEY_WINDOW)
-        .select(col("a.c_custkey").as("src"), col("b.c_custkey").as("dst"))
+      val raw = customerEdges(s, d, (a, b) => b <= a + LP_KEY_WINDOW)
       GraphOps.linkPrediction(GraphOps.canonicalEdges(raw, "src", "dst"))
         .orderBy("u", "v")
     }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 /** The runnable [[BillMatch]] pipeline (k-means blocking) on the shared
   * session: the graph output ranks exactly the top-K pair endpoints, every
   * rank is a finite positive number, and the session is still usable after
-  * the run. */
+  * the run, with no RDD or plan left cached. */
 class BillMatchSpec extends SparkSpec {
 
   test("kmeans run writes a graph over exactly the top-K endpoints and keeps the session") {
@@ -14,8 +14,19 @@ class BillMatchSpec extends SparkSpec {
     finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
+  /** Persisted RDD ids and the CacheManager entry count, as in
+    * [[StatelessRegistrySpec]]. */
+  private def cachedState: (Set[Int], Int) = (
+    spark.sparkContext.getPersistentRDDs.keySet.toSet,
+    org.apache.spark.sql.graft.CacheProbe.entries(spark))
+
   private def check(out: String): Unit = {
+    val before = cachedState
     BillMatch.run(spark, Array(sfDir, out, "cosine", "8", "100", "kmeans"))
+    val after = cachedState
+    assert((after._1 -- before._1).isEmpty && after._2 == before._2,
+      s"the run persisted RDDs ${after._1 -- before._1} or changed the cache " +
+        s"entries from ${before._2} to ${after._2}")
 
     val pairs = spark.read.parquet(s"$out/pairs.parquet")
       .select("pk1", "pk2").collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -55,6 +55,36 @@ class EdgeCasesSpec extends SparkSpec {
     assert(GraphOps.triangleCounts(canonical).count() == 0)
     assert(GraphOps.pageRankDF(canonical, 3).count() == 0)
     assert(GraphOps.connectedComponents(canonical).count() == 0)
+    assert(GraphOps.hitsDF(none, 3).count() == 0)
+    assert(GraphOps.labelPropagationDF(canonical, 3).count() == 0)
+    assert(GraphOps.kCoreDF(canonical, 2).count() == 0)
+    assert(GraphOps.corenessDF(canonical, 3).count() == 0)
+    assert(GraphOps.shortestPathLengths(canonical, Seq(42L)).count() == 0)
+    assert(GraphOps.stronglyConnectedComponents(none).count() == 0)
+  }
+
+  test("graph operators on a single edge") {
+    val edge = Seq((3L, 9L)).toDF("src", "dst")
+    val canonical = GraphOps.canonicalEdges(edge, "src", "dst")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[List[Any]] =
+      df.collect().map(_.toSeq.toList).toSet
+    assert(rows(GraphOps.triangleCounts(canonical)) == Set(List(3L, 0), List(9L, 0)))
+    val ranks = GraphOps.pageRankDF(canonical, 3).as[(Long, Double)].collect().toMap
+    assert(ranks.keySet == Set(3L, 9L) && ranks.values.forall(r => math.abs(r - 1.0) < 1e-12))
+    assert(rows(GraphOps.connectedComponents(canonical)) == Set(List(3L, 3L), List(9L, 3L)))
+    // one hub, one authority; the other sides drop to 0
+    assert(rows(GraphOps.hitsDF(edge, 3)) == Set(List(3L, 1.0, 0.0), List(9L, 0.0, 1.0)))
+    // the synchronous swap: 3 labels an odd number of rounds later as 9
+    assert(rows(GraphOps.labelPropagationDF(canonical, 3)) == Set(List(3L, 9L), List(9L, 3L)))
+    assert(rows(GraphOps.kCoreDF(canonical, 1)) == Set(List(3L), List(9L)))
+    assert(GraphOps.kCoreDF(canonical, 2).count() == 0)
+    assert(rows(GraphOps.corenessDF(canonical, 3)) == Set(List(3L, 1L), List(9L, 1L)))
+    assert(rows(GraphOps.shortestPathLengths(canonical, Seq(9L, 42L))) ==
+      Set(List(9L, 9L, 0), List(3L, 9L, 1)))
+    // a one-way edge is two SCCs; a two-way edge is one
+    assert(rows(GraphOps.stronglyConnectedComponents(edge)) == Set(List(3L, 3L), List(9L, 9L)))
+    val both = edge.unionByName(Seq((9L, 3L)).toDF("src", "dst"))
+    assert(rows(GraphOps.stronglyConnectedComponents(both)) == Set(List(3L, 3L), List(9L, 3L)))
   }
 
   test("text ops on empty strings") {

@@ -4,7 +4,7 @@ package graft
   * RDD and no cached plan to the session, and a second run gives
   * the same result as the first. The queries cover both registry
   * featurizations (TF-IDF and hashed counts), the seeded k-means fit and
-  * the three PageRank operators.
+  * every graph operator.
   * The test session is shared across suites, so every check compares
   * before with after rather than against zero. Results compare as row
   * count plus Verify's non-float checksum — the pin gate's notion of
@@ -14,15 +14,17 @@ class StatelessRegistrySpec extends SparkSpec {
 
   /** Persisted RDD ids and the CacheManager entry count. Ids, not a count:
     * the context cleaner may unpersist another suite's garbage-collected
-    * RDDs (GraphX graphs) while a query runs, and that is not the query's
-    * state. */
+    * RDDs (the GraphX graphs of the parity specs) while a query runs, and
+    * that is not the query's state. */
   private def cachedState: (Set[Int], Int) = (
     spark.sparkContext.getPersistentRDDs.keySet.toSet,
     org.apache.spark.sql.graft.CacheProbe.entries(spark))
 
   for (name <- Seq("q_tfidf_features", "q_kmeans_blocks", "q_dimsum",
                    "q_billmatch", "q_pagerank", "q_pagerank_weighted",
-                   "q_pagerank_personalized"))
+                   "q_pagerank_personalized", "q_hits", "q_kcore",
+                   "q_label_propagation", "q_triangles", "q_connected_components",
+                   "q_shortest_paths", "q_scc", "q_link_prediction"))
     test(s"$name leaves no cached state and repeats its result") {
       val runs = (1 to 2).map { run =>
         val before = cachedState
