@@ -45,7 +45,7 @@ object CorpusBuild {
   }
 
   /** The full gated/deduped/decontaminated corpus with split labels.
-    * Exposed for the spec; `main` writes its outputs. */
+    * Exposed for the spec; `run` writes its outputs. */
   def build(spark: SparkSession, sfDir: String, cfg: Config = Config()): DataFrame = {
     // NOT spread (measured r10): the pipeline's stages shuffle early (dedup
     // sketch band keys, gram explode into broadcast-join), so Tables.spread's
@@ -94,13 +94,18 @@ object CorpusBuild {
   }
 
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local()
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** The whole build on a caller-owned session, which stays open. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir  = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/corpusbuild_out")
     val cfg = Config(
       minTok = args.lift(2).map(_.toInt).getOrElse(10),
       maxTok = args.lift(3).map(_.toInt).getOrElse(1000),
       jaccardThreshold = args.lift(4).map(_.toDouble).getOrElse(0.8))
-    val spark = GraftSession.local()
 
     val corpus = build(spark, sfDir, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -115,6 +120,5 @@ object CorpusBuild {
     println(s"[corpusbuild] wrote $outDir/corpus.parquet (partitioned by split)")
     report.collect().foreach(r => println(s"[corpusbuild] $r"))
     corpus.unpersist()
-    spark.stop()
   }
 }

@@ -45,18 +45,24 @@ object MinHashDedup {
   }
 
   /** Distinct shingle hash values for a text column: xxhash64 of each w-token
-    * shingle, reduced to [0, P) so downstream affine hashes cannot overflow. */
-  def shingleHashes(text: Column, w: Int): Column =
-    array_distinct(transform(
-      TextOps.ngrams(TextOps.tokens(text), w),
-      s => pmod(xxhash64(s), lit(P))))
+    * shingle, reduced to [0, P) so downstream affine hashes cannot overflow.
+    * First-occurrence order. One native pass per row
+    * ([[graft.expressions.ShingleHashes]]): no lambda, so the shingles are
+    * built once per row and shared with [[shingleIds]] in a projection. */
+  def shingleHashes(text: Column, w: Int): Column = shingleKernel(text, w, Some(P))
 
   /** Distinct FULL-64-bit shingle ids — used for the exact-Jaccard verify
     * step, where the 31-bit signature domain would admit ~2^-31 per-pair
     * cross-collisions that perturb |∩|/|∪| (the signature path tolerates
-    * those; the reported exact jac should not). */
-  def shingleIds(text: Column, w: Int): Column =
-    array_distinct(transform(TextOps.ngrams(TextOps.tokens(text), w), xxhash64(_)))
+    * those; the reported exact jac should not). Same kernel as
+    * [[shingleHashes]] without the `pmod`. */
+  def shingleIds(text: Column, w: Int): Column = shingleKernel(text, w, None)
+
+  private def shingleKernel(text: Column, w: Int, p: Option[Long]): Column =
+    org.apache.spark.sql.graft.bridge.column(
+      graft.expressions.ShingleHashes(
+        org.apache.spark.sql.graft.bridge.expression(
+          TextOps.ngrams(TextOps.tokens(text), w)), p))
 
   /** MinHash signature (array<long> of length numHashes) from shingle hashes:
     * min over shingles of (a_k·h + b_k) mod p. Native single-pass codegen
@@ -73,12 +79,15 @@ object MinHashDedup {
   }
 
   /** (band index, band hash) rows for banded LSH: signature split into
-    * `bands` equal slices, each hashed to one bucket key. */
-  def bandHashes(sig: Column, bands: Int, numHashes: Int): Column = {
-    val r = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("band"), xxhash64(slice(sig, b * r + 1, lit(r))).as("bh")))
-  }
+    * `bands` slices of `numHashes / bands` hashes (a remainder is unused),
+    * each hashed to one bucket key with Spark's `xxhash64`. A native kernel
+    * ([[graft.expressions.BandHashes]]), not a per-band lambda: CollapseProject
+    * would inline the whole sketch chain into the lambda body, recomputing
+    * every signature once per band. */
+  def bandHashes(sig: Column, bands: Int, numHashes: Int): Column =
+    org.apache.spark.sql.graft.bridge.column(
+      graft.expressions.BandHashes(
+        org.apache.spark.sql.graft.bridge.expression(sig), bands, numHashes / bands))
 
   /** The reusable per-document dedup sketch: `(__id, __sids, __bands)` —
     * verify shingle-id sets plus banded signature bucket keys, no raw text.
@@ -119,7 +128,9 @@ object MinHashDedup {
     val prepared = sketch(df, cfg)
       // persisted (spill-safe): four plan branches reuse this frame — the two
       // bucket-join sides and the two set re-joins — and Catalyst cannot
-      // share an uncached subplan across them (measured 27x slower uncached).
+      // share an uncached subplan across them. The gain is small at test
+      // scale: q_minhash_dedup collect() at sf0.1 (4 cores, best of 4)
+      // 1.32 s cached vs 1.36 s uncached.
       // Sketch rows are bounded (ids + hashes + shingle-id sets, no raw text).
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 

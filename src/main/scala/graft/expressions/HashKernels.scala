@@ -1,9 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
 /** Single-pass codegen'd hash-sketch kernels.
   *
@@ -14,6 +16,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * loop — identical arithmetic, so signatures/buckets are bit-identical — and
   * run inside whole-stage codegen. Sketch computation is the map-side cost of
   * dedup at 100 TB; this is the difference between scan-bound and CPU-bound.
+  *
+  * [[ShingleHashes]] and [[BandHashes]] keep the MinHash sketch free of
+  * higher-order functions. CollapseProject inlines the projections beneath a
+  * lambda into its body, where nothing is shared: a band lambda over the
+  * signature tokenizes, shingles, hashes and signs every document once PER
+  * BAND, interpreted (`ArrayTransform` is CodegenFallback). Without a
+  * lambda each row is sketched once, in generated code. Both replay Spark's
+  * `xxhash64` (seed 42) exactly; HashKernelsSpec pins them against the
+  * lambda forms under CODEGEN_ONLY and NO_CODEGEN, and PlanShapeSpec keeps
+  * lambdas out of the sketch plan.
   */
 
 /** All-k MinHash signature over 31-bit-reduced shingle hashes:
@@ -70,6 +82,111 @@ case class MinHashSignature(child: Expression, as: Seq[Long], bs: Seq[Long], p: 
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Distinct `xxhash64` of each element of a string array (the w-token
+  * shingles), optionally reduced `pmod p`, in first-occurrence order — the
+  * lambda-free `array_distinct(transform(grams, s => pmod(xxhash64(s), p)))`
+  * (`p` = None drops the `pmod`). Element nullability follows the lambda
+  * form (Spark's `pmod` is nullable, `xxhash64` is not), so the column type
+  * is unchanged; no element is ever null. */
+case class ShingleHashes(child: Expression, p: Option[Long]) extends UnaryExpression {
+  require(p.forall(_ > 0))
+  override def dataType: DataType = ArrayType(LongType, containsNull = p.isDefined)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "graft_shingle_hashes"
+
+  override def nullSafeEval(input: Any): Any =
+    ShingleHashes.eval(input.asInstanceOf[ArrayData], p.getOrElse(0L))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.expressions.ShingleHashes$$.MODULE$$.eval($c, ${p.getOrElse(0L)}L);""")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object ShingleHashes {
+
+  /** `p` = 0 means no reduction. A null element hashes to the seed, as in
+    * `xxhash64(null)`. */
+  def eval(grams: ArrayData, p: Long): ArrayData = {
+    val n = grams.numElements()
+    val out = new Array[Long](n)
+    // open addressing over a power-of-two table at most half full
+    var cap = 4
+    while (cap < 2 * n) cap <<= 1
+    val keys = new Array[Long](cap)
+    val used = new Array[Boolean](cap)
+    var k = 0
+    var i = 0
+    while (i < n) {
+      var h = 42L
+      if (!grams.isNullAt(i)) {
+        val s = grams.getUTF8String(i)
+        h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+      }
+      if (p > 0) { val r = h % p; h = if (r < 0) (r + p) % p else r }
+      var slot = (h ^ (h >>> 32)).toInt & (cap - 1)
+      while (used(slot) && keys(slot) != h) slot = (slot + 1) & (cap - 1)
+      if (!used(slot)) {
+        used(slot) = true; keys(slot) = h
+        out(k) = h; k += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, k))
+  }
+}
+
+/** Banded-LSH bucket keys of a signature: `bands` rows `(band, bh)` where
+  * `bh` is Spark's `xxhash64` of the band's slice `sig[band·r, band·r + r)`
+  * (clipped to the array, as `slice` is): `h = 42; h = XXH64.hashLong(x, h)`
+  * per non-null element. The lambda-free form of
+  * `transform(sequence(0, bands-1), b => struct(b, xxhash64(slice(sig, b·r+1, r))))`,
+  * with its exact type and null behaviour: never null, and a null signature
+  * hashes every band to the seed 42. */
+case class BandHashes(child: Expression, bands: Int, r: Int) extends UnaryExpression {
+  require(bands >= 1 && r >= 0)
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("bh", LongType, nullable = false))), containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_band_hashes"
+
+  override def eval(input: InternalRow): Any =
+    BandHashes.eval(child.eval(input).asInstanceOf[ArrayData], bands, r)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ArrayData ${ev.value} = graft.expressions.BandHashes$$.MODULE$$.eval(
+        ${c.isNull} ? null : ${c.value}, $bands, $r);""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object BandHashes {
+
+  def eval(sig: ArrayData, bands: Int, r: Int): ArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
+    val out = new Array[Any](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42L
+      var i = b * r
+      val end = math.min(i + r, n)
+      while (i < end) {
+        if (!sig.isNullAt(i)) h = XXH64.hashLong(sig.getLong(i), h)
+        i += 1
+      }
+      out(b) = new GenericInternalRow(Array[Any](b, h))
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
 }
 
 /** 64-bit SimHash from pre-hashed tokens: bit j of the result is the sign of

@@ -44,4 +44,21 @@ class CorpusBuildSpec extends SparkSpec {
     val first = out.select("doc_id", "split").as[(Long, String)].collect().toMap
     assert(again == first, "split assignment not deterministic across runs")
   }
+
+  test("run writes a corpus its report counts exactly and keeps the session") {
+    val dir = java.nio.file.Files.createTempDirectory("corpusbuild-spec").toString
+    try {
+      CorpusBuild.run(spark, Array(sfDir, dir))
+      val corpus = spark.read.parquet(s"$dir/corpus.parquet")
+      val nRows = corpus.count()
+      assert(nRows > 0)
+      val reported = spark.read.parquet(s"$dir/report.parquet")
+        .agg(sum("n_docs")).as[Long].head()
+      assert(reported == nRows, s"report counts $reported docs, corpus has $nRows")
+      val labels = corpus.select("split").distinct().as[String].collect().toSet
+      assert(labels.nonEmpty && labels.subsetOf(Set("train", "val", "test")), s"$labels")
+      assert(!spark.sparkContext.isStopped)
+      assert(spark.range(3).count() == 3L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }

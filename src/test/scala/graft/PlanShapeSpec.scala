@@ -66,6 +66,36 @@ class PlanShapeSpec extends SparkSpec {
       s"q_winnow fingerprint pass not whole-stage-codegen'd:\n$p")
   }
 
+  /** The MinHash sketch must hold no higher-order function: CollapseProject
+    * inlines the projection chain beneath it into a lambda body, where
+    * nothing is shared. With the band hashes a per-band lambda, every row
+    * was tokenized, shingled, hashed and signed once per band, interpreted.
+    * nearDupPairs persists its sketch, so the cached plan is walked too. */
+  test("MinHash sketch and nearDupPairs plan no lambda over the signature") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    def exprs(p: QueryPlan[_]): Seq[Expression] =
+      p.expressions ++ (p.children ++ p.innerChildren).flatMap {
+        case q: QueryPlan[_] => exprs(q)
+        case _ => Nil
+      }
+    val docs = graft.io.Tables.documents(spark, dir)
+    val sketch = graft.dedup.MinHashDedup.sketch(docs)
+    try {
+      for ((name, df) <- Seq("sketch" -> sketch,
+          "nearDupPairs" -> graft.dedup.MinHashDedup.nearDupPairs(docs))) {
+        val all = exprs(df.queryExecution.optimizedPlan)
+        assert(all.exists(_.exists(_.isInstanceOf[graft.expressions.MinHashSignature])),
+          s"$name: the walk never reached the signature")
+        val hofs = all.flatMap(_.collect { case h: HigherOrderFunction => h.prettyName })
+        assert(hofs.isEmpty, s"$name plans higher-order functions: ${hofs.distinct}")
+        val signedInLambda = all.flatMap(_.collect { case l: LambdaFunction => l })
+          .flatMap(_.collect { case s: graft.expressions.MinHashSignature => s })
+        assert(signedInLambda.isEmpty, s"$name computes a signature inside a lambda")
+      }
+    } finally sketch.unpersist() // the cache entry nearDupPairs registered
+  }
+
   /** Probe/dim sides sized in config must be broadcast, keeping the corpus
     * side shuffle-free where designed. */
   test("broadcast where intended") {
