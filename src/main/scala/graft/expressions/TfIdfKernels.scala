@@ -30,6 +30,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * values(j) · idf(j). One multiply per active slot, same order — the
   * doubles are bit-identical to the stock transform.
   *
+  * The idf vector IdfScale applies is not fitted by MLlib's IDF estimator
+  * (an RDD `treeAggregate` over deserialized Vectors): FeaturePipeline
+  * counts documents per [[CleanTokenBuckets]] bucket — the nonzero indices
+  * of the CleanTokenTf vector, from the same scan — in one Catalyst
+  * aggregate and replays mllib `IDF`'s idf formula over those integer
+  * counts on the driver.
+  *
   * Parity is proven corpus-wide in TfIdfKernelsSpec (stock
   * FeaturePipeline.features vs the kernel path, bit-for-bit on
   * (indices, values)) and gated end-to-end by the q_tfidf_features /

@@ -59,16 +59,20 @@ object Bpe {
     replace(seg, lit(s" $left  $right "), lit(s" $left$right "))
 
   /** Adjacent symbol pairs as `"left right"` strings (symbols never contain
-    * spaces, so the single-space pair separator is unambiguous). Higher-order
-    * transform is interpreted, which is fine here by construction: pair
-    * extraction only ever runs over the vocab-sized word table. */
+    * spaces, so the single-space pair separator is unambiguous): the symbol
+    * array zipped with itself shifted by one. The array is split outside the
+    * lambda, so each word is split a bounded number of times, not twice per
+    * pair. Higher-order zip_with is interpreted, which is fine here by
+    * construction: pair extraction only ever runs over the vocab-sized word
+    * table. */
   def pairsOf(seg: Column): Column = {
     val sy = symbols(seg)
-    // the <2-symbol guard matters under ANSI: sequence(1, 0) DESCENDS, and
-    // element_at(sy, 0) then raises instead of returning null
-    when(size(sy) < 2, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(sy) - 1),
-        i => concat(element_at(sy, i), lit(" "), element_at(sy, i + 1))))
+    val n = size(sy)
+    // a one-symbol word has no pair: the guard keeps both slice lengths
+    // positive (ANSI raises on a negative slice length)
+    when(n < 2, array().cast("array<string>"))
+      .otherwise(zip_with(slice(sy, lit(1), n - 1), slice(sy, lit(2), n - 1),
+        (l, r) => concat(l, lit(" "), r)))
   }
 
   /** (word, wc) frequency table — the ONE corpus-scale pass of training. */

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.feature._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Configurable text→TF(-IDF) feature pipeline — the engine's equivalent of
@@ -97,9 +97,15 @@ object FeaturePipeline {
     * full-corpus parity; q_tfidf_features/q_billmatch oracles + the four
     * pinned fits gate it end-to-end): the TF vector is HashingTF's exact
     * SparseVector (ascending murmur3 buckets, integer counts), the idf
-    * vector comes from the SAME stock IDF estimator over those TF vectors,
-    * and the scaling replays mllib IDFModel.transform multiply-for-multiply.
-    * Stemming / n-gram / CountVectorizer configs keep the stock pipeline. */
+    * vector is [[idfOf]] — mllib IDF's own arithmetic over integer document
+    * counts from one Catalyst aggregate, no MLlib RDD fit — and the scaling
+    * replays mllib IDFModel.transform multiply-for-multiply.
+    * Stemming / n-gram / CountVectorizer configs keep the stock pipeline.
+    *
+    * On this kernel path a null text gets null features and is not counted
+    * by the IDF fit (neither in the document count nor in any document
+    * frequency), and an empty frame featurizes to an empty frame; MLlib's
+    * IDF estimator throws on both. */
   def features(df: DataFrame, cfg: FeatureConfig): DataFrame =
     if (cfg.useCountVectorizer || cfg.useStemming || cfg.addNGramFeatures)
       fitTransform(df, cfg)._2
@@ -108,21 +114,46 @@ object FeaturePipeline {
       // lowercased like the stock (case-insensitive) StopWordsRemover: the
       // kernel matches the set against lowercased text
       val stop = (StopWordsRemover.loadDefaultStopWords("english") ++
-        cfg.extraStopWords).map(_.toLowerCase(java.util.Locale.ROOT))
-      val tfCol = bridge.column(graft.expressions.CleanTokenTf(
-        bridge.expression(lower(col(cfg.inputCol))),
-        cfg.numTextFeatures, stop.toSeq))
+        cfg.extraStopWords).map(_.toLowerCase(java.util.Locale.ROOT)).toSeq
+      val text = bridge.expression(lower(col(cfg.inputCol)))
+      val tfCol = bridge.column(
+        graft.expressions.CleanTokenTf(text, cfg.numTextFeatures, stop))
       if (!cfg.useIdf) df.withColumn(cfg.outputCol, tfCol)
       else {
-        val withTf = df.withColumn("__tf", tfCol)
-        val idfModel = new IDF().setInputCol("__tf").setOutputCol(cfg.outputCol)
-          .setMinDocFreq(cfg.minDocFreq).fit(withTf)
-        withTf
-          .withColumn(cfg.outputCol, bridge.column(graft.expressions.IdfScale(
-            bridge.expression(col("__tf")), idfModel.idf.toArray)))
-          .drop("__tf")
+        val buckets = bridge.column(
+          graft.expressions.CleanTokenBuckets(text, cfg.numTextFeatures, stop))
+        val idf = idfOf(df.where(col(cfg.inputCol).isNotNull), buckets,
+          cfg.numTextFeatures, cfg.minDocFreq)
+        df.withColumn(cfg.outputCol, bridge.column(graft.expressions.IdfScale(
+          bridge.expression(tfCol), idf)))
       }
     }
+
+  /** The idf vector of mllib `IDF.fit` over the TF vectors of `docs` whose
+    * positive entries are exactly `buckets` (a distinct-bucket array per
+    * document), from ONE aggregate: `posexplode_outer` gives every document
+    * one row at position 0 (or one null row when it has no bucket), grouped
+    * by bucket, so at most `numFeatures + 1` rows reach the driver carrying
+    * each bucket's document frequency and, summed, the document count `m`.
+    * The arithmetic is `IDF.DocumentFrequencyAggregator.idf()`'s (Spark
+    * 4.1.2 bytecode): `log((m + 1) / (df + 1))` in doubles when
+    * `df >= minDocFreq`, else 0 — over integer counts, so the doubles are
+    * bit-identical. */
+  private def idfOf(docs: DataFrame, buckets: Column, numFeatures: Int,
+                    minDocFreq: Int): Array[Double] = {
+    val docFreq = new Array[Long](numFeatures)
+    var m = 0L
+    docs.select(posexplode_outer(buckets))
+      .groupBy(col("col").as("bucket"))
+      .agg(count(lit(1)).as("df"),
+        count(when(coalesce(col("pos"), lit(0)) === 0, true)).as("docs"))
+      .collect().foreach { r =>
+        if (!r.isNullAt(0)) docFreq(r.getLong(0).toInt) = r.getLong(1)
+        m += r.getLong(2)
+      }
+    docFreq.map(d =>
+      if (d >= minDocFreq) math.log((m.toDouble + 1.0) / (d.toDouble + 1.0)) else 0.0)
+  }
 
   def fitTransform(df: DataFrame, cfg: FeatureConfig): (PipelineModel, DataFrame) = {
     val cleaned = df.withColumn("__clean",

@@ -14,6 +14,26 @@ class BillMatchSpec extends SparkSpec {
     finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
+  /** Workflow 2. No cache assertion here: the LSH self-join persists its
+    * hashed frame by design (LshJoins.selfJoinOnSets: three plan branches
+    * reuse it and the returned lazy frame still references it, so the
+    * caller owns its release). */
+  test("minhash run keeps pk1 < pk2, similarities in [0, 100], and the session") {
+    val out = Files.createTempDirectory("billmatch-spec-minhash").toString
+    try {
+      BillMatch.run(spark, Array(sfDir, out, "jaccard", "8", "100", "minhash"))
+      val pairs = spark.read.parquet(s"$out/pairs.parquet")
+        .select("pk1", "pk2", "similarity").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(pairs.nonEmpty, "no top-K pairs")
+      pairs.foreach { case (a, b, sim) =>
+        assert(a < b, s"pair ($a, $b) is not ordered")
+        assert(sim >= 0.0 && sim <= 100.0, s"pair ($a, $b) has similarity $sim")
+      }
+      checkGraph(out, pairs.map(p => (p._1, p._2)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
   /** Persisted RDD ids and the CacheManager entry count, as in
     * [[StatelessRegistrySpec]]. */
   private def cachedState: (Set[Int], Int) = (
@@ -31,6 +51,12 @@ class BillMatchSpec extends SparkSpec {
     val pairs = spark.read.parquet(s"$out/pairs.parquet")
       .select("pk1", "pk2").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "no top-K pairs")
+    checkGraph(out, pairs)
+  }
+
+  /** The graph ranks exactly the top-K endpoints, each once with a finite
+    * positive rank, and the session still runs queries. */
+  private def checkGraph(out: String, pairs: Seq[(Long, Long)]): Unit = {
     val endpoints = pairs.flatMap { case (a, b) => Seq(a, b) }.toSet
 
     val graph = spark.read.parquet(s"$out/graph.parquet")

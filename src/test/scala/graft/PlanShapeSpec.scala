@@ -142,6 +142,24 @@ class PlanShapeSpec extends SparkSpec {
       s"BPE encode join builds on the corpus/Generate side:\n${joinLines.mkString("\n")}")
   }
 
+  /** BPE pair extraction runs in every merge round of Bpe.learn: a split
+    * under the pair lambda re-splits the word for each adjacent pair, twice
+    * (quadratic in word length, interpreted). */
+  test("Bpe.pairsOf splits each word outside the pair lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    import org.apache.spark.sql.functions._
+    val seg = spark.range(1).select(
+      graft.text.Bpe.initialSeg(concat(lit("word"), col("id").cast("string"))).as("seg"))
+    val plan = seg.select(explode(graft.text.Bpe.pairsOf(col("seg"))))
+      .queryExecution.optimizedPlan
+    val all = plan.flatMap(_.expressions)
+    assert(all.exists(_.exists(_.isInstanceOf[StringSplit])),
+      s"the walk never reached the split:\n$plan")
+    val splitInLambda = all.flatMap(_.collect { case l: LambdaFunction => l })
+      .filter(_.exists(_.isInstanceOf[StringSplit]))
+    assert(splitInLambda.isEmpty, s"pairsOf splits inside a lambda:\n$plan")
+  }
+
   /** Retrieval metrics must come from bounded aggregations: a Window node
     * here means the rank runs as a #query-terms-task global sort again (3
     * tasks at any corpus size — the r10 ladder's worst superlinear segment

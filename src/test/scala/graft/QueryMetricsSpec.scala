@@ -80,6 +80,37 @@ class QueryMetricsSpec extends SparkSpec {
     } finally { feats.unpersist(); () }
   }
 
+  test("a TF-IDF fit is one SQL job with no MLlib stage") {
+    // the fit is one grouped aggregate over a single-file scan: one stage
+    // scans and partially aggregates, one reads the shuffle for the
+    // collect; MLlib's IDF ran a treeAggregate RDD job outside any SQL
+    // execution on top
+    val maxStages = 2
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[(Option[String], Seq[String])]
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.synchronized {
+          jobs += ((Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id"))), e.stageInfos.map(_.name)))
+        }
+    }
+    val docs = graft.io.Tables.documents(spark, sfDir)
+    spark.sparkContext.addSparkListener(jobListener)
+    try withMetrics { metrics =>
+      val p = measure(metrics) {
+        graft.text.FeaturePipeline.features(docs,
+          graft.text.FeatureConfig(numTextFeatures = 1024, useIdf = true))
+      }
+      val started = jobs.synchronized(jobs.toList)
+      val mllib = started.flatMap(_._2).filter(n =>
+        n.contains("treeAggregate") || n.contains("IDF.scala"))
+      assert(mllib.isEmpty, s"MLlib stages: $mllib")
+      assert(started.nonEmpty && started.forall(_._1.isDefined) &&
+        started.map(_._1).distinct.size == 1, s"jobs (SQL execution id, stages): $started")
+      assert(p.stages > 0 && p.stages <= maxStages, p)
+    } finally spark.sparkContext.removeSparkListener(jobListener)
+  }
+
   test("repeated measurements of one query agree on the task count") {
     withMetrics { metrics =>
       val tasks = (1 to 10).map(_ => measure(metrics)(shuffled.collect()).tasks)

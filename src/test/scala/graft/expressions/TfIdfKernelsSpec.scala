@@ -119,6 +119,25 @@ class TfIdfKernelsSpec extends SparkSpec {
     }
   }
 
+  test("a null text gets null features and is not counted by the IDF fit") {
+    val withNull = advDocs.union(Seq((11L, null: String)).toDF("doc_id", "text"))
+    val cfg = FeatureConfig(numTextFeatures = 64)
+    val feats = FeaturePipeline.features(withNull, cfg)
+      .select("doc_id", "features").collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(feats.keySet == (1L to 11L).toSet && feats(11L) == null, feats)
+    // a null counted in the document count or a frequency would move the idf
+    val expected = FeaturePipeline.features(advDocs, cfg)
+      .select("doc_id", "features").collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert((1L to 10L).forall(id => feats(id) == expected(id)),
+      (1L to 10L).filter(id => feats(id) != expected(id)))
+  }
+
+  test("an empty frame featurizes to an empty frame") {
+    val out = FeaturePipeline.features(advDocs.limit(0), FeatureConfig(numTextFeatures = 64))
+    assert(out.columns.toSeq == Seq("doc_id", "text", "features"))
+    assert(out.collect().isEmpty)
+  }
+
   test("IdfScale dense branch replays IDFModel.transform on dense input") {
     val idf = Array(0.0, 0.5, 2.0)
     val in = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
