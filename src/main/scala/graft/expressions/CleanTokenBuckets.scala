@@ -16,11 +16,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * array<long> — i.e. the nonzero-index set of the binary-TF vector, the
   * only thing set-similarity operators (MinHash LSH) consume.
   *
-  * CONTRACT: the child must already be lowercased (`lower(text)`) — the
+  * CONTRACT: the child is the RAW text (a UTF8_BINARY string; other
+  * collations fail analysis). The kernel lowercases it exactly as
+  * `lower(text)` would ([[FoldsCase]]: 'A'..'Z' folded in the scan itself,
+  * non-ASCII rows lowercased whole first), so its output equals the same
+  * kernel over `lower(text)` value for value (RawTextLowerSpec) — the
   * pipeline this replaces lowercases inside `clean`, and RegexTokenizer's
   * own lowercasing is then a no-op; stop-word lookup here is exact-match
   * on the produced (lowercase) token, which equals StopWordsRemover's
-  * case-insensitive behaviour on lowercased input.
+  * case-insensitive behaviour on lowercased input. Callers pass no
+  * `lower()`: that expression's first use in a JVM builds an unused
+  * 1.1M-code-point ICU title-case table (see [[FoldsCase]]).
   *
   * Why (r13, guide §1.2 step 2 / §4.1): the replaced chain cost two full
   * Java-regex passes over every document plus three per-row boxed ML UDFs
@@ -34,7 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class CleanTokenBuckets(child: Expression, numFeatures: Int,
                              stopWords: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with FoldsCase {
   require(numFeatures > 0)
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -46,11 +52,9 @@ case class CleanTokenBuckets(child: Expression, numFeatures: Int,
     s
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    new GenericArrayData(
-      CleanTokenBuckets.eval(s, numFeatures, stopSet))
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(CleanTokenBuckets.eval(
+      input.asInstanceOf[UTF8String], useICU, numFeatures, stopSet))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val stopRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
@@ -58,7 +62,7 @@ case class CleanTokenBuckets(child: Expression, numFeatures: Int,
       s"""
       ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
         graft.expressions.CleanTokenBuckets$$.MODULE$$.eval(
-          $c.toString(), $numFeatures, $stopRef));"""
+          $c, $useICU, $numFeatures, $stopRef));"""
     })
   }
 
@@ -69,10 +73,10 @@ case class CleanTokenBuckets(child: Expression, numFeatures: Int,
 object CleanTokenBuckets {
 
   /** The distinct sorted buckets of the shared [[scan]]. */
-  def eval(s: String, numFeatures: Int,
+  def eval(u: UTF8String, useICU: Boolean, numFeatures: Int,
            stopSet: java.util.HashSet[String]): Array[Long] = {
     val counts = new Array[Int](numFeatures)
-    val out = new Array[Long](scan(s, stopSet, counts))
+    val out = new Array[Long](scan(FoldsCase.scanText(u, useICU), stopSet, counts))
     var b = 0
     var o = 0
     while (o < out.length) {
@@ -82,12 +86,13 @@ object CleanTokenBuckets {
     out
   }
 
-  /** One linear scan (the pipeline in the class doc) that adds each kept
-    * token's count to `counts(bucket)`, `counts.length` buckets, and returns
-    * the number of distinct buckets hit. Static so whole-stage-generated
-    * Java calls it directly — the body is a tight char loop, not
-    * expression-tree work, so a method call costs nothing and keeps the
-    * generated method small. Shared with [[CleanTokenTf]]. */
+  /** One linear scan (the pipeline in the class doc, 'A'..'Z' folded on the
+    * fly) over `s`, which must be [[FoldsCase.scanText]]'s output. Adds each
+    * kept token's count to `counts(bucket)`, `counts.length` buckets, and
+    * returns the number of distinct buckets hit. Static so
+    * whole-stage-generated Java calls it directly — the body is a tight char
+    * loop, not expression-tree work, so a method call costs nothing and
+    * keeps the generated method small. Shared with [[CleanTokenTf]]. */
   def scan(s: String, stopSet: java.util.HashSet[String],
            counts: Array[Int]): Int = {
     var nSeen = 0
@@ -95,12 +100,14 @@ object CleanTokenBuckets {
     var i = 0
     val n = s.length
     while (i <= n) {
-      val c = if (i < n) s.charAt(i) else ' ' // virtual terminator flushes
+      // virtual terminator flushes
+      val c = if (i < n) FoldsCase.foldAscii(s.charAt(i)) else ' '
       val deleted = (c >= '0' && c <= '9') || c == ',' || c == ':' ||
         c == ';' || c == '?' || c == '!'
       if (!deleted) {
-        // Java regex \w (ASCII): [a-zA-Z0-9_] — digits unreachable here
-        val word = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || c == '_'
+        // Java regex \w (ASCII): [a-zA-Z0-9_] — digits unreachable here,
+        // capitals folded above
+        val word = (c >= 'a' && c <= 'z') || c == '_'
         if (word) sb.append(c)
         else {
           if (sb.length >= 3) { // \b\w{1,2}\b deleted 1-2 char runs

@@ -21,7 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * emitting the identical SparseVector HashingTF built: ascending bucket
   * indices, integer counts as doubles (HashingTF accumulates `+ 1.0` into
   * an OpenHashMap then sorts by index — integer-exact, order-free).
-  * Same lowercase-input CONTRACT as CleanTokenBuckets.
+  *
+  * CONTRACT (shared with CleanTokenBuckets): the child is the RAW text, a
+  * UTF8_BINARY string. The kernel lowercases it exactly as `lower(text)`
+  * would ([[FoldsCase]]), so callers pass no `lower()` and its cold-JVM ICU
+  * table build stays off the featurization path.
   *
   * [[IdfScale]] replays mllib IDFModel.transform exactly: sparse in →
   * sparse out with the SAME indices and values(k) · idf(indices(k)) (zeros
@@ -44,7 +48,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class CleanTokenTf(child: Expression, numFeatures: Int,
                         stopWords: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with FoldsCase {
   require(numFeatures > 0)
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = org.apache.spark.ml.linalg.SQLDataTypes.VectorType
@@ -57,14 +61,14 @@ case class CleanTokenTf(child: Expression, numFeatures: Int,
   }
 
   override def nullSafeEval(input: Any): Any =
-    CleanTokenTf.eval(input.asInstanceOf[UTF8String].toString, numFeatures, stopSet)
+    CleanTokenTf.eval(input.asInstanceOf[UTF8String], useICU, numFeatures, stopSet)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val stopRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
     nullSafeCodeGen(ctx, ev, c => {
       s"""
       ${ev.value} = graft.expressions.CleanTokenTf$$.MODULE$$.eval(
-        $c.toString(), $numFeatures, $stopRef);"""
+        $c, $useICU, $numFeatures, $stopRef);"""
     })
   }
 
@@ -76,10 +80,10 @@ object CleanTokenTf {
 
   /** The [[CleanTokenBuckets.scan]] counts as the serialized sparse
     * VectorUDT row (type=0, size, indices, values). */
-  def eval(s: String, numFeatures: Int,
+  def eval(u: UTF8String, useICU: Boolean, numFeatures: Int,
            stopSet: java.util.HashSet[String]): InternalRow = {
     val counts = new Array[Int](numFeatures)
-    val nSeen = CleanTokenBuckets.scan(s, stopSet, counts)
+    val nSeen = CleanTokenBuckets.scan(FoldsCase.scanText(u, useICU), stopSet, counts)
     val idx = new Array[Int](nSeen)
     val vals = new Array[Double](nSeen)
     var b = 0

@@ -337,9 +337,12 @@ object MlQueries {
       // adjacent to accented letters (divergence pinned in
       // CleanTokenBucketsSpec); a corpus regen with non-ASCII text must
       // not be certified against the stale hash-unchanged claim.
+      // CONTRACT: the kernel takes the RAW text and lowercases it in its own
+      // scan exactly as `lower(text)` would, so no `Lower` (and no cold-JVM
+      // ICU table build) runs here.
       val buckets = org.apache.spark.sql.graft.bridge.column(
         graft.expressions.CleanTokenBuckets(
-          org.apache.spark.sql.graft.bridge.expression(lower(col("text"))),
+          org.apache.spark.sql.graft.bridge.expression(col("text")),
           1024,
           org.apache.spark.ml.feature.StopWordsRemover
             .loadDefaultStopWords("english").toSeq))

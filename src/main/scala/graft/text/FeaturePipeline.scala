@@ -105,17 +105,24 @@ object FeaturePipeline {
     * On this kernel path a null text gets null features and is not counted
     * by the IDF fit (neither in the document count nor in any document
     * frequency), and an empty frame featurizes to an empty frame; MLlib's
-    * IDF estimator throws on both. */
+    * IDF estimator throws on both.
+    *
+    * The kernels take the raw text and lowercase it in their own scan, as
+    * `lower()` would, so no `Lower` runs here (its first use in a JVM builds
+    * an unused 1.1M-code-point ICU table). Non-ASCII text is lowercased
+    * under Spark's `spark.sql.icu.caseMappings.enabled`, as `lower()` reads
+    * it: ICU case mappings when true (the default), `String.toLowerCase`
+    * when false. The text must be a UTF8_BINARY string. */
   def features(df: DataFrame, cfg: FeatureConfig): DataFrame =
     if (cfg.useCountVectorizer || cfg.useStemming || cfg.addNGramFeatures)
       fitTransform(df, cfg)._2
     else {
       import org.apache.spark.sql.graft.bridge
       // lowercased like the stock (case-insensitive) StopWordsRemover: the
-      // kernel matches the set against lowercased text
+      // kernel matches the set against the text it lowercases itself
       val stop = (StopWordsRemover.loadDefaultStopWords("english") ++
         cfg.extraStopWords).map(_.toLowerCase(java.util.Locale.ROOT)).toSeq
-      val text = bridge.expression(lower(col(cfg.inputCol)))
+      val text = bridge.expression(col(cfg.inputCol))
       val tfCol = bridge.column(
         graft.expressions.CleanTokenTf(text, cfg.numTextFeatures, stop))
       if (!cfg.useIdf) df.withColumn(cfg.outputCol, tfCol)

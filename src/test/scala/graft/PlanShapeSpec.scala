@@ -96,6 +96,43 @@ class PlanShapeSpec extends SparkSpec {
     } finally sketch.unpersist() // the cache entry nearDupPairs registered
   }
 
+  /** The featurization kernels lowercase their raw input in their own scan.
+    * A `Lower` in front of them costs a cold JVM the class init of
+    * CollationAwareUTF8String: ICU title case for all 1.1M code points,
+    * with every other task thread blocked on it. */
+  test("featurization kernels plan no Lower") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Lower}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.expressions.{CleanTokenBuckets, CleanTokenTf, TrigramHits}
+    // q_minhash_lsh persists its hashed sets: the cached plan is an
+    // adaptive plan under an InMemoryRelation's inner children
+    def exprs(p: QueryPlan[_]): Seq[Expression] =
+      p.expressions ++ (p.children ++ p.innerChildren).flatMap {
+        case a: AdaptiveSparkPlanExec => exprs(a.inputPlan)
+        case q: QueryPlan[_] => exprs(q)
+        case _ => Nil
+      }
+    val docs = graft.io.Tables.documents(spark, dir)
+    val plans = Seq(
+      "features(useIdf = true)" -> graft.text.FeaturePipeline.features(docs,
+        graft.text.FeatureConfig(numTextFeatures = 64)),
+      "features(useIdf = false)" -> graft.text.FeaturePipeline.features(docs,
+        graft.text.FeatureConfig(numTextFeatures = 64, useIdf = false)),
+      "q_minhash_lsh" -> SparkEntry.queries("q_minhash_lsh")(spark, dir),
+      "langIdNgram" -> docs.select(graft.text.TextOps.langIdNgram(col("text"))))
+    for ((name, df) <- plans) {
+      val all = exprs(df.queryExecution.optimizedPlan)
+      assert(all.exists(_.exists {
+        case _: CleanTokenBuckets | _: CleanTokenTf | _: TrigramHits => true
+        case _ => false
+      }), s"$name: the walk never reached a featurization kernel")
+      val lowers = all.flatMap(_.collect { case l: Lower => l })
+      assert(lowers.isEmpty, s"$name plans lower(): ${lowers.distinct}")
+    }
+  }
+
   /** Probe/dim sides sized in config must be broadcast, keeping the corpus
     * side shuffle-free where designed. */
   test("broadcast where intended") {

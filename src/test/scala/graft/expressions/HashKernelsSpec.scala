@@ -1,6 +1,7 @@
 package graft.expressions
 
 import graft.SparkSpec
+import graft.SparkSpec.{codegenOnly, noCodegen}
 import graft.dedup.MinHashDedup
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
@@ -29,21 +30,6 @@ class HashKernelsSpec extends SparkSpec {
       struct(b.as("band"), xxhash64(slice(sig, b * r + 1, lit(r))).as("bh")))
   }
 
-  private val codegenOnly = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
-    "spark.sql.codegen.fallback" -> "false", "spark.sql.codegen.wholeStage" -> "true")
-  private val noCodegen = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
-    "spark.sql.codegen.wholeStage" -> "false")
-
-  private def withConf(kvs: Seq[(String, String)])(body: => Unit): Unit = {
-    val conf = spark.conf
-    val before = kvs.map { case (k, _) => k -> conf.getOption(k) }
-    kvs.foreach { case (k, v) => conf.set(k, v) }
-    try body finally before.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   /** Every (kernel, oracle) column pair of `pairs` agrees on type,
     * nullability and every row's value, under both codegen modes. */
   private def assertSame(df: DataFrame, pairs: (String, Column, Column)*): Unit =
@@ -64,16 +50,6 @@ class HashKernelsSpec extends SparkSpec {
             s"first ${bad.headOption.map(r => (r.get(2 * i), r.get(2 * i + 1)))}")
         }
       }
-
-  /** A parquet scan, not a local Seq: projections over a LocalRelation are
-    * folded by the optimizer through the interpreted path. */
-  private def asScan(df: DataFrame)(body: DataFrame => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("hash-kernels-spec").toString
-    try {
-      df.write.mode("overwrite").parquet(dir)
-      body(spark.read.parquet(dir))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
 
   private lazy val docs = graft.io.Tables.documents(spark, sfDir).select("doc_id", "text")
 

@@ -82,6 +82,28 @@ class TfIdfKernelsSpec extends SparkSpec {
     compare(docs, FeatureConfig(numTextFeatures = 256, useIdf = true))
   }
 
+  test("minhash-sized bucket counts: kernel == stock, bit-for-bit (2^16, 2^18)") {
+    val rnd = new scala.util.Random(29)
+    val words = Seq("Alpha", "beta", "GAMMA", "delta", "the", "Epsilon", "zeta",
+      "repeat", "repeat", "ab", "x1y2", "under_score")
+    val docs = advDocs.union((0L until 60L).map { i =>
+      (100L + i, Seq.fill(rnd.nextInt(80))(words(rnd.nextInt(words.length)))
+        .mkString(if (i % 2 == 0) " " else ", "))
+    }.toDF("doc_id", "text"))
+    for (n <- Seq(1 << 16, 1 << 18); useIdf <- Seq(false, true))
+      compare(docs, FeatureConfig(numTextFeatures = n, useIdf = useIdf))
+    // the bucket sets are the TF vectors' indices
+    val tf = fingerprint(FeaturePipeline.features(docs,
+      FeatureConfig(numTextFeatures = 1 << 16, useIdf = false)))
+    val sets = docs.select(col("doc_id"), org.apache.spark.sql.graft.bridge.column(
+      CleanTokenBuckets(org.apache.spark.sql.graft.bridge.expression(col("text")),
+        1 << 16, org.apache.spark.ml.feature.StopWordsRemover
+          .loadDefaultStopWords("english").toSeq)))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(sets.keySet == tf.keySet)
+    assert(sets.forall { case (id, s) => s == tf(id)._2.map(_.toLong) })
+  }
+
   test("full-corpus parity on the gate fixture (the tfidfCfg shape)") {
     val dir = sys.env.getOrElse("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.01")
     assume(new java.io.File(s"$dir/documents.parquet").exists())
