@@ -47,7 +47,7 @@ object Bench {
     "q_triangles",       // superstep triangle count
     // r7 widening (VERDICT r6 #4): the heaviest ladder entries join the
     // per-round gate so extension-surface regressions are caught by BENCH,
-    // not only by ad-hoc ScaleProbe runs. r6 ladder times are the floor.
+    // not only by ad-hoc scale runs. r6 ladder times are the floor.
     "q_substring_dedup", // suffix-hash exact-substring dedup (heaviest dedup)
     "q_boilerplate",     // cross-doc repeated-line removal
     "q_winnow_neardup",  // winnowing fingerprint near-dup
@@ -154,8 +154,8 @@ object Bench {
 
   /** Isolated re-measurement in fresh child JVMs (VERDICT r7 #1). The r6/r7
     * rounds proved accumulated JVM pressure inflates in-set times 1.5-4x
-    * without any plan change (SCALEPROBE.md: q_substring_dedup 29.6 s
-    * in-sweep vs 9.8 s clean-JVM; SCALE.md r7 note), and an in-process
+    * without any plan change (q_substring_dedup 29.6 s in-sweep vs 9.8 s
+    * clean-JVM; SCALE.md r7 note), and an in-process
     * System.gc() between queries demonstrably did not cure it. So after the
     * in-set passes, the headline set is re-run in SMALL FAMILIES (consecutive
     * chunks of `familySize` queries) each in its OWN child JVM — same
@@ -366,9 +366,8 @@ object Bench {
     * Long essentially surely, and under Spark 4's default ANSI mode that is
     * a SparkArithmeticException — exactly the crash that zeroed BENCH_r08
     * (VERDICT r8 #1). Cast-to-double keeps the measured work (the hash)
-    * identical while making the reduction overflow-proof. Callers choose
-    * their own rep policy. */
-  private[graft] def calibRep(spark: SparkSession): Double = {
+    * identical while making the reduction overflow-proof. */
+  private def calibRep(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions.{col, sum, xxhash64}
     val t0 = System.nanoTime()
     spark.range(0L, 400000000L, 1L, 32)

@@ -1,29 +1,36 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1-equivalent fixture generator (VERDICT r12 #4): writes a key-consistent
   * `factor`× duplication of every sf0.1 table so the FULL registry can run
   * at a scale point above the per-operator ladders. Replication is
-  * deterministic (no RNG — same recipe as ScaleProbe's dup ladder): replica
-  * r offsets every key column by a range-disjoint constant, so joins stay
-  * key-consistent (lineitem.l_orderkey still hits orders.o_orderkey within
-  * its replica; o_custkey still hits customer), document text gets the
-  * ScaleProbe " rep$r" suffix (replicas are NEAR-dups — what dedup
-  * operators exist for), and embeddings replicate exactly (score ties break
-  * on ids deterministically engine-wide). region/nation copy as-is —
-  * TPC-H dimension tables are constant-size at every SF by definition.
+  * deterministic (no RNG): replica r offsets every key column by a
+  * range-disjoint constant, so joins stay key-consistent
+  * (lineitem.l_orderkey still hits orders.o_orderkey within its replica;
+  * o_custkey still hits customer), document text gets a " rep$r" suffix
+  * (replicas are NEAR-dups — what dedup operators exist for), and
+  * embeddings replicate exactly (score ties break on ids deterministically
+  * engine-wide). region/nation copy as-is — TPC-H dimension tables are
+  * constant-size at every SF by definition.
   *
   * Usage: runMain graft.DupGen [base=/root/testdata/sf0.1]
   *        [out=/tmp/graft_sf1] [factor=10]
   */
 object DupGen {
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** Writes every table on a caller-owned session, which stays open. A table
+    * whose `_SUCCESS` marker exists is skipped, so a re-run resumes. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def done(t: String): Boolean =
       new java.io.File(s"$out/$t.parquet/_SUCCESS").exists()
@@ -78,6 +85,5 @@ object DupGen {
       spark.read.parquet(s"$base/embeddings.parquet")
         .withColumn("vec_id", col("vec_id") + lit(r * K))
     }
-    spark.stop()
   }
 }

@@ -23,10 +23,10 @@ final case class QueryProfile(
   }
 }
 
-/** The one per-query metrics listener of Bench and ScaleProbe. It keeps
-  * global sums between [[reset]] and [[snapshot]], not per-job ones: both
-  * callers run queries one at a time, so the window holds exactly the jobs
-  * the query started — streaming micro-batch jobs too, which run on the
+/** The one per-query metrics listener of Bench. It keeps global sums
+  * between [[reset]] and [[snapshot]], not per-job ones: Bench runs
+  * queries one at a time, so the window holds exactly the jobs the query
+  * started — streaming micro-batch jobs too, which run on the
   * stream thread under no job label. [[snapshot]] first drains the listener
   * bus, so every task of a finished job is counted. */
 final class QueryMetrics private (sc: SparkContext) extends SparkListener {

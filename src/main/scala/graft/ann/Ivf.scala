@@ -135,7 +135,7 @@ object Ivf {
     * EVERY scored candidate row — nProbe/k of the corpus × |probes| rows —
     * where the aggregator shuffles one ≤topK buffer per map partition per
     * probe, independent of corpus size. Ranking semantics identical
-    * (score desc, id asc tie-break), measured on the SCALEPROBE ANN ladder. */
+    * (score desc, id asc tie-break), measured on an ANN corpus ladder. */
   def search(index: Index, probes: DataFrame, idCol: String, vecCol: String,
              qIdCol: String = "q_id", qVecCol: String = "qv",
              topK: Int = 10, nProbe: Int = 4): DataFrame = {

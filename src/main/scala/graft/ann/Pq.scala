@@ -227,8 +227,8 @@ object Pq {
     *
     * UNROUTED ADC is a FULL SCAN of the codes table per probe batch —
     * honest semantics for compressed search without a coarse quantizer,
-    * and it scales LINEARLY in the corpus (measured α 0.82 on the
-    * SCALEPROBE ladder vs 0.51 for routed IVF-PQ: 16.59 s vs 3.64 s at
+    * and it scales LINEARLY in the corpus (measured α 0.82 on a
+    * corpus ladder vs 0.51 for routed IVF-PQ: 16.59 s vs 3.64 s at
     * the 100× point). Treat this form as the small-corpus / diagnostic /
     * recall-ceiling path. For production corpora pass `route = Some((ivf,
     * idCol))` — a standing [[Ivf.Index]] over the same corpus and its id

@@ -126,13 +126,6 @@ object MinHashDedup {
     * |verified candidates| times, not |bucket pairs|·|bands| times. */
   def nearDupPairs(df: DataFrame, cfg: Config = Config()): DataFrame = {
     val prepared = sketch(df, cfg)
-      // persisted (spill-safe): four plan branches reuse this frame — the two
-      // bucket-join sides and the two set re-joins — and Catalyst cannot
-      // share an uncached subplan across them. The gain is small at test
-      // scale: q_minhash_dedup collect() at sf0.1 (4 cores, best of 4)
-      // 1.32 s cached vs 1.36 s uncached.
-      // Sketch rows are bounded (ids + hashes + shingle-id sets, no raw text).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // r14 (guide §2.4): dedup of multi-band candidate pairs is a SCALAR
     // predicate — keep a pair only in its FIRST matching band

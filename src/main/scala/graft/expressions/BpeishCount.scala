@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * alphanumeric" flag reproduces the match count exactly (greedy runs never
   * overlap; every other non-\s char is its own match). `\s` here is the Java
   * regex default class [ \t\n\x0B\f\r], matched literally. ~30 µs/doc with
-  * the regex engine (`graft.ScaleProbe`: 15 s at 100×) becomes a branchy
+  * the regex engine (measured: 15 s at 100×) becomes a branchy
   * char loop; `BpeishCountSpec` pins equality with regexp_count on random
   * strings in both eval paths. Operates on UTF-16 code units like the regex
   * engine does, so non-ASCII input agrees too (any non-alnum non-ws unit

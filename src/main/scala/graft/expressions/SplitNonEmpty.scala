@@ -11,10 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Replaces `filter(split(c, " "), t => length(t) > 0)` — the engine's
   * universal tokenizer — because Spark's higher-order `filter` is
-  * CodegenFallback: the lambda runs interpreted per ELEMENT, which
-  * `graft.ScaleProbe` measured at ~30× the cost of the split itself (it was
-  * the dominant term of every token-counting query). Token values are
-  * zero-copy `UTF8String.fromBytes` views over the parent's byte array
+  * CodegenFallback: the lambda runs interpreted per ELEMENT, at a
+  * measured ~30× the cost of the split itself (it was the dominant term of
+  * every token-counting query). Token values are zero-copy
+  * `UTF8String.fromBytes` views over the parent's byte array
   * (space = 0x20 never occurs inside a UTF-8 multibyte sequence, so byte
   * scanning is code-point safe). Bit-identical output order/content to the
   * filter(split) form — `SplitNonEmptySpec` pins it on random strings and

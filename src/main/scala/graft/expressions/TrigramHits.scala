@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `size(filter(charTrigrams(lower(s)), t -> t.isin(profile)))` but a
   * single char-compare scan with no allocation beyond the decoded string
   * on ASCII rows: the Column form materializes a ~|s|-element substring
-  * array per row and runs one interpreted filter per language, which
-  * `graft.ScaleProbe` measured at ~0.2 ms/doc — 10× the cost of every other
-  * text-quality signal. Profiles are tiny (≤ 8 trigrams), so per-position
+  * array per row and runs one interpreted filter per language, at a
+  * measured ~0.2 ms/doc — 10× the cost of every other text-quality
+  * signal. Profiles are tiny (≤ 8 trigrams), so per-position
   * matching is ≤ 24 char compares, break on hit.
   *
   * CONTRACT: the child is the RAW text, a UTF8_BINARY string; the kernel

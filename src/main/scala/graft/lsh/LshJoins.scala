@@ -105,7 +105,7 @@ object LshJoins {
     * bucket-sharing pair WITH both sparse vectors attached and evaluates an
     * interpreted keyDistance UDF per candidate — measured 195 s at 1× and
     * OOM at 10× on a 16 GiB heap, vs 2.78 s for the banded shape on the
-    * same corpus (SCALEPROBE r8). Here the bucket self-join carries ID +
+    * same corpus (r8). Here the bucket self-join carries ID +
     * (table, hash) ONLY; the verify payloads are re-attached by two
     * equi-joins for the |candidates| survivors, so the wide payload never
     * rides the bucket shuffle.

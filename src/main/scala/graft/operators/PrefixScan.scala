@@ -46,9 +46,9 @@ import org.apache.spark.sql.types.LongType
 object PrefixScan {
 
   // Weak registry of live persisted scan RDDs: spark.catalog.clearCache()
-  // releases SQL-level caches only, so harnesses that previously relied on
-  // it for between-measurement hygiene (ScaleProbe) call [[releaseAll]]
-  // instead. Weak keys — the registry never delays the ContextCleaner path.
+  // releases SQL-level caches only, so a caller that needs the scan frames
+  // gone (between measurements, say) calls [[releaseAll]] as well. Weak
+  // keys — the registry never delays the ContextCleaner path.
   private val live = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[org.apache.spark.rdd.RDD[Row], java.lang.Boolean]())
 

@@ -859,7 +859,7 @@ object PipelineQueries {
     // q_bpe_learn — materializeEvery = 3 forces two generation cutovers
     // INSIDE the gate, so the re-rooting itself is what's hash-checked;
     // learn ≡ learnScalable equality is additionally fuzzed in BpeSpec and
-    // the merge-count crossover is priced on the SCALEPROBE merge ladder.
+    // the merge-count crossover was priced on a merge-count ladder.
     "q_bpe_learn_scalable" -> QueryDef.sql(graft.text.Bpe.learnOracleSql(8)) { (s, d) =>
       val merges = graft.text.Bpe.learnScalable(
         graft.text.Bpe.wordCounts(Tables.spread(Tables.documents(s, d))), 8,

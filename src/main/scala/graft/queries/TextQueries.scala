@@ -309,7 +309,7 @@ object TextQueries {
           TextOps.tokenCount(col("text")).as("n_ws_tokens"),
           // native scan, space-only whitespace class — bit-identical to the
           // oracle's regexp_extract_all pattern on ANY input, ~15× the regex
-          // engine's throughput (SCALEPROBE.md)
+          // engine's throughput (measured)
           org.apache.spark.sql.graft.bridge.column(
             graft.expressions.BpeishCount(
               org.apache.spark.sql.graft.bridge.expression(col("text")),

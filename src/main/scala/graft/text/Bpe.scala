@@ -82,7 +82,7 @@ object Bpe {
 
   /** Merge count above which [[learn]] hands off to [[learnScalable]]: past
     * ~tens of merges the O(nMerges²) nested-replace plan depth loses to
-    * per-generation materialization (the SCALEPROBE merge ladder prices the
+    * per-generation materialization (a merge-count ladder priced the
     * crossover in the tens-to-low-hundreds; 48 sits inside that band —
     * analytics merge counts stay on the lighter plan-only path, tokenizer
     * training takes the linear one). */
@@ -110,11 +110,8 @@ object Bpe {
     else learnPlain(words, nMerges)
 
   /** The plan-only quadratic trainer [[learn]] steers to below the
-    * threshold — exposed by name so a diagnostic caller (the SCALEPROBE
-    * merge ladder, which exists to PRICE this path against
-    * [[learnScalable]] at every merge count) can still reach it above the
-    * threshold; production code should call [[learn]]. */
-  private[graft] def learnPlain(words: DataFrame, nMerges: Int): Seq[Merge] = {
+    * threshold. */
+  private def learnPlain(words: DataFrame, nMerges: Int): Seq[Merge] = {
     // persist only when the caller hasn't: a caller that reuses the word
     // table after training (q_bpe_encode's vocab-side join) persists it
     // itself and keeps ownership — otherwise learn's finally-unpersist
@@ -159,8 +156,8 @@ object Bpe {
     *
     * [[learn]] stays the right call at analytics merge counts (tens): it
     * skips the per-generation materialization jobs entirely. This is the
-    * trainer for hundreds-to-thousands of merges — the SCALEPROBE merge
-    * ladder prices the crossover. */
+    * trainer for hundreds-to-thousands of merges — a merge-count ladder
+    * priced the crossover. */
   def learnScalable(words: DataFrame, nMerges: Int,
                     materializeEvery: Int = 8): Seq[Merge] = {
     require(materializeEvery >= 1, "materializeEvery must be >= 1")

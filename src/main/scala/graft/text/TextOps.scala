@@ -28,7 +28,7 @@ object TextOps {
     * one-pass expression ([[graft.expressions.SplitNonEmpty]]): the
     * filter(split(...)) Column form runs the lambda interpreted per element
     * (higher-order functions are CodegenFallback) and dominated every
-    * token-path query at scale (SCALEPROBE.md). */
+    * token-path query at scale. */
   def tokens(c: Column): Column =
     org.apache.spark.sql.graft.bridge.column(
       graft.expressions.SplitNonEmpty(
@@ -48,8 +48,8 @@ object TextOps {
   /** BPE-ish token estimate: word pieces + isolated punctuation. Native
     * single-scan counter ([[graft.expressions.BpeishCount]]) — bit-identical
     * to regexp_count(c, "[A-Za-z0-9]+|[^A-Za-z0-9\\s]") (spec-pinned) at a
-    * fraction of the regex engine's cost (SCALEPROBE.md: the former 15 s at
-    * 100× was this regex). */
+    * fraction of the regex engine's cost (the former 15 s at 100× was this
+    * regex). */
   def bpeishCount(c: Column): Column =
     org.apache.spark.sql.graft.bridge.column(
       graft.expressions.BpeishCount(
@@ -87,8 +87,8 @@ object TextOps {
   def langIdNgram(text: Column): Column = {
     // native single-scan trigram counter ([[graft.expressions.TrigramHits]]):
     // bit-identical to size(filter(charTrigrams(lower(s)), isin(profile)))
-    // but allocation-free on ASCII text — the array form cost ~0.2 ms/doc
-    // (SCALEPROBE.md), 10× every other quality signal. The kernel lowercases
+    // but allocation-free on ASCII text — the array form cost a measured
+    // ~0.2 ms/doc, 10× every other quality signal. The kernel lowercases
     // the raw text itself, so no `lower()` runs.
     def score(lang: String) =
       org.apache.spark.sql.graft.bridge.column(

@@ -1,9 +1,42 @@
 package graft
 
 /** Driver-contract smoke: entry() returns rows, every registry entry has a
-  * runnable query, and oracle keys are a subset of query keys with matching
-  * column discipline. */
+  * runnable query, oracle keys are a subset of query keys with matching
+  * column discipline, and every runnable main has a caller. */
 class EntrySpec extends SparkSpec {
+
+  /** Mains no spec or perfbench workload reaches, each with its reason. */
+  private val uncalledMains = Map(
+    "Explain" -> "writes PLANS.md, the plan evidence, when run by hand")
+
+  private def sources(root: String, ext: Set[String]): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else if (ext.exists(f.getName.endsWith)) Seq(f) else Nil
+    walk(new java.io.File(root))
+  }
+  private def read(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
+  test("every main under graft/ is called from a spec or perfbench, or exempt") {
+    // one chunk per top-level object, from its `object` line to the next
+    val objectName = """object (\w+)""".r
+    val mains = sources("src/main/scala/graft", Set(".scala"))
+      .flatMap(f => read(f).split("(?m)^(?=object )").toSeq)
+      .filter(_.contains("def main(args: Array[String])"))
+      .flatMap(objectName.findPrefixMatchOf(_).map(_.group(1))).toSet
+    assert(mains.contains("BillMatch") && mains.contains("Bench"), s"scan found $mains")
+    assert(uncalledMains.keySet.subsetOf(mains),
+      s"exempt names that are no main: ${uncalledMains.keySet -- mains}")
+    val callers = (sources("src/test/scala", Set(".scala"))
+        .filterNot(_.getName == "EntrySpec.scala") ++
+      sources("perfbench", Set(".scala", ".py"))).map(read)
+    val uncalled = mains.filter(m =>
+      !callers.exists(s"\\b$m\\.\\w".r.findFirstIn(_).isDefined))
+    assert(uncalled == uncalledMains.keySet,
+      s"mains with no caller: ${uncalled -- uncalledMains.keySet}; exempt " +
+        s"mains that have one now: ${uncalledMains -- uncalled}")
+  }
 
   test("entry() runs on sf0.001 and returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)

@@ -150,8 +150,8 @@ class PlanShapeSpec extends SparkSpec {
     * token stream instead (BuildLeft over the Generate): both a Generate and
     * a post-aggregate frame have fiction for size estimates, and the corpus
     * side won — 2.5M token rows to the driver, 5× slower at 10× replication
-    * (SCALEPROBE r10). The explicit broadcast(enc) hint pins the build side;
-    * this guard keeps it pinned. */
+    * (r10). The explicit broadcast(enc) hint pins the build side; this
+    * guard keeps it pinned. */
   test("q_bpe_encode broadcasts the vocab, never the token stream") {
     // the q_bpe_encode JOIN SHAPE with stub merges: planOf on the real query
     // would execute Bpe.learn (8 driver-collect jobs + a caller-owned persist

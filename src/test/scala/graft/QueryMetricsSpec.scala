@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit}
 
-/** The per-query listener Bench and ScaleProbe share: the reset/snapshot
-  * window holds exactly the measured query's jobs, streaming micro-batches
-  * included, and the bus drain makes repeated readings exact. */
+/** Bench's per-query listener: the reset/snapshot window holds exactly the
+  * measured query's jobs, streaming micro-batches included, and the bus
+  * drain makes repeated readings exact. */
 class QueryMetricsSpec extends SparkSpec {
 
   private def measure(metrics: QueryMetrics)(run: => Unit): QueryProfile = {

@@ -11,7 +11,7 @@ cd "$(dirname "$0")/.."
 
 ARTIFACTS=$(ls BENCH_r*.json BENCH_DETAIL.json CORRECTNESS_r*.json \
                LEAKCHECK.json BASELINE.json \
-               VERDICT.md ADVICE.md SCALEPROBE.md SCALE.md COVERAGE.md \
+               VERDICT.md ADVICE.md SCALE.md COVERAGE.md \
                PLANS.md 2>/dev/null || true)
 [ -z "$ARTIFACTS" ] && { echo "no artifact files present"; exit 0; }
 
