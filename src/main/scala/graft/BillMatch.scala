@@ -5,7 +5,7 @@ import graft.cluster.Clustering
 import graft.graph.GraphOps
 import graft.io.Tables
 import graft.post.Post
-import graft.similarity.Kernels
+import graft.similarity.BlockScore
 import graft.text.{FeatureConfig, FeaturePipeline}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.BillMatch [sfDir] [outDir] [measure] [k] [topK] [blocking]
   *   measure  ∈ cosine|manhattan|hamming|jaccard|maxasymjaccard|
-  *              weighted_jaccard|left_jaccard|right_jaccard
+  *              weighted_jaccard|left_jaccard|right_jaccard|dense_jaccard
   *   blocking ∈ kmeans (workflow 1) | minhash (workflow 2: the reference's
   *              ExtractMinHashLSH — ONE corpus-wide LSH join with the
   *              cross-group constraint as a join predicate, replacing its
@@ -50,8 +50,9 @@ object BillMatch {
     // corpus spread across partitions (single-file testdata artifact)
     val docs = Tables.spread(Tables.documents(spark, sfDir))
 
-    // frames this run caches, released after their last use
-    val (sims, cached) = blocking match {
+    // the top-K pairs, the doc and pair counts, and the frames released at
+    // the end
+    val (top, nDocs, nPairs, cached) = blocking match {
       case "minhash" =>
         // workflow 2: binary TF features (set semantics) → one corpus-wide
         // MinHash LSH join → cross-lang predicate → scaled similarity
@@ -60,14 +61,19 @@ object BillMatch {
           FeatureConfig(numTextFeatures = 1 << 16, useIdf = false))
           .select("doc_id", "lang", "features")
         val langs = tf.select(col("doc_id"), col("lang"))
-        graft.lsh.LshJoins.minHashSelfJoin(
+        // persisted once: top-K, the graph edges and the pair count all reuse
+        // it instead of re-running the join
+        val sims = graft.lsh.LshJoins.minHashSelfJoin(
             tf.select("doc_id", "features"), "doc_id", "features",
             threshold = 0.95, numTables = 32)
           .join(langs.select(col("doc_id").as("pk1"), col("lang").as("l1")), "pk1")
           .join(langs.select(col("doc_id").as("pk2"), col("lang").as("l2")), "pk2")
           .filter(col("l1") =!= col("l2"))
           .select(col("pk1"), col("pk2"),
-            ((lit(1.0) - col("jaccard_dist")) * 100.0).as("similarity")) -> Nil
+            ((lit(1.0) - col("jaccard_dist")) * 100.0).as("similarity"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val top = Post.topK(sims, topK).cache()
+        (top, docs.count(), sims.count(), List(sims, top))
       case _ =>
         // workflow 1:
         // 1. features (clean → tokenize → stopwords → TF-IDF)
@@ -77,27 +83,17 @@ object BillMatch {
         // 2. k-means blocking (the reference's ~27× all-pairs cut)
         val (model, clustered) = Clustering.kmeans(feats, k = k, maxIter = 20)
         println(f"[billmatch] kmeans wssse=${model.summary.trainingCost}%.3e")
-        // 3. blocked candidate self-join (equi-key on cluster, pk1<pk2, cross-lang)
-        val pairs = Candidates.pairs(clustered, CandidateConfig(
+        // 3-5. within each block, the cross-lang, length-banded pk1 < pk2
+        //    pairs scored and ranked in one pass; top is a local frame
+        val scored = BlockScore.topK(clustered, CandidateConfig(
           keyCol = "doc_id", groupCol = "lang", blockCol = Some("prediction"),
-          lengthCol = Some("n_chars"), maxLengthRatio = 0.26))
-        // 4. similarity kernel on candidate pairs (vectors re-attached AFTER
-        //    the pair join — wide payloads never ride the candidate shuffle)
-        val kernel = Kernels.udfFor(measure)
-        Candidates.attachBothSides(pairs,
-            clustered.select(col("doc_id"), col("features")), "doc_id", "features")
-          .select(col("pk1"), col("pk2"),
-            kernel(col("features_1"), col("features_2")).as("similarity")) -> List(feats)
+          lengthCol = Some("n_chars"), maxLengthRatio = 0.26), "features", measure, topK)
+        feats.unpersist()
+        (scored.top, scored.rows, scored.pairs, Nil)
     }
-
-    // 5. post-process: global top-K, parquet sink. The candidate joins already
-    // guarantee pk1 < pk2, which IS canonical order for numeric doc ids —
-    // Post.imposeCanonicalOrder's state-token reorder applies to the
-    // reference's "STATE_year_docid" string keys, not here. The similarity
-    // frame is persisted once: top-K, the graph edges and the pair count all
-    // reuse it instead of re-running the join+kernel plan.
-    val simsP = sims.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val top = Post.topK(simsP, topK).cache()
+    // The candidate pairs are pk1 < pk2, which IS canonical order for numeric
+    // doc ids — Post.imposeCanonicalOrder's state-token reorder applies to
+    // the reference's "STATE_year_docid" string keys, not here.
     top.write.mode("overwrite").parquet(s"$outDir/pairs.parquet")
 
     // 6. graph stage: pagerank + triangles over the top matches
@@ -108,10 +104,8 @@ object BillMatch {
     val graphStats = pr.join(tri, Seq("vertex"), "outer")
     graphStats.write.mode("overwrite").parquet(s"$outDir/graph.parquet")
 
-    val nDocs = docs.count()
-    val nPairs = simsP.count()
     val topRows = top.limit(5).collect()
-    (simsP :: top :: cached).foreach(_.unpersist())
+    cached.foreach(_.unpersist())
     println(s"[billmatch] docs=$nDocs pairs=$nPairs blocking=$blocking measure=$measure k=$k")
     topRows.foreach(r => println(s"[billmatch] top: $r"))
     println(s"[billmatch] wrote $outDir/pairs.parquet and $outDir/graph.parquet")

@@ -10,16 +10,22 @@ import org.apache.spark.sql.functions._
   * The reference collects the whole metadata table to the driver, broadcasts
   * it, and flatMaps a quadratic loop — which caps the corpus at driver memory.
   * Here pair generation is ONE declarative self-join:
-  *   - blocking label equality (k-means/LDA `prediction`) is the EQUI key, so
-  *     Catalyst plans a shuffled hash/sort-merge join partitioned by cluster —
-  *     each executor sees only its clusters' rows (the ~27× pair cut,
-  *     docs/tuning_kmeans.md:200-207, without a driver round-trip);
+  *   - blocking label equality (k-means/LDA `prediction`) is the EQUI key (the
+  *     ~27× pair cut, docs/tuning_kmeans.md:200-207, without a driver
+  *     round-trip). The join side is only (key, group, block, length), so
+  *     while it fits under spark.sql.autoBroadcastJoinThreshold Catalyst
+  *     broadcasts it (every test and benchmark corpus); past that it plans
+  *     a shuffled join partitioned by cluster, each executor seeing only its
+  *     clusters' rows;
   *   - pk1 < pk2 dedups symmetric pairs (Utils.scala:75,88);
   *   - group1 != group2 is the cross-state constraint;
   *   - the optional length-ratio band |l1−l2|/√(l1·l2) < maxRatio is
-  *     optimization level 2 (Utils.scala:79,96).
+  *     optimization level 2 (Utils.scala:79,96). A pair with a zero length
+  *     (an empty text) fails the band, as its Infinity or NaN ratio does in
+  *     the reference's double arithmetic.
   * AQE's skew-join handling replaces hand salting for hot clusters (the
-  * 27 800-doc cluster of docs/tuning_kmeans.md:130).
+  * 27 800-doc cluster of docs/tuning_kmeans.md:130). Workflow 1 scores its
+  * pairs without materializing them: [[graft.similarity.BlockScore]].
   */
 final case class CandidateConfig(
     keyCol: String = "primary_key",
@@ -32,13 +38,22 @@ final case class CandidateConfig(
 
 object Candidates {
 
-  /** Self-join producing (pk1, pk2) candidate pairs under `cfg`. */
-  def pairs(df: DataFrame, cfg: CandidateConfig): DataFrame = {
-    val base = (cfg.includeKeys, cfg.excludeKeys) match {
+  /** `df` restricted to `cfg`'s include or exclude list (P4). */
+  def restrict(df: DataFrame, cfg: CandidateConfig): DataFrame =
+    (cfg.includeKeys, cfg.excludeKeys) match {
       case (Some(keys), _) => df.filter(col(cfg.keyCol).isin(keys: _*))
       case (_, Some(keys)) => df.filter(!col(cfg.keyCol).isin(keys: _*))
       case _ => df
     }
+
+  /** |l1−l2|/√(l1·l2) < maxLengthRatio; a zero denominator gives null, so
+    * the pair is dropped, where `/` would raise DIVIDE_BY_ZERO under ANSI. */
+  private def lengthBand(l1: Column, l2: Column, cfg: CandidateConfig): Column =
+    try_divide(abs(l1 - l2), sqrt(l1.cast("double") * l2)) < cfg.maxLengthRatio
+
+  /** Self-join producing (pk1, pk2) candidate pairs under `cfg`. */
+  def pairs(df: DataFrame, cfg: CandidateConfig): DataFrame = {
+    val base = restrict(df, cfg)
     val cols = Seq(cfg.keyCol, cfg.groupCol) ++ cfg.blockCol ++ cfg.lengthCol
     val t = base.select(cols.distinct.map(col): _*)
     val a = t.alias("a")
@@ -49,9 +64,8 @@ object Candidates {
     val blockCond: Column = cfg.blockCol
       .map(c => ac(c) === bc(c))
       .getOrElse(lit(true))
-    val lengthCond: Column = cfg.lengthCol.map { c =>
-      abs(ac(c) - bc(c)) / sqrt(ac(c).cast("double") * bc(c)) < cfg.maxLengthRatio
-    }.getOrElse(lit(true))
+    val lengthCond: Column = cfg.lengthCol.map(c => lengthBand(ac(c), bc(c), cfg))
+      .getOrElse(lit(true))
 
     a.join(b,
         blockCond &&
@@ -75,11 +89,7 @@ object Candidates {
     * join's equi-key. */
   def pairsLevel0(df: DataFrame, cfg: CandidateConfig,
                   onlyInOut: Boolean = false): DataFrame = {
-    val base = (cfg.includeKeys, cfg.excludeKeys) match {
-      case (Some(keys), _) => df.filter(col(cfg.keyCol).isin(keys: _*))
-      case (_, Some(keys)) => df.filter(!col(cfg.keyCol).isin(keys: _*))
-      case _ => df
-    }
+    val base = restrict(df, cfg)
     val t = base.select(Seq(cfg.keyCol, cfg.groupCol).distinct.map(col): _*)
     val a = t.alias("a")
     val b = t.alias("b")
@@ -118,11 +128,7 @@ object Candidates {
                       bands: Int = 16): DataFrame = {
     val blockC = cfg.blockCol.getOrElse(
       throw new IllegalArgumentException("pairsWithBudget requires blockCol"))
-    val base = (cfg.includeKeys, cfg.excludeKeys) match {
-      case (Some(keys), _) => df.filter(col(cfg.keyCol).isin(keys: _*))
-      case (_, Some(keys)) => df.filter(!col(cfg.keyCol).isin(keys: _*))
-      case _ => df
-    }
+    val base = restrict(df, cfg)
     val sizes = base.groupBy(col(blockC)).agg(count(lit(1)).as("__bn"))
     val tagged = base.join(sizes, blockC) // small agg side: AQE broadcasts it
 
@@ -152,9 +158,8 @@ object Candidates {
     val b = sketched.alias("b")
     def ac(c: String) = col(s"a.$c")
     def bc(c: String) = col(s"b.$c")
-    val lengthCond: Column = cfg.lengthCol.map { c =>
-      abs(ac(c) - bc(c)) / sqrt(ac(c).cast("double") * bc(c)) < cfg.maxLengthRatio
-    }.getOrElse(lit(true))
+    val lengthCond: Column = cfg.lengthCol.map(c => lengthBand(ac(c), bc(c), cfg))
+      .getOrElse(lit(true))
     val lshPairs = a.join(b,
         (ac(blockC) === bc(blockC)) &&
         (ac("__band") === bc("__band")) && (ac("__bh") === bc("__bh")) &&

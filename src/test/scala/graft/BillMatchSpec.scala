@@ -2,11 +2,21 @@ package graft
 
 import java.nio.file.Files
 
+import graft.io.Tables
+import org.apache.spark.ml.linalg.SQLDataTypes.VectorType
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** The runnable [[BillMatch]] pipeline (k-means blocking) on the shared
   * session: the graph output ranks exactly the top-K pair endpoints, every
   * rank is a finite positive number, and the session is still usable after
-  * the run, with no RDD or plan left cached. */
-class BillMatchSpec extends SparkSpec {
+  * the run, with no RDD or plan left cached. Workflow 1 scores its pairs in
+  * [[graft.similarity.BlockScore]], so none of its queries scores a pair
+  * through a UDF or reads a cached frame but the features. */
+class BillMatchSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("kmeans run writes a graph over exactly the top-K endpoints and keeps the session") {
     val out = Files.createTempDirectory("billmatch-spec").toString
@@ -42,7 +52,24 @@ class BillMatchSpec extends SparkSpec {
 
   private def check(out: String): Unit = {
     val before = cachedState
-    BillMatch.run(spark, Array(sfDir, out, "cosine", "8", "100", "kmeans"))
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val printed = new java.io.ByteArrayOutputStream
+    spark.listenerManager.register(listener)
+    try Console.withOut(printed) {
+      BillMatch.run(spark, Array(sfDir, out, "cosine", "8", "100", "kmeans"))
+    } finally {
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    checkPlans(plans.synchronized(plans.toList))
+    val docs = "docs=(\\d+)".r.findFirstMatchIn(printed.toString).map(_.group(1).toLong)
+    assert(docs.contains(Tables.spread(Tables.documents(spark, sfDir)).count()),
+      s"printed docs=$docs")
     val after = cachedState
     assert((after._1 -- before._1).isEmpty && after._2 == before._2,
       s"the run persisted RDDs ${after._1 -- before._1} or changed the cache " +
@@ -52,6 +79,25 @@ class BillMatchSpec extends SparkSpec {
       .select("pk1", "pk2").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "no top-K pairs")
     checkGraph(out, pairs)
+  }
+
+  /** No UDF of two vectors (a pair measure) in any executed plan, cached
+    * plans included, and no cached frame but the features (doc_id, lang,
+    * n_chars, features). The walk must meet the k-means assignment, a UDF
+    * of one vector, or it saw no expression at all. */
+  private def checkPlans(plans: Seq[SparkPlan]): Unit = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(p) { case n => n }.flatMap {
+      case s: InMemoryTableScanExec => s +: walk(s.relation.cachedPlan)
+      case n => Seq(n)
+    }
+    val nodes = plans.flatMap(walk)
+    val udfs = nodes.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    def vectors(u: ScalaUDF) = u.children.count(_.dataType == VectorType)
+    assert(udfs.exists(vectors(_) == 1), s"no k-means assignment UDF in ${plans.size} plans")
+    assert(!udfs.exists(vectors(_) > 1), s"a pair is scored by a UDF: ${udfs.filter(vectors(_) > 1)}")
+    val cached = nodes.collect { case s: InMemoryTableScanExec => s.relation.output.map(_.name) }
+    assert(cached.nonEmpty && cached.forall(_ == Seq("doc_id", "lang", "n_chars", "features")),
+      s"cached frames read: ${cached.distinct}")
   }
 
   /** The graph ranks exactly the top-K endpoints, each once with a finite

@@ -1,6 +1,8 @@
 package graft.candidates
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
 /** Blocked candidate-pair self-join (SURVEY J2) — predicate semantics of the
   * reference's `pairup` (reference feature/Utils.scala:46-105). */
@@ -41,6 +43,29 @@ class CandidatesSpec extends SparkSpec {
     // |1000-5000|/sqrt(1000*5000) = 1.78 > 0.26 → (a,c) pruned
     assert(!got.contains(("a", "c")))
     assert(got.contains(("a", "b"))) // |1000-1100|/sqrt(1000*1100)=0.095
+  }
+
+  /** Under Spark 4's default ANSI mode `/` raises DIVIDE_BY_ZERO on the
+    * zero denominator of an empty text; the reference's double arithmetic
+    * gives Infinity or NaN, which fail the band. */
+  test("length band drops an empty-text doc's pairs instead of dividing by zero") {
+    val banded = base.copy(lengthCol = Some("length"), maxLengthRatio = 0.26)
+    val withEmpty = docs.union(Seq(("g", "MI", 0, 0L), ("h", "SC", 0, 0L))
+      .toDF("pk", "state", "prediction", "length"))
+    assert(withConfAnsi(Candidates.pairs(withEmpty, banded)) ==
+      Candidates.pairs(docs, banded).as[(String, String)].collect().toSet)
+
+    val vEmpty = vdocs.withColumn("length", lit(0L))
+    assert(withConfAnsi(Candidates.pairsWithBudget(vEmpty, banded, "features",
+      maxBlockSize = 4, numHashes = 64, bands = 8)).isEmpty)
+  }
+
+  private def withConfAnsi(pairs: => DataFrame): Set[(String, String)] = {
+    var got = Set.empty[(String, String)]
+    withConf(Seq("spark.sql.ansi.enabled" -> "true")) {
+      got = pairs.as[(String, String)].collect().toSet
+    }
+    got
   }
 
   test("include list restricts the universe") {
