@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape, stage by stage:
   *  - quality gate: narrow map + filter, no shuffle;
-  *  - exact dedup: one window over (md5(text), id) — 16-byte hashes shuffle,
-  *    text does not;
-  *  - near-dup: banded MinHash LSH bucket join ([[MinHashDedup.nearDupPairs]]),
-  *    never an all-pairs corpus join; greedy smaller-id survivor;
+  *  - exact dedup: one min_by aggregate over md5(text) — one survivor row
+  *    per hash per map partition crosses the shuffle;
+  *  - near-dup: banded MinHash LSH ([[MinHashDedup.nearDupPairs]]): each
+  *    document signed once, candidates from a bucket shuffle, never an
+  *    all-pairs corpus join; greedy smaller-id survivor;
   *  - decontamination: eval 4-gram set is DISTINCT'd then broadcast — the
   *    fact stream is never shuffled by the join;
   *  - split: deterministic 48-bit md5 bucket of the id — reproducible on any

@@ -110,19 +110,22 @@ object Candidates {
     * Blocks with ≤ `maxBlockSize` rows run the exact all-pairs join
     * unchanged. Oversized blocks switch to banded MinHash LSH over each
     * row's feature SUPPORT (nonzero indices): signatures are a narrow
-    * per-row map, the bucket key (block, band, bandhash) is the join's
-    * equi-key, and the pair count collapses from n² to bucket-local —
-    * retaining pairs with high support overlap, which is exactly the set a
-    * downstream cosine/jaccard top-K can score highly (disjoint supports ⇒
-    * similarity 0). Recall for support-Jaccard s is 1-(1-s^r)^bands,
-    * r = numHashes/bands — ≥ 0.998 at s ≥ 0.8 with the defaults.
+    * per-row map, the rows are bucketed by (block, band, bandhash) in
+    * [[graft.lsh.BucketPairs]] (each pair once, in its first shared band),
+    * and the pair count collapses from n² to bucket-local — retaining pairs
+    * with high support overlap, which is exactly the set a downstream
+    * cosine/jaccard top-K can score highly (disjoint supports ⇒ similarity
+    * 0). The group and length-band predicates apply to the emitted pairs,
+    * re-attached by [[attachBothSides]]. Recall for support-Jaccard s is
+    * 1-(1-s^r)^bands, r = numHashes/bands — ≥ 0.998 at s ≥ 0.8 with the
+    * defaults.
     *
     * The cap is a per-block PAIR budget in disguise (n² vs n·bucket): at
     * 100 TB this bounds the worst block's work without giving up the exact
-    * path where it is affordable. Note the two branches each re-evaluate the
-    * `base ⋈ sizes` lineage (Spark only shares the shuffle exchange, not the
-    * scan): callers running over an expensive upstream should persist `df` —
-    * the engine's own callers feed the already-cached feature frame. */
+    * path where it is affordable. Each branch re-evaluates `df`'s lineage
+    * (the LSH branch twice: once for the signatures, once for the
+    * attributes): callers running over an expensive upstream should persist
+    * `df`. */
   def pairsWithBudget(df: DataFrame, cfg: CandidateConfig, featuresCol: String,
                       maxBlockSize: Long, numHashes: Int = 32,
                       bands: Int = 16): DataFrame = {
@@ -134,40 +137,28 @@ object Candidates {
 
     val exact = pairs(tagged.filter(col("__bn") <= maxBlockSize).drop("__bn"), cfg)
 
-    val big = tagged.filter(col("__bn") > maxBlockSize).drop("__bn")
     val support = udf((v: org.apache.spark.ml.linalg.Vector) =>
       v.toSparse.indices.map(_.toLong))
-    val cols = Seq(cfg.keyCol, cfg.groupCol, blockC) ++ cfg.lengthCol
-    val sketched = big
-      .select((cols.distinct.map(col) :+ support(col(featuresCol)).as("__sup")): _*)
+    val slots = tagged.filter(col("__bn") > maxBlockSize)
+      .select(col(cfg.keyCol), support(col(featuresCol)).as("__sup"), col(blockC))
       // EMPTY supports (all-zero feature rows) get the identical all-sentinel
       // MinHash signature, so inside an oversized block they would collide in
       // every band — re-creating exactly the n² the guard exists to kill —
       // while a disjoint support can never score above similarity 0
       // downstream: drop them, no candidate is lost
       .filter(size(col("__sup")) > 0)
-      .select((cols.distinct.map(col) :+
-        graft.dedup.MinHashDedup.signature(
-          col("__sup"), numHashes).as("__sig")): _*)
-      .select((cols.distinct.map(col) :+
-        explode(graft.dedup.MinHashDedup.bandHashes(
-          col("__sig"), bands, numHashes)).as("__b")): _*)
-      .select((cols.distinct.map(col) :+
-        col("__b.band").as("__band")) :+ col("__b.bh").as("__bh"): _*)
-    val a = sketched.alias("a")
-    val b = sketched.alias("b")
-    def ac(c: String) = col(s"a.$c")
-    def bc(c: String) = col(s"b.$c")
-    val lengthCond: Column = cfg.lengthCol.map(c => lengthBand(ac(c), bc(c), cfg))
+      .select(col(cfg.keyCol), graft.dedup.MinHashDedup.bandHashes(
+        graft.dedup.MinHashDedup.signature(col("__sup"), numHashes),
+        bands, numHashes)("bh"), col(blockC))
+    val attrs = base.select(col(cfg.keyCol),
+      struct((col(cfg.groupCol).as("g") +: cfg.lengthCol.map(col(_).as("len")).toSeq): _*)
+        .as("__a"))
+    val lengthCond: Column = cfg.lengthCol
+      .map(_ => lengthBand(col("__a_1.len"), col("__a_2.len"), cfg))
       .getOrElse(lit(true))
-    val lshPairs = a.join(b,
-        (ac(blockC) === bc(blockC)) &&
-        (ac("__band") === bc("__band")) && (ac("__bh") === bc("__bh")) &&
-        (ac(cfg.keyCol) < bc(cfg.keyCol)) &&
-        (ac(cfg.groupCol) =!= bc(cfg.groupCol)) &&
-        lengthCond)
-      .select(ac(cfg.keyCol).as("pk1"), bc(cfg.keyCol).as("pk2"))
-      .dropDuplicates("pk1", "pk2")
+    val lshPairs = attachBothSides(graft.lsh.BucketPairs.self(slots), attrs, cfg.keyCol, "__a")
+      .filter(col("__a_1.g") =!= col("__a_2.g") && lengthCond)
+      .select(col("pk1"), col("pk2"))
 
     exact.unionByName(lshPairs)
   }

@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * workflow (reference ExtractMinHashLSH.scala:104-115: 100 tables, 5-gram
   * shingles; CustomizedMinHashLSH.scala:33-43 permutation hashes).
   *
-  * Everything is a Column expression over arrays — signature computation is
-  * a per-row map (no fit job, no model broadcast), and the only shuffles are
-  * the band-bucket self-join and the final dedup. At 100 TB this is:
-  * scan → narrow map (signatures) → explode bands (×nBands) → shuffle on
-  * (band, hash) → join within buckets → verify. Candidate verification uses
+  * Signature computation is a per-row Column map (no fit job, no model
+  * broadcast), and candidates come from a bucket shuffle. At 100 TB this
+  * is: scan → narrow map (signatures) → one shuffle of each row per band on
+  * (band, hash) → pairs streamed bucket by bucket, hot buckets split into
+  * tiles ([[graft.lsh.BucketPairs]]) → verify. Candidate verification uses
   * exact token-set Jaccard, so false positives cost only the verify compute.
   *
   * Hash family: h_k(x) = (a_k·x + b_k) mod p over 31-bit-reduced xxhash64
@@ -92,11 +92,10 @@ object MinHashDedup {
   /** The reusable per-document dedup sketch: `(__id, __sids, __bands)` —
     * verify shingle-id sets plus banded signature bucket keys, no raw text.
     * This is the frame an incremental ingest pipeline computes ONCE per
-    * corpus and keeps (persisted here; written as a parquet table at real
-    * scale) so each arriving batch sketches only itself and joins against
-    * the stored corpus sketch ([[dedupAgainst]]). Only the band keys and
-    * the verify sets survive — __shingles/__sig are dead once __bands is
-    * computed, and caching them would double the sketch footprint. */
+    * corpus and keeps (written as a parquet table at real scale) so each
+    * arriving batch sketches only itself and joins against the stored corpus
+    * sketch ([[dedupAgainst]]). Only the band keys and the verify sets
+    * survive — __shingles/__sig are dead once __bands is computed. */
   def sketch(df: DataFrame, cfg: Config = Config()): DataFrame =
     df.select(
       col(cfg.idCol).as("__id"),
@@ -107,11 +106,16 @@ object MinHashDedup {
       .select(col("__id"), col("__sids"), col("__bands"))
 
   /** (__id, __band, __bh) bucket rows from a [[sketch]] frame — the equi-join
-    * key table for batch ([[dedupAgainst]]) and streaming (stream-static
-    * band join) incremental dedup. */
+    * key table of the streaming (stream-static band join) incremental
+    * dedup. */
   def bandBuckets(sk: DataFrame): DataFrame =
     sk.select(col("__id"), explode(col("__bands")).as("__b"))
       .select(col("__id"), col("__b.band").as("__band"), col("__b.bh").as("__bh"))
+
+  /** (__id, band hashes in band order) of a [[sketch]] frame: the rows
+    * [[graft.lsh.BucketPairs]] buckets, one slot per band. */
+  private[graft] def bandSlots(sk: DataFrame): DataFrame =
+    sk.select(col("__id"), col("__bands")("bh").as("__bhs"))
 
   /** Near-duplicate candidate pairs with exact-Jaccard verification over the
     * SAME shingle sets the signatures sketch — the quantity MinHash actually
@@ -119,38 +123,16 @@ object MinHashDedup {
     * oracle (and a candidate that survives is a true shingle-level near-dup).
     * Returns (d1, d2, jac) with d1 < d2 and jac >= cfg.jaccardThreshold·100.
     *
-    * Shuffle discipline (the 100 TB shape): the band-bucket self-join and the
-    * (d1,d2) dedup run over ID-ONLY rows — the shingle arrays never enter the
-    * bucket shuffle. Shingle sets are re-attached afterwards by two equi-joins
-    * against the prepared table, so the wide payload crosses the wire only
-    * |verified candidates| times, not |bucket pairs|·|bands| times. */
+    * Shuffle discipline (the 100 TB shape): the candidates are the pairs that
+    * share a (band, band hash) bucket, found by [[graft.lsh.BucketPairs]]
+    * from a shuffle of ID + band-hash rows; each document is signed once,
+    * and the shingle arrays never enter the bucket shuffle. Shingle sets are
+    * re-attached afterwards by two equi-joins, so the wide payload crosses
+    * the wire only |candidates| times, not |bucket pairs|·|bands| times. */
   def nearDupPairs(df: DataFrame, cfg: Config = Config()): DataFrame = {
     val prepared = sketch(df, cfg)
-
-    // r14 (guide §2.4): dedup of multi-band candidate pairs is a SCALAR
-    // predicate — keep a pair only in its FIRST matching band
-    // (graft_first_eq_slot over the position-aligned band-hash arrays both
-    // sides already computed) — instead of a dropDuplicates exchange over
-    // the candidate multiset. Identical pair set; the band-hash array adds
-    // `bands` longs per bucket row on the corpus side, while the pair
-    // stream (≫ corpus on dup-heavy input, the whole point of dedup)
-    // stops crossing any exchange.
-    val bk = prepared.select(col("__id"), col("__bands")("bh").as("__bhs"),
-        explode(col("__bands")).as("__b"))
-      .select(col("__id"), col("__bhs"),
-        col("__b.band").as("__band"), col("__b.bh").as("__bh"))
-    val a = bk.alias("a")
-    val b = bk.alias("b")
-    val firstEq = org.apache.spark.sql.graft.bridge.column(
-      graft.expressions.FirstEqSlot(
-        org.apache.spark.sql.graft.bridge.expression(col("a.__bhs")),
-        org.apache.spark.sql.graft.bridge.expression(col("b.__bhs"))))
-    val cand = a.join(b,
-        col("a.__band") === col("b.__band") &&
-        col("a.__bh") === col("b.__bh") &&
-        col("a.__id") < col("b.__id"))
-      .filter(firstEq === col("a.__band"))
-      .select(col("a.__id").as("d1"), col("b.__id").as("d2"))
+    val cand = graft.lsh.BucketPairs.self(bandSlots(prepared))
+      .select(col("pk1").as("d1"), col("pk2").as("d2"))
 
     val sets = prepared.select(col("__id"), col("__sids"))
     val withSets = cand
@@ -201,13 +183,13 @@ object MinHashDedup {
     *   1. exact-content: anti-join on md5(text) — only 16-byte hashes cross
     *      the wire, and it also catches sub-shingle-length exact dups whose
     *      empty shingle sets the Jaccard gate defines as jac = 0.
-    *   2. near-dup: batch [[sketch]] bucket-joined against the corpus
-    *      [[sketch]] on (band, bandhash) — a batch×corpus equi-join, NOT a
-    *      corpus self-join — candidates verified by exact shingle-set
+    *   2. near-dup: batch [[sketch]] bucketed against the corpus [[sketch]]
+    *      on (band, bandhash) — the cross form of [[graft.lsh.BucketPairs]],
+    *      NOT a corpus self-join — candidates verified by exact shingle-set
     *      Jaccard, matched batch ids anti-joined away.
     * The corpus side is accepted pre-sketched (pass `corpusSketch` built by
-    * [[sketch]] and persisted/written once) so successive batches reuse it;
-    * the convenience overload sketches a raw corpus frame per call.
+    * [[sketch]] and written once) so successive batches reuse it; the
+    * convenience overload sketches a raw corpus frame per call.
     *
     * Returns surviving `batch` rows with their original columns. Batch and
     * corpus id spaces may overlap — candidate pairs are keyed (batch id,
@@ -219,24 +201,8 @@ object MinHashDedup {
         md5(col(cfg.textCol).cast("binary")) === col("__h"), "left_anti")
 
     val bs = sketch(exactSurvivors, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // first-matching-band dedup of (batch, corpus) candidates — the same
-    // scalar-predicate replacement for dropDuplicates as nearDupPairs (r14)
-    def bucketsWithBhs(sk: DataFrame): DataFrame =
-      sk.select(col("__id"), col("__bands")("bh").as("__bhs"),
-          explode(col("__bands")).as("__b"))
-        .select(col("__id"), col("__bhs"),
-          col("__b.band").as("__band"), col("__b.bh").as("__bh"))
-    val a = bucketsWithBhs(bs).alias("a")
-    val c = bucketsWithBhs(corpusSketch).alias("c")
-    val firstEq = org.apache.spark.sql.graft.bridge.column(
-      graft.expressions.FirstEqSlot(
-        org.apache.spark.sql.graft.bridge.expression(col("a.__bhs")),
-        org.apache.spark.sql.graft.bridge.expression(col("c.__bhs"))))
-    val cand = a.join(c,
-        col("a.__band") === col("c.__band") && col("a.__bh") === col("c.__bh"))
-      .filter(firstEq === col("a.__band"))
-      .select(col("a.__id").as("bid"), col("c.__id").as("cid"))
+    val cand = graft.lsh.BucketPairs.cross(bandSlots(bs), bandSlots(corpusSketch))
+      .select(col("left").as("bid"), col("right").as("cid"))
 
     val jacRaw = org.apache.spark.sql.graft.bridge.column(
       graft.expressions.ArraySetJaccard(
@@ -257,10 +223,7 @@ object MinHashDedup {
     * an ingest loop should build the corpus [[sketch]] + text-hash table
     * once and pass them in). */
   def dedupAgainst(batch: DataFrame, corpus: DataFrame,
-                   cfg: Config = Config()): DataFrame = {
-    val cs = sketch(corpus, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    dedupAgainst(batch, cs,
+                   cfg: Config = Config()): DataFrame =
+    dedupAgainst(batch, sketch(corpus, cfg),
       corpus.select(md5(col(cfg.textCol).cast("binary")).as("__h")), cfg)
-  }
 }

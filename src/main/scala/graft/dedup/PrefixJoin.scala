@@ -55,7 +55,7 @@ import org.apache.spark.sql.functions._
   * (the MinHashDedup discipline: wide arrays never ride the candidate
   * shuffle).
   *
-  * Cache lifecycle (caller-owned, the MinHashDedup convention): each call
+  * Cache lifecycle (caller-owned): each call
   * persists its bounded sketch frame (ids + sorted shingle-id sets — no raw
   * text) at MEMORY_AND_DISK because four plan branches reuse it and Catalyst
   * cannot share an uncached subplan across them. The returned DataFrame

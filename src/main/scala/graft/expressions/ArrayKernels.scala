@@ -259,44 +259,3 @@ case class SortedLongInterCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
-
-/** Index of the FIRST slot where two equal-length long arrays agree, −1 when
-  * none do (r14, guide §2.4). Lets an LSH bucket self-join deduplicate
-  * multi-table candidate pairs with a SCALAR predicate — keep the pair only
-  * in the table that equals its first matching slot — instead of a
-  * dropDuplicates exchange over the full candidate multiset (the pair set is
-  * usually far larger than the corpus, so this removes the one shuffle the
-  * candidate stream paid). */
-case class FirstEqSlot(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "graft_first_eq_slot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0
-    while (i < n) {
-      if (x.getLong(i) == y.getLong(i)) return i
-      i += 1
-    }
-    -1
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val found = ctx.freshName("found")
-      s"""
-      int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-      int $found = -1;
-      for (int $i = 0; $i < $n; $i++) {
-        if ($a.getLong($i) == $b.getLong($i)) { $found = $i; break; }
-      }
-      ${ev.value} = $found;"""
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}

@@ -2,8 +2,9 @@ package graft.lsh
 
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, MinHashLSH, MinHashLSHModel}
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Approximate-similarity self-joins on stock Spark ML LSH estimators
   * (SURVEY M11/M12/J3).
@@ -31,20 +32,15 @@ object LshJoins {
     * (ExtractMinHashLSH.scala:108-111) — defaults lowered for test scale. */
   def minHashSelfJoin(df: DataFrame, idCol: String, featuresCol: String,
                       threshold: Double, numTables: Int = 16,
-                      seed: Long = 12345L): DataFrame = {
+                      seed: Long = 12345L): DataFrame =
     // docs whose text reduces to nothing (all stopwords/digits) are empty
-    // SETS — no near-dup semantics — and would otherwise kill the whole job
-    val nonEmpty = df.filter(nnz(col(featuresCol)) > 0)
-    val model = new MinHashLSH()
-      .setInputCol(featuresCol).setOutputCol("__hashes")
-      .setNumHashTables(numTables).setSeed(seed)
-      .fit(nonEmpty)
-    selfJoinWithModel(model, nonEmpty, idCol, featuresCol, threshold)
-  }
+    // SETS — no near-dup semantics. The estimator's coefficients need no fit.
+    selfJoinOnVectors(df.filter(nnz(col(featuresCol)) > 0), idCol, featuresCol,
+      mlCoefficients(numTables, seed), threshold)
 
   /** The fitted model's private (a, b) hash coefficients, read by reflection
     * (the LshJoinsSpec pin's recipe): using the model's OWN coefficients —
-    * rather than replaying the seed derivation — keeps [[selfJoinWithModel]]
+    * rather than replaying the seed derivation — keeps [[MinHashIndex]]
     * exact for any model, including one loaded from disk that was fitted by
     * a different Spark build. */
   private def modelCoefficients(model: MinHashLSHModel): Array[(Int, Int)] = {
@@ -63,8 +59,8 @@ object LshJoins {
   /** The estimator's documented coefficient derivation (MinHashLSH.fit:
     * `new Random(seed)`, then per table `(1 + nextInt(P−1), nextInt(P−1))`)
     * — reflection-pinned against a fitted model in LshJoinsSpec, so a Spark
-    * upgrade that changes it fails `sbt test` loudly. Lets the set-based
-    * join path ([[minHashSelfJoinSets]]) bucket identically to the
+    * upgrade that changes it fails `sbt test` loudly. Lets [[minHashSelfJoin]],
+    * [[minHashSelfJoinSets]] and [[minHashKnn]] bucket identically to the
     * estimator without fitting a model at all (the fit is data-independent
     * apart from an input-dimension lookup). */
   private[graft] def mlCoefficients(numTables: Int, seed: Long): Array[(Int, Int)] = {
@@ -72,6 +68,15 @@ object LshJoins {
     Array.fill(numTables)(
       (1 + r.nextInt((MlHashPrime - 1).toInt), r.nextInt((MlHashPrime - 1).toInt)))
   }
+
+  /** The ML family's signature of a sorted index-set column. a·i + (a + b)
+    * == (1 + i)·a + b: the +1 folds into the offset, so the generic
+    * signature kernel evaluates the family unchanged. */
+  private def mlSignature(idx: org.apache.spark.sql.Column,
+                          coefs: Array[(Int, Int)]): org.apache.spark.sql.Column =
+    org.apache.spark.sql.graft.bridge.column(graft.expressions.MinHashSignature(
+      org.apache.spark.sql.graft.bridge.expression(idx), coefs.map(_._1.toLong).toSeq,
+      coefs.map(c => c._1.toLong + c._2.toLong).toSeq, MlHashPrime))
 
   /** MinHash LSH self-join over a PRE-TOKENIZED sorted nonzero-index set
     * column (array<long>, ascending — e.g.
@@ -96,51 +101,30 @@ object LshJoins {
         .select(col(idCol), col(setCol).as("__idx")),
       idCol, mlCoefficients(numTables, seed), threshold)
 
-  /** The join body shared by the fit-inline path and the persisted-index
+  /** The join body shared by the inline path and the persisted-index
     * path. Same output as the stock `approxSimilarityJoin` (candidates =
     * pairs sharing ≥1 of the model's (table, minhash) buckets; exact
     * keyDistance verify `< threshold`; asymmetric distance recomputed) but
-    * on the banded-join physical shape the dedup module proved at scale
+    * on the banded shape the dedup module proved at scale
     * (MinHashDedup.nearDupPairs): the estimator's own join explodes every
     * bucket-sharing pair WITH both sparse vectors attached and evaluates an
     * interpreted keyDistance UDF per candidate — measured 195 s at 1× and
     * OOM at 10× on a 16 GiB heap, vs 2.78 s for the banded shape on the
-    * same corpus (r8). Here the bucket self-join carries ID +
-    * (table, hash) ONLY; the verify payloads are re-attached by two
-    * equi-joins for the |candidates| survivors, so the wide payload never
-    * rides the bucket shuffle.
+    * same corpus (r8). Here the bucket pass ([[BucketPairs]]) carries ID +
+    * signature ONLY; the verify payloads are re-attached by two equi-joins
+    * for the |candidates| survivors, so the wide payload never rides the
+    * bucket shuffle.
     *
-    * r13 (optimization round, guide §2.3/§2.4/§4.1): the corpus-scale map
-    * side is now fully codegen — the model's `transform` (a per-row Scala
-    * UDF allocating 16 one-element DenseVectors per row) and the nonzero-
-    * index UDF are replaced by [[graft.expressions.VectorNzIndices]] plus
-    * the existing [[graft.expressions.MinHashSignature]] kernel evaluating
-    * the model's OWN reflection-read coefficients: sig_k = min over nonzero
-    * indices i of (a_k·i + (a_k + b_k)) mod P, which is term-for-term
-    * ((1 + i)·a_k + b_k) mod P — the estimator's exact integer arithmetic
-    * (no overflow: a_k·i < 2^41). Bucket keys join as the exact LONG values
-    * instead of their Double images (same equalities, narrower shuffle).
-    * The former four re-attach joins (sizes ×2, then index arrays ×2) are
-    * consolidated into two — (n, idx) attach together — which removes two
-    * exchanges/broadcast jobs per run; the size-ratio prefilter survives as
-    * a scalar Filter before the merge-count (for sets J ≤ min/max, so the
-    * ratio alone can prove dist ≥ threshold; the 1e-9 slack over-KEEPS
-    * near-boundary pairs — they are re-judged by the exact verify — never
-    * over-drops). The heavy bytes are unchanged: the attrs-side shuffle
-    * carried the index arrays before and after; only the separate
-    * two-int sizes shuffle disappears. Output bit-identical (q_minhash_lsh
-    * DuckDB hash gate re-proven in-round).
-    *
-    * Cache lifecycle (caller-owned, the MinHashDedup/PrefixJoin convention):
-    * the hashed frame below persists at MEMORY_AND_DISK because three plan
-    * branches reuse it, and the returned (lazy) DataFrame still references
-    * it — so this method cannot unpersist before the caller materializes.
-    * Long-lived sessions issuing many LSH joins should
-    * `spark.catalog.clearCache()` after consuming each result; blocks are
-    * spill-safe, so the leak costs storage memory, never correctness. */
-  private def selfJoinWithModel(model: MinHashLSHModel, nonEmpty: DataFrame,
-                                idCol: String, featuresCol: String,
-                                threshold: Double): DataFrame = {
+    * The map side is codegen: [[graft.expressions.VectorNzIndices]] plus the
+    * [[graft.expressions.MinHashSignature]] kernel evaluating the model's
+    * coefficients: sig_k = min over nonzero indices i of
+    * (a_k·i + (a_k + b_k)) mod P, which is term-for-term ((1 + i)·a_k + b_k)
+    * mod P — the estimator's exact integer arithmetic (no overflow:
+    * a_k·i < 2^41). Bucket keys are the exact LONG values instead of their
+    * Double images (same equalities, narrower shuffle). Nothing is
+    * persisted: the signatures are computed once, in the bucket pass. */
+  private def selfJoinOnVectors(nonEmpty: DataFrame, idCol: String, featuresCol: String,
+                                coefs: Array[(Int, Int)], threshold: Double): DataFrame = {
     // The verify payload is the SORTED NONZERO-INDEX SET (array<long>), not
     // the feature vector: every reported distance — Jaccard AND the
     // reference's left/right asymmetric kernels — is a function of
@@ -150,57 +134,21 @@ object LshJoins {
       graft.expressions.VectorNzIndices(
         org.apache.spark.sql.graft.bridge.expression(col(featuresCol))))
     selfJoinOnSets(nonEmpty.select(col(idCol), nzIdx.as("__idx")),
-      idCol, modelCoefficients(model), threshold)
+      idCol, coefs, threshold)
   }
 
   /** The shared banded-join body over (idCol, __idx sorted array<long>). */
   private def selfJoinOnSets(sets: DataFrame, idCol: String,
                              coefs: Array[(Int, Int)],
                              threshold: Double): DataFrame = {
-    val as = coefs.map(_._1.toLong).toSeq
-    // a·i + (a + b) == (1 + i)·a + b — fold the +1 into the offset so the
-    // generic signature kernel evaluates the ML family unchanged
-    val bs = coefs.map(c => c._1.toLong + c._2.toLong).toSeq
-    val sig = org.apache.spark.sql.graft.bridge.column(
-      graft.expressions.MinHashSignature(
-        org.apache.spark.sql.graft.bridge.expression(col("__idx")),
-        as, bs, MlHashPrime))
-    // persisted: reused by both bucket-join sides and the attrs rejoins
-    // (same rationale as MinHashDedup.nearDupPairs; bounded: id +
-    // numTables longs + nnz longs — no vectors)
-    val hashed = sets
-      .withColumn("__n", size(col("__idx")))
-      .withColumn("__sig", sig)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r14 (guide §2.4 — remove shuffles outright): candidate DEDUP is a
-    // scalar predicate, not an exchange. A pair sharing k > 1 of the
-    // numTables (table, minhash) buckets used to emerge k times from the
-    // bucket join and pay a dropDuplicates shuffle over the full candidate
-    // multiset (the one exchange the pair stream crossed — candidates ≫
-    // corpus on any near-dup-rich input). Carrying each side's signature
-    // array through the explode (numTables longs per bucket row — corpus-
-    // side, bounded) lets the join keep a pair ONLY in its first matching
-    // table: graft_first_eq_slot(sig_a, sig_b) == __t. Exactly one survivor
-    // per candidate pair, identical pair set, zero pair-stream exchanges.
-    // The size-ratio prebound (J ≤ min/max ⇒ dist ≥ 1 − min/max) also moves
-    // INTO the join filter, so hopeless pairs die before the attrs attach.
-    val buckets = hashed
-      .select(col(idCol).as("__bid"), col("__n"), col("__sig"),
-        posexplode(col("__sig")).as(Seq("__t", "__h")))
-    val a = buckets.alias("a")
-    val b = buckets.alias("b")
-    val firstEq = org.apache.spark.sql.graft.bridge.column(
-      graft.expressions.FirstEqSlot(
-        org.apache.spark.sql.graft.bridge.expression(col("a.__sig")),
-        org.apache.spark.sql.graft.bridge.expression(col("b.__sig"))))
-    val cand = a.join(b,
-        col("a.__t") === col("b.__t") && col("a.__h") === col("b.__h") &&
-        col("a.__bid") < col("b.__bid") &&
-        lit(1.0) - least(col("a.__n"), col("b.__n")).cast("double")
-          / greatest(col("a.__n"), col("b.__n")) < threshold + 1e-9)
-      .filter(firstEq === col("a.__t"))
-      .select(col("a.__bid").as("pk1"), col("b.__bid").as("pk2"))
-    val attrs = hashed.select(col(idCol), col("__n"), col("__idx"))
+    // The verify join's null-intolerant intersection makes Catalyst infer
+    // isnotnull(__idx) on the attrs side; stating it for both sides keeps
+    // their source plans equal, so they share one exchange and the
+    // caller's featurization runs once.
+    val known = sets.filter(col("__idx").isNotNull)
+    // one slot per table: a pair comes out once, in its first shared table
+    val cand = BucketPairs.self(known.select(col(idCol), mlSignature(col("__idx"), coefs)))
+    val attrs = known.select(col(idCol), size(col("__idx")).as("__n"), col("__idx"))
     val inter = org.apache.spark.sql.graft.bridge.column(
       graft.expressions.SortedLongInterCount(
         org.apache.spark.sql.graft.bridge.expression(col("__i1")),
@@ -237,8 +185,8 @@ object LshJoins {
     /** Approx self-join using the PERSISTED hash functions — identical
       * output to [[minHashSelfJoin]] fit with the same params. */
     def selfJoin(df: DataFrame, idCol: String, featuresCol: String): DataFrame =
-      selfJoinWithModel(model, df.filter(nnz(col(featuresCol)) > 0),
-        idCol, featuresCol, threshold)
+      selfJoinOnVectors(df.filter(nnz(col(featuresCol)) > 0),
+        idCol, featuresCol, modelCoefficients(model), threshold)
   }
 
   def fitMinHashIndex(df: DataFrame, featuresCol: String, threshold: Double,
@@ -322,9 +270,9 @@ object LshJoins {
     *    (reference lines 119-131: sort+limit → max → filter) — so a
     *    sparse-bucket probe still returns k rows instead of starving.
     * Either subset then gets exact-Jaccard top-k (true-distance sort+limit).
-    * Scale note: phase 1 is a hash-pruned scan; phase 2 scans hash signatures
-    * only (numTables ints/row, not the feature vectors) — the same full-scan
-    * degrade the reference accepts when buckets run dry.
+    * Both phases come from one scan and one bounded top-2k; the k rows come
+    * back as a local frame, and nothing stays cached. Phase 2 is the same
+    * full-scan degrade the reference accepts when buckets run dry.
     *
     * `exhaustive = true` is the EXACT limit: skip both pruning phases and
     * score every row — the full-scan degrade made unconditional. Same
@@ -334,16 +282,11 @@ object LshJoins {
   def minHashKnn(df: DataFrame, idCol: String, featuresCol: String,
                  probe: Vector, k: Int, numTables: Int = 16,
                  seed: Long = 12345L, exhaustive: Boolean = false): DataFrame = {
-    // r13 (guide §4.1): the corpus-scale map side is codegen — nonzero-index
-    // extraction (VectorNzIndices), signatures (MinHashSignature over the
-    // fitted model's reflection-read coefficients), bucket membership
-    // (element-wise long comparisons against the probe's driver-computed
-    // signature) and the exact Jaccard verify (SortedLongInterCount against
-    // the probe's literal index set) replace four per-row boxed
-    // Vector/Seq[Vector] UDFs. Arithmetic identical term-for-term: the
-    // probe signature is min over nonzero i of ((1+i)·a + b) mod P — the
-    // estimator's own hashFunction — and the distance is 1 − |∩|/|∪| with
-    // the same double division; outputs unchanged (KnnSpec + oracle gates).
+    // The map side is codegen and fits no model: nonzero indices, the
+    // signature over [[mlCoefficients]], bucket membership against the
+    // probe's driver-computed signature and the exact Jaccard verify. The
+    // probe signature is min over nonzero i of ((1+i)·a + b) mod P, the
+    // estimator's own hashFunction; the distance is 1 − |∩|/|∪| in double.
     val nzIdx = org.apache.spark.sql.graft.bridge.column(
       graft.expressions.VectorNzIndices(
         org.apache.spark.sql.graft.bridge.expression(col(featuresCol))))
@@ -377,23 +320,7 @@ object LshJoins {
         .limit(k)
         .select(col(idCol), col("jaccard_dist"))
     }
-    val model = new MinHashLSH()
-      .setInputCol(featuresCol).setOutputCol("__hashes")
-      .setNumHashTables(numTables).setSeed(seed)
-      .fit(sets)
-    val coefs = modelCoefficients(model)
-    val sig = org.apache.spark.sql.graft.bridge.column(
-      graft.expressions.MinHashSignature(
-        org.apache.spark.sql.graft.bridge.expression(col("__idx")),
-        coefs.map(_._1.toLong).toSeq,
-        coefs.map(c => c._1.toLong + c._2.toLong).toSeq, MlHashPrime))
-    // persisted: the phase-1 cardinality probe, the (rare) phase-2 widening
-    // and the final verify are SEPARATE actions that would each replay the
-    // caller's featurization lineage otherwise; bounded — id + index set +
-    // numTables longs, no vectors (the selfJoinWithModel cache convention:
-    // caller-owned, clearCache() after consuming on long-lived sessions)
-    val hashed = sets.select(col(idCol), col("__idx")).withColumn("__sig", sig)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val coefs = mlCoefficients(numTables, seed)
     // the probe's signature, computed on the driver with the same integer
     // arithmetic (replaces a one-row transform job)
     val keyHash: Array[Long] = coefs.map { case (a, b) =>
@@ -405,23 +332,26 @@ object LshJoins {
     val anySlotEq = keyHash.zipWithIndex
       .map { case (h, i) => element_at(col("__sig"), i + 1) === lit(h) }
       .reduce(_ || _)
-    val bucket = hashed.filter(anySlotEq)
-    // count(), not limit(k).count(): the limit form executes as an
-    // incremental single-partition take that runs the whole upstream
-    // serially on one core when the bucket is selective (profiled 10.5 s
-    // single-task at sf0.1); a full parallel count over the cached frame is
-    // the same boolean at a fraction of the wall
-    val subset =
-      if (bucket.count() >= k) bucket
-      else {
-        val hd = hashed.withColumn("__hd",
-          when(anySlotEq, lit(0.0)).otherwise(lit(1.0)))
-        val thr = hd.sort("__hd").limit(k).agg(max("__hd")).head.getDouble(0)
-        hd.filter(col("__hd") <= thr).drop("__hd")
-      }
-    subset.withColumn("jaccard_dist", distCol(col("__idx")))
-      .sort(col("jaccard_dist"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("jaccard_dist"))
+    // One job and nothing cached. Every row is ranked once among all rows
+    // (__g = 1) and, when it shares a bucket, once more among the bucket
+    // (__g = 0). The first 2k by (__g, distance, id) hold the bucket's k
+    // nearest when it has k rows, else its m < k rows and the k nearest of
+    // all rows. Hash distances are 0 in the bucket and 1 outside it, so
+    // phase 2's widening (keep every row at or under the k-th smallest hash
+    // distance) keeps every row. An outer explode: an inner one makes
+    // Catalyst infer a size filter that evaluates the signature again.
+    val ranked = sets.select(col(idCol), col("__idx"))
+      .withColumn("__sig", mlSignature(col("__idx"), coefs))
+      .select(col(idCol), distCol(col("__idx")).as("jaccard_dist"),
+        explode_outer(when(anySlotEq, array(lit(0), lit(1))).otherwise(array(lit(1))))
+          .as("__g"))
+      .sort(col("__g"), col("jaccard_dist"), col(idCol))
+      .limit(2 * k)
+      .collect()
+    val (inBucket, all) = ranked.partition(_.getInt(2) == 0)
+    val rows = (if (inBucket.length >= k) inBucket else all).take(k)
+      .map(r => Row(r.get(0), r.get(1)))
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField(idCol, df.schema(idCol).dataType), StructField("jaccard_dist", DoubleType))))
   }
 }

@@ -24,14 +24,13 @@ class BillMatchSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
-  /** Workflow 2. No cache assertion here: the LSH self-join persists its
-    * hashed frame by design (LshJoins.selfJoinOnSets: three plan branches
-    * reuse it and the returned lazy frame still references it, so the
-    * caller owns its release). */
+  /** Workflow 2, with no RDD or plan left cached. */
   test("minhash run keeps pk1 < pk2, similarities in [0, 100], and the session") {
     val out = Files.createTempDirectory("billmatch-spec-minhash").toString
     try {
+      val before = cachedState
       BillMatch.run(spark, Array(sfDir, out, "jaccard", "8", "100", "minhash"))
+      assertNothingCachedSince(before)
       val pairs = spark.read.parquet(s"$out/pairs.parquet")
         .select("pk1", "pk2", "similarity").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -49,6 +48,13 @@ class BillMatchSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def cachedState: (Set[Int], Int) = (
     spark.sparkContext.getPersistentRDDs.keySet.toSet,
     org.apache.spark.sql.graft.CacheProbe.entries(spark))
+
+  private def assertNothingCachedSince(before: (Set[Int], Int)): Unit = {
+    val after = cachedState
+    assert((after._1 -- before._1).isEmpty && after._2 == before._2,
+      s"the run persisted RDDs ${after._1 -- before._1} or changed the cache " +
+        s"entries from ${before._2} to ${after._2}")
+  }
 
   private def check(out: String): Unit = {
     val before = cachedState
@@ -70,10 +76,7 @@ class BillMatchSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val docs = "docs=(\\d+)".r.findFirstMatchIn(printed.toString).map(_.group(1).toLong)
     assert(docs.contains(Tables.spread(Tables.documents(spark, sfDir)).count()),
       s"printed docs=$docs")
-    val after = cachedState
-    assert((after._1 -- before._1).isEmpty && after._2 == before._2,
-      s"the run persisted RDDs ${after._1 -- before._1} or changed the cache " +
-        s"entries from ${before._2} to ${after._2}")
+    assertNothingCachedSince(before)
 
     val pairs = spark.read.parquet(s"$out/pairs.parquet")
       .select("pk1", "pk2").collect().map(r => (r.getLong(0), r.getLong(1)))

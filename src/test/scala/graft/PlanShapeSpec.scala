@@ -70,7 +70,8 @@ class PlanShapeSpec extends SparkSpec {
     * inlines the projection chain beneath it into a lambda body, where
     * nothing is shared. With the band hashes a per-band lambda, every row
     * was tokenized, shingled, hashed and signed once per band, interpreted.
-    * nearDupPairs persists its sketch, so the cached plan is walked too. */
+    * nearDupPairs' plan holds the sketch beneath BucketPairs' bucket pass,
+    * so it is walked too. */
   test("MinHash sketch and nearDupPairs plan no lambda over the signature") {
     import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, LambdaFunction}
     import org.apache.spark.sql.catalyst.plans.QueryPlan
@@ -81,19 +82,50 @@ class PlanShapeSpec extends SparkSpec {
       }
     val docs = graft.io.Tables.documents(spark, dir)
     val sketch = graft.dedup.MinHashDedup.sketch(docs)
-    try {
-      for ((name, df) <- Seq("sketch" -> sketch,
-          "nearDupPairs" -> graft.dedup.MinHashDedup.nearDupPairs(docs))) {
-        val all = exprs(df.queryExecution.optimizedPlan)
-        assert(all.exists(_.exists(_.isInstanceOf[graft.expressions.MinHashSignature])),
-          s"$name: the walk never reached the signature")
-        val hofs = all.flatMap(_.collect { case h: HigherOrderFunction => h.prettyName })
-        assert(hofs.isEmpty, s"$name plans higher-order functions: ${hofs.distinct}")
-        val signedInLambda = all.flatMap(_.collect { case l: LambdaFunction => l })
-          .flatMap(_.collect { case s: graft.expressions.MinHashSignature => s })
-        assert(signedInLambda.isEmpty, s"$name computes a signature inside a lambda")
+    for ((name, df) <- Seq("sketch" -> sketch,
+        "nearDupPairs" -> graft.dedup.MinHashDedup.nearDupPairs(docs))) {
+      val all = exprs(df.queryExecution.optimizedPlan)
+      assert(all.exists(_.exists(_.isInstanceOf[graft.expressions.MinHashSignature])),
+        s"$name: the walk never reached the signature")
+      val hofs = all.flatMap(_.collect { case h: HigherOrderFunction => h.prettyName })
+      assert(hofs.isEmpty, s"$name plans higher-order functions: ${hofs.distinct}")
+      val signedInLambda = all.flatMap(_.collect { case l: LambdaFunction => l })
+        .flatMap(_.collect { case s: graft.expressions.MinHashSignature => s })
+      assert(signedInLambda.isEmpty, s"$name computes a signature inside a lambda")
+    }
+  }
+
+  /** Each document is signed once per call. Without a persisted sketch, the
+    * band self-join signed every document four times: once on each join
+    * side, and again on each side in the Filter that InferFiltersFromGenerate
+    * adds under the explode. A test-only optimizer rule wraps every
+    * MinHashSignature in a counter, so the count covers every plan the call
+    * executes. */
+  test("nearDupPairs and CorpusBuild.build sign every document once") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.functions.col
+    import graft.dedup.MinHashDedup
+    val signed = spark.sparkContext.longAccumulator("MinHash signatures")
+    val counting = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+        case s: graft.expressions.MinHashSignature => CountedSignature(s, signed)
       }
-    } finally sketch.unpersist() // the cache entry nearDupPairs registered
+    }
+    def signatures(run: => Unit): Long = { signed.reset(); run; signed.value }
+    val experimental = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    val rules = experimental.extraOptimizations
+    experimental.extraOptimizations = rules :+ counting
+    try {
+      val docs = graft.io.Tables.documents(spark, dir)
+      assert(signatures(MinHashDedup.nearDupPairs(docs).collect()) == docs.count())
+      // CorpusBuild signs the gated, exactly deduplicated documents
+      val cfg = CorpusBuild.Config()
+      val exact = MinHashDedup.dedupExact(docs
+        .withColumn("n_tok", graft.text.TextOps.tokenCount(col("text")).cast("long"))
+        .filter(col("n_tok").between(cfg.minTok, cfg.maxTok)), "doc_id", "text")
+      assert(signatures(CorpusBuild.build(spark, dir, cfg).collect()) == exact.count())
+    } finally experimental.extraOptimizations = rules
   }
 
   /** The featurization kernels lowercase their raw input in their own scan.
@@ -104,13 +136,9 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.{Expression, Lower}
     import org.apache.spark.sql.catalyst.plans.QueryPlan
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import graft.expressions.{CleanTokenBuckets, CleanTokenTf, TrigramHits}
-    // q_minhash_lsh persists its hashed sets: the cached plan is an
-    // adaptive plan under an InMemoryRelation's inner children
     def exprs(p: QueryPlan[_]): Seq[Expression] =
       p.expressions ++ (p.children ++ p.innerChildren).flatMap {
-        case a: AdaptiveSparkPlanExec => exprs(a.inputPlan)
         case q: QueryPlan[_] => exprs(q)
         case _ => Nil
       }
@@ -314,4 +342,19 @@ class PlanShapeSpec extends SparkSpec {
     val scanSchema = "ReadSchema: ([^\\n]+)".r.findFirstMatchIn(p).map(_.group(1))
     assert(scanSchema.exists(!_.contains("l_comment")), s"scan not pruned: $scanSchema")
   }
+}
+
+/** `sig`, adding one to `evals` each time a row evaluates it. A codegen
+  * fallback: the operators holding it leave whole-stage codegen, and each
+  * still evaluates it once per row. */
+case class CountedSignature(sig: graft.expressions.MinHashSignature,
+                            evals: org.apache.spark.util.LongAccumulator)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  def child: Expression = sig.child
+  def dataType: org.apache.spark.sql.types.DataType = sig.dataType
+  override def eval(input: InternalRow): Any = { evals.add(1); sig.eval(input) }
+  protected def withNewChildInternal(c: Expression): Expression = copy(sig = sig.copy(child = c))
 }

@@ -150,6 +150,20 @@ class LshJoinsSpec extends SparkSpec {
     assert(got.forall(_._2 == 1.0))
   }
 
+  test("minHashKnn keeps the id column's type and leaves nothing cached") {
+    val probe = Vectors.sparse(32, Array(0, 1, 2, 3, 4), Array.fill(5)(1.0))
+    val byLong = LshJoins.minHashKnn(sets, "id", "features", probe, k = 2)
+      .as[(Long, Double)].collect()
+    val named = sets.withColumn("id", org.apache.spark.sql.functions.concat(
+      org.apache.spark.sql.functions.lit("doc"), $"id".cast("string")))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val byName = LshJoins.minHashKnn(named, "id", "features", probe, k = 2)
+    assert(byName.schema("id").dataType == org.apache.spark.sql.types.StringType)
+    assert(byName.as[(String, Double)].collect().toSeq ==
+      byLong.toSeq.map { case (id, d) => (s"doc$id", d) })
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("minHashKnn exhaustive mode is exact Jaccard kNN (no pruning, no fit)") {
     val probe = Vectors.sparse(32, Array(0, 1, 2, 3, 4), Array.fill(5)(1.0))
     val got = LshJoins.minHashKnn(sets, "id", "features", probe, k = 3,
