@@ -51,35 +51,19 @@ object CosineJoin {
                    vecCol: String, minCos: Double): DataFrame = {
     require(minCos > 0.0 && minCos < 1.0, s"minCos in (0,1): $minCos")
     val r = math.sqrt(2.0 - 2.0 * minCos)
-    def sk(df: DataFrame) = df
-      .filter(ArrayOps.norm2sq(col(vecCol)) > 0.0)
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"),
-        pivotDist(vecCol, 1).as("__d1"), pivotDist(vecCol, 2).as("__d2"))
-      .withColumn("__r1", floor(col("__d1") / lit(r)).cast("long"))
-      .withColumn("__r2", floor(col("__d2") / lit(r)).cast("long"))
-    val cs = sk(corpus)
-    val bs = sk(batch)
+    val cs = rings(corpus, idCol, vecCol, r)
+    val bs = rings(batch, idCol, vecCol, r)
     // the BATCH side (small) explodes to its 3×3 cell neighborhood; the
     // corpus side keeps one row per vector (selfJoin's grid argument)
-    val off = array((-1 to 1).flatMap(i => (-1 to 1).map(j =>
-      struct(lit(i.toLong).as("i"), lit(j.toLong).as("j")))): _*)
-    val bkeys = bs.select(col("__id").as("__b"), col("__d1").as("__d1b"),
-      col("__d2").as("__d2b"), col("__r1"), col("__r2"),
-      explode(off).as("__o"))
-      .select(col("__b"), col("__d1b"), col("__d2b"),
-        (col("__r1") + col("__o.i")).as("__kb1"),
-        (col("__r2") + col("__o.j")).as("__kb2"))
-    val ckeys = cs.select(col("__id").as("__c"), col("__d1").as("__d1c"),
-      col("__d2").as("__d2c"), col("__r1").as("__kc1"), col("__r2").as("__kc2"))
-    val cand = bkeys.join(ckeys,
+    val cand = neighbourKeys(bs).join(ownCell(cs, "c"),
         col("__kb1") === col("__kc1") && col("__kb2") === col("__kc2") &&
         abs(col("__d1b") - col("__d1c")) <= lit(r + 1e-9) &&
         abs(col("__d2b") - col("__d2c")) <= lit(r + 1e-9))
       .select(col("__b"), col("__c"))
       .dropDuplicates("__b", "__c")
     val dupIds = cand
-      .join(bs.select(col("__id").as("__b"), col("__v").as("__vb")), "__b")
-      .join(cs.select(col("__id").as("__c"), col("__v").as("__vc")), "__c")
+      .join(vectors(bs, "b"), "__b")
+      .join(vectors(cs, "c"), "__c")
       .filter(ArrayOps.cosine(col("__vb"), col("__vc")) >= lit(minCos))
       .select(col("__b")).distinct()
     // zero-norm batch rows can never match at a positive threshold: survivors
@@ -90,6 +74,36 @@ object CosineJoin {
     sqrt(lit(2.0) - lit(2.0) * element_at(col(vecCol), i) /
       sqrt(ArrayOps.norm2sq(col(vecCol))))
 
+  /** The nonzero vectors of `df` as (__id, __v, pivot distances __d1, __d2,
+    * ring indices __r1, __r2) at ring width `r`. */
+  private def rings(df: DataFrame, idCol: String, vecCol: String, r: Double): DataFrame =
+    df.filter(ArrayOps.norm2sq(col(vecCol)) > 0.0)
+      .select(col(idCol).as("__id"), col(vecCol).as("__v"),
+        pivotDist(vecCol, 1).as("__d1"), pivotDist(vecCol, 2).as("__d2"))
+      .withColumn("__r1", floor(col("__d1") / lit(r)).cast("long"))
+      .withColumn("__r2", floor(col("__d2") / lit(r)).cast("long"))
+
+  /** The side that joins on its own cell: (__t, __d1t, __d2t, __kt1, __kt2). */
+  private def ownCell(sk: DataFrame, t: String): DataFrame =
+    sk.select(col("__id").as(s"__$t"), col("__d1").as(s"__d1$t"), col("__d2").as(s"__d2$t"),
+      col("__r1").as(s"__k${t}1"), col("__r2").as(s"__k${t}2"))
+
+  /** The verify payload: (__t, __vt). */
+  private def vectors(sk: DataFrame, t: String): DataFrame =
+    sk.select(col("__id").as(s"__$t"), col("__v").as(s"__v$t"))
+
+  /** The side that emits its 3×3 neighbour cells: (__b, __d1b, __d2b, __kb1, __kb2). */
+  private def neighbourKeys(sk: DataFrame): DataFrame = {
+    val off = array((-1 to 1).flatMap(i => (-1 to 1).map(j =>
+      struct(lit(i.toLong).as("i"), lit(j.toLong).as("j")))): _*)
+    sk.select(col("__id").as("__b"), col("__d1").as("__d1b"),
+      col("__d2").as("__d2b"), col("__r1"), col("__r2"),
+      explode(off).as("__o"))
+      .select(col("__b"), col("__d1b"), col("__d2b"),
+        (col("__r1") + col("__o.i")).as("__kb1"),
+        (col("__r2") + col("__o.j")).as("__kb2"))
+  }
+
   /** All pairs (id1 < id2, cos) with cosine ≥ minCos; `cos` rounded to 6
     * (threshold applied before rounding). Zero-norm vectors cannot reach any
     * positive threshold and are dropped up front. */
@@ -97,12 +111,7 @@ object CosineJoin {
                minCos: Double): DataFrame = {
     require(minCos > 0.0 && minCos < 1.0, s"minCos in (0,1): $minCos")
     val r = math.sqrt(2.0 - 2.0 * minCos)
-    val sk = df
-      .filter(ArrayOps.norm2sq(col(vecCol)) > 0.0)
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"),
-        pivotDist(vecCol, 1).as("__d1"), pivotDist(vecCol, 2).as("__d2"))
-      .withColumn("__r1", floor(col("__d1") / lit(r)).cast("long"))
-      .withColumn("__r2", floor(col("__d2") / lit(r)).cast("long"))
+    val sk = rings(df, idCol, vecCol, r)
     // 2-D grid cells (both pivots): the ring bound holds PER PIVOT, so a
     // qualifying pair's cell coordinates differ by at most 1 in each
     // dimension — a joins on its OWN cell, b emits its 3×3 neighborhood,
@@ -110,27 +119,16 @@ object CosineJoin {
     // key equal to a's cell (the canonical order below is by ID, so a can
     // sit either side of b in either dimension). Two pivots multiply cell
     // selectivity where one ring's population would hot-spot the join.
-    val a = sk.select(col("__id").as("__a"), col("__d1").as("__d1a"),
-      col("__d2").as("__d2a"), col("__r1").as("__ka1"), col("__r2").as("__ka2"))
-    val off = array((-1 to 1).flatMap(i => (-1 to 1).map(j =>
-      struct(lit(i.toLong).as("i"), lit(j.toLong).as("j")))): _*)
-    val b = sk.select(col("__id").as("__b"), col("__d1").as("__d1b"),
-      col("__d2").as("__d2b"), col("__r1"), col("__r2"),
-      explode(off).as("__o"))
-      .select(col("__b"), col("__d1b"), col("__d2b"),
-        (col("__r1") + col("__o.i")).as("__kb1"),
-        (col("__r2") + col("__o.j")).as("__kb2"))
-    val cand = a.join(b,
+    val cand = ownCell(sk, "a").join(neighbourKeys(sk),
         col("__ka1") === col("__kb1") && col("__ka2") === col("__kb2") &&
         col("__a") < col("__b") &&
         abs(col("__d1a") - col("__d1b")) <= lit(r + 1e-9) &&
         abs(col("__d2a") - col("__d2b")) <= lit(r + 1e-9))
       .select(col("__a"), col("__b"))
       .dropDuplicates("__a", "__b")
-    val vecs = sk.select(col("__id"), col("__v"))
     cand
-      .join(vecs.select(col("__id").as("__a"), col("__v").as("__va")), "__a")
-      .join(vecs.select(col("__id").as("__b"), col("__v").as("__vb")), "__b")
+      .join(vectors(sk, "a"), "__a")
+      .join(vectors(sk, "b"), "__b")
       .withColumn("__cos", ArrayOps.cosine(col("__va"), col("__vb")))
       .filter(col("__cos") >= lit(minCos))
       .select(col("__a").as("id1"), col("__b").as("id2"),

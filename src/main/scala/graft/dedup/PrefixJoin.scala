@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** EXACT set-similarity self-join via prefix filtering — the AllPairs /
@@ -45,25 +46,22 @@ import org.apache.spark.sql.functions._
   * the exact verify), so fp cannot cost completeness, only a few spurious
   * candidates.
   *
-  * 100 TB shape: three corpus-token-scale shuffles build the ordered sets
-  * (df count, df re-join, per-doc collect) — all LINEAR scans/aggregations;
-  * the candidate join is an equi-join on prefix tokens, whose buckets are
-  * each document's RAREST tokens by construction — the frequent-token hot
-  * buckets that would blow up an unfiltered inverted index never enter a
-  * prefix unless a document has nothing rarer, which is exactly when they
-  * carry signal. Verify payloads re-attach by id join for survivors only
-  * (the MinHashDedup discipline: wide arrays never ride the candidate
-  * shuffle).
-  *
-  * Cache lifecycle (caller-owned): each call
-  * persists its bounded sketch frame (ids + sorted shingle-id sets — no raw
-  * text) at MEMORY_AND_DISK because four plan branches reuse it and Catalyst
-  * cannot share an uncached subplan across them. The returned DataFrame
-  * still references that cache, so the operator cannot unpersist it before
-  * the caller materializes; a long-lived session issuing many calls should
-  * `spark.catalog.clearCache()` (or unpersist via the UI-listed RDDs) after
-  * consuming each result. Blocks are spill-safe — the leak costs storage
-  * memory/disk, never correctness (ADVICE r9).
+  * 100 TB shape: every set is exploded to (document, token) rows once.
+  * One shuffle of those rows by token gives each token's document frequency
+  * (a count window), and one shuffle by document collects each document's
+  * tokens in the global order: its prefix, and, sorted by value, its
+  * verify set. Every shingle set is therefore built once per call, in the
+  * map stage of the token shuffle, and nothing is cached. A token held by a
+  * large share of the documents is one window partition, and AQE cannot
+  * split a window partition: one task buffers (and past its threshold
+  * spills) all of that token's rows, where a grouped count would combine
+  * them map-side. The prefix still keeps such a token out of the
+  * candidate join, an equi-join on prefix tokens whose buckets are each
+  * document's RAREST tokens by construction — a frequent token enters a
+  * prefix only when a document has nothing rarer, which is exactly when it
+  * carries signal. Verify sets re-attach by id join for the surviving
+  * candidates only (the MinHashDedup discipline: wide arrays never ride
+  * the candidate shuffle).
   */
 object PrefixJoin {
 
@@ -80,20 +78,19 @@ object PrefixJoin {
   def allPairs(df: DataFrame, cfg: Config = Config()): DataFrame = {
     val tau = cfg.jaccardThreshold
     require(tau > 0.0 && tau <= 1.0, s"threshold in (0,1]: $tau")
-    // spread: shingling + array_sort is winnow-class per-row compute and the
-    // sketch is MATERIALIZED once below (persist), so a one-row-group input
-    // would serialize the whole build on one task (graft.io.Tables.spread
-    // scaladoc; no-op on well-split tables)
+    // spread: shingling is winnow-class per-row compute, all of it in the
+    // map stage of the token shuffle, so a one-row-group input would build
+    // every set on one task (graft.io.Tables.spread scaladoc; no-op on
+    // well-split tables)
     allPairsOnSets(
       graft.io.Tables.spread(df)
         .select(col(cfg.idCol).as("__id"),
-          array_sort(MinHashDedup.shingleIds(col(cfg.textCol), cfg.shingleSize))
-            .as("__sids")),
+          MinHashDedup.shingleIds(col(cfg.textCol), cfg.shingleSize).as("__sids")),
       "__id", "__sids", tau, tau * 100.0)
   }
 
-  /** [[allPairs]] over PRE-BUILT sorted 64-bit element-id sets (array<long>,
-    * value-ascending), optionally BLOCKED: with `blockCol` set, only pairs
+  /** [[allPairs]] over PRE-BUILT 64-bit element-id sets (array<long>, in
+    * any order), optionally BLOCKED: with `blockCol` set, only pairs
     * sharing that column's value are reported — the per-cluster / per-group
     * exact all-pairs shape (SURVEY J9) on the PPJoin physical plan instead
     * of a quadratic block self-join (r13; the blocked brute-force form
@@ -111,71 +108,12 @@ object PrefixJoin {
                      tau: Double, minJacPct: Double,
                      blockCol: Option[String] = None): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"threshold in (0,1]: $tau")
-    val blkCols = blockCol.toSeq.map(c => col(c).as("__blk"))
-    val sk = sets0
-      .select(Seq(col(idCol).as("__id"), col(setCol).as("__sids")) ++ blkCols: _*)
-      .withColumn("__n", size(col("__sids")))
-      .filter(col("__n") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val blkSel = blockCol.toSeq.map(_ => col("__blk"))
-    val toks = sk.select(Seq(col("__id"), col("__n")) ++ blkSel :+
-      explode(col("__sids")).as("__t"): _*)
-    val dfreq = toks.groupBy("__t").agg(count(lit(1)).as("__df"))
-    // per-document tokens in the global (df asc, token asc) order; prefix =
-    // first n − ⌈τ·n⌉ + 1 of them (1e-9 under the product: ⌈⌉ may only err
-    // toward a LONGER prefix)
-    val plen = (col("__n") - ceil(lit(tau) * col("__n") - lit(1e-9)) + 1)
-      .cast("int")
-    // posexplode: 0-based offset of the token within the (df asc, token asc)
-    // global order — the position the PPJoin bound needs (prefix positions
-    // ARE full-order positions: the prefix is the order's first plen tokens)
-    val prefixes = toks.join(dfreq, "__t")
-      .groupBy(Seq(col("__id"), col("__n")) ++ blkSel: _*)
-      .agg(array_sort(collect_list(struct(col("__df"), col("__t")))).as("__ord"))
-      .select(Seq(col("__id"), col("__n")) ++ blkSel :+
-        posexplode(slice(transform(col("__ord"), x => x.getField("__t")),
-          lit(1), greatest(plen, lit(1)))).as(Seq("__p0", "__t")): _*)
-      .select(Seq(col("__id"), col("__n"), (col("__p0") + 1).as("__p"),
-        col("__t")) ++ blkSel: _*)
-    def side(tag: String) = {
-      val cs = Seq(col("__id").as(s"__$tag"), col("__n").as(s"__n$tag"),
-        col("__p").as(s"__p$tag"), col("__t").as(s"__t$tag")) ++
-        blockCol.toSeq.map(_ => col("__blk").as(s"__blk$tag"))
-      prefixes.select(cs: _*)
-    }
-    val a = side("a")
-    val b = side("b")
-    // PPJoin positional filter: overlap needed α = ⌈τ/(1+τ)·(na+nb)⌉ (1e-9
-    // under the product — ⌈⌉ may only err toward a SMALLER α = over-keeping);
-    // this matched row bounds |∩| ≤ 1 + min(na − pa, nb − pb)
-    val alpha = ceil(lit(tau / (1.0 + tau)) *
-      (col("__na") + col("__nb")) - lit(1e-9))
-    val blockEq = blockCol.map(_ => col("__blka") === col("__blkb"))
-      .getOrElse(lit(true))
-    val cand = a.join(b,
-        col("__ta") === col("__tb") && col("__a") < col("__b") && blockEq &&
-        col("__na") * lit(tau) <= col("__nb").cast("double") + lit(1e-9) &&
-        col("__nb") * lit(tau) <= col("__na").cast("double") + lit(1e-9) &&
-        lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb"))
-          >= alpha)
-      .select(col("__a"), col("__b"))
-      .dropDuplicates("__a", "__b")
-    val sets = sk.select(col("__id"), col("__sids"), col("__n"))
-    val inter = org.apache.spark.sql.graft.bridge.column(
-      graft.expressions.SortedLongInterCount(
-        org.apache.spark.sql.graft.bridge.expression(col("__s1")),
-        org.apache.spark.sql.graft.bridge.expression(col("__s2"))))
-    cand
-      .join(sets.select(col("__id").as("__a"), col("__sids").as("__s1"),
-        col("__n").as("__n1")), "__a")
-      .join(sets.select(col("__id").as("__b"), col("__sids").as("__s2"),
-        col("__n").as("__n2")), "__b")
-      .withColumn("__i", inter)
-      .withColumn("__jac_raw",
-        col("__i") * lit(100.0) / (col("__n1") + col("__n2") - col("__i")))
-      .filter(col("__jac_raw") >= lit(minJacPct))
+    val sets = sets0.select(blockCol.fold(lit(true))(c => col(c)).as("__tag"),
+      col(idCol).as("__id"), col(setCol).as("__sids"))
+    join(sets, tau, minJacPct, lit(true), lit(true),
+        col("__taga") === col("__tagb") && col("__a") < col("__b"))
       .select(col("__a").as("d1"), col("__b").as("d2"),
-        round(col("__jac_raw"), 4).as("jac"))
+        round(col("__jac"), 4).as("jac"))
   }
 
   /** Batch-vs-corpus EXACT incremental dedup — the rows of `batch` that
@@ -188,9 +126,7 @@ object PrefixJoin {
     * df 0 = rarest). The prefix theorem needs only A shared total order —
     * the O-smallest common token of a qualifying pair sits within both
     * prefixes under any order — so using the corpus's own distribution is
-    * sound AND operational: an ingest loop computes the df table once per
-    * corpus generation and reuses it for every arriving batch; batch
-    * contents never shift the order. */
+    * sound AND operational: batch contents never shift the order. */
   def dedupAgainst(batch: DataFrame, corpus: DataFrame,
                    cfg: Config = Config()): DataFrame = {
     val tau = cfg.jaccardThreshold
@@ -198,59 +134,77 @@ object PrefixJoin {
     val exactSurvivors = batch.join(
       corpus.select(md5(col(cfg.textCol).cast("binary")).as("__h")).distinct(),
       md5(col(cfg.textCol).cast("binary")) === col("__h"), "left_anti")
-    // spread before the materialized sketch builds — the allPairs rationale
-    def sk(df: DataFrame) = graft.io.Tables.spread(df)
-      .select(col(cfg.idCol).as("__id"),
-        array_sort(MinHashDedup.shingleIds(col(cfg.textCol), cfg.shingleSize))
-          .as("__sids"))
-      .withColumn("__n", size(col("__sids")))
-      .filter(col("__n") > 0)
-    val cs = sk(corpus).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bs = sk(exactSurvivors).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfreq = cs.select(explode(col("__sids")).as("__t"))
-      .groupBy("__t").agg(count(lit(1)).as("__df"))
+    // __tag marks the batch rows; spread as in allPairs
+    def sets(df: DataFrame, isBatch: Boolean) = graft.io.Tables.spread(df)
+      .select(lit(isBatch).as("__tag"), col(cfg.idCol).as("__id"),
+        MinHashDedup.shingleIds(col(cfg.textCol), cfg.shingleSize).as("__sids"))
+    val dupIds = join(sets(exactSurvivors, true).union(sets(corpus, false)),
+        tau, tau * 100.0, col("__tag"), !col("__tag"), lit(true))
+      .select(col("__a").as("__dup")).distinct()
+    exactSurvivors.join(dupIds,
+      exactSurvivors(cfg.idCol) === dupIds("__dup"), "left_anti")
+  }
+
+  /** The filter chain over `sets` = (__tag, __id, __sids): the pairs
+    * (__a, __b) of an a-side and a b-side document (`isA`, `isB`, over
+    * __tag) that meet `pairOk` (over __taga, __a, __tagb, __b), the size and
+    * positional filters and the exact verify, with their Jaccard in percent
+    * as __jac (≥ `minJacPct`). A token's document frequency counts the
+    * b-side documents holding it. Ids are unique within each side, so the
+    * pair dedup and the verify joins key on them alone. */
+  private def join(sets: DataFrame, tau: Double, minJacPct: Double,
+                   isA: Column, isB: Column, pairOk: Column): DataFrame = {
+    // explode_outer, filtered on its output: an inner explode makes
+    // InferFiltersFromGenerate add a size(__sids) > 0 filter below it, which
+    // builds the set a second time. An empty set yields only the null row,
+    // so it never reaches a prefix.
+    val docs = sets
+      .select(col("__tag"), col("__id"), explode_outer(col("__sids")).as("__t"))
+      .filter(col("__t").isNotNull)
+      .withColumn("__df", count(when(isB, 1)).over(Window.partitionBy("__t")))
+      .groupBy("__tag", "__id")
+      .agg(sort_array(collect_list(struct(col("__df"), col("__t")))).as("__ord"))
+      .select(col("__tag"), col("__id"), size(col("__ord")).as("__n"),
+        col("__ord").getField("__t").as("__toks"))
+    // prefix = the first n − ⌈τ·n⌉ + 1 tokens in the global (df asc, token
+    // asc) order (1e-9 under the product: ⌈⌉ may only err toward a LONGER
+    // prefix); its 1-based offsets ARE full-order positions, as the PPJoin
+    // bound needs. Every document here has a token, so the outer form adds
+    // no row; it keeps the inferred size filter off the prefix too.
     val plen = (col("__n") - ceil(lit(tau) * col("__n") - lit(1e-9)) + 1)
       .cast("int")
-    def prefixes(s: DataFrame) =
-      s.select(col("__id"), col("__n"), explode(col("__sids")).as("__t"))
-        .join(dfreq, Seq("__t"), "left")
-        .withColumn("__df", coalesce(col("__df"), lit(0L)))
-        .groupBy("__id", "__n")
-        .agg(array_sort(collect_list(struct(col("__df"), col("__t")))).as("__ord"))
-        .select(col("__id"), col("__n"),
-          posexplode(slice(transform(col("__ord"), x => x.getField("__t")),
-            lit(1), greatest(plen, lit(1)))).as(Seq("__p0", "__t")))
-        .select(col("__id"), col("__n"), (col("__p0") + 1).as("__p"), col("__t"))
-    val bp = prefixes(bs).select(col("__id").as("__b"), col("__n").as("__nb"),
-      col("__p").as("__pb"), col("__t").as("__tb"))
-    val cp = prefixes(cs).select(col("__id").as("__c"), col("__n").as("__nc"),
-      col("__p").as("__pc"), col("__t").as("__tc"))
-    // same PPJoin positional bound as allPairs (doc comment there); both
-    // sides' positions come from the one corpus-df total order
+    val prefixes = docs.select(col("__tag"), col("__id"), col("__n"),
+      posexplode_outer(slice(col("__toks"), lit(1), greatest(plen, lit(1))))
+        .as(Seq("__p0", "__t")))
+    def side(s: String, is: Column) = prefixes.filter(is).select(
+      col("__tag").as(s"__tag$s"), col("__id").as(s"__$s"), col("__n").as(s"__n$s"),
+      (col("__p0") + 1).as(s"__p$s"), col("__t").as(s"__t$s"))
+    // PPJoin positional filter: overlap needed α = ⌈τ/(1+τ)·(na+nb)⌉ (1e-9
+    // under the product — ⌈⌉ may only err toward a SMALLER α = over-keeping);
+    // this matched row bounds |∩| ≤ 1 + min(na − pa, nb − pb)
     val alpha = ceil(lit(tau / (1.0 + tau)) *
-      (col("__nb") + col("__nc")) - lit(1e-9))
-    val cand = bp.join(cp,
-        col("__tb") === col("__tc") &&
-        col("__nb") * lit(tau) <= col("__nc").cast("double") + lit(1e-9) &&
-        col("__nc") * lit(tau) <= col("__nb").cast("double") + lit(1e-9) &&
-        lit(1) + least(col("__nb") - col("__pb"), col("__nc") - col("__pc"))
+      (col("__na") + col("__nb")) - lit(1e-9))
+    val cand = side("a", isA).join(side("b", isB),
+        col("__ta") === col("__tb") && pairOk &&
+        col("__na") * lit(tau) <= col("__nb").cast("double") + lit(1e-9) &&
+        col("__nb") * lit(tau) <= col("__na").cast("double") + lit(1e-9) &&
+        lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb"))
           >= alpha)
-      .select(col("__b"), col("__c"))
-      .dropDuplicates("__b", "__c")
+      .select(col("__a"), col("__b"))
+      .dropDuplicates("__a", "__b")
+    def verifySet(s: String, is: Column) = docs.filter(is).select(
+      col("__id").as(s"__$s"), col("__n").as(s"__n$s"),
+      sort_array(col("__toks")).as(s"__s$s"))
     val inter = org.apache.spark.sql.graft.bridge.column(
       graft.expressions.SortedLongInterCount(
-        org.apache.spark.sql.graft.bridge.expression(col("__s1")),
-        org.apache.spark.sql.graft.bridge.expression(col("__s2"))))
-    val dupIds = cand
-      .join(bs.select(col("__id").as("__b"), col("__sids").as("__s1"),
-        col("__n").as("__n1")), "__b")
-      .join(cs.select(col("__id").as("__c"), col("__sids").as("__s2"),
-        col("__n").as("__n2")), "__c")
+        org.apache.spark.sql.graft.bridge.expression(col("__sa")),
+        org.apache.spark.sql.graft.bridge.expression(col("__sb"))))
+    cand
+      .join(verifySet("a", isA), "__a")
+      .join(verifySet("b", isB), "__b")
       .withColumn("__i", inter)
-      .filter(col("__i") * lit(100.0) / (col("__n1") + col("__n2") - col("__i"))
-        >= lit(tau * 100.0))
-      .select(col("__b")).distinct()
-    exactSurvivors.join(dupIds,
-      exactSurvivors(cfg.idCol) === dupIds("__b"), "left_anti")
+      .withColumn("__jac",
+        col("__i") * lit(100.0) / (col("__na") + col("__nb") - col("__i")))
+      .filter(col("__jac") >= lit(minJacPct))
   }
 }

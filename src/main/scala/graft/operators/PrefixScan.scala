@@ -27,45 +27,19 @@ import org.apache.spark.sql.types.LongType
   * never values — so the scan is bit-identical to the window form (fuzzed
   * against it in PrefixScanSpec) and the DuckDB oracles need no change.
   *
-  * Lifecycle: the sorted frame MUST stay persisted across the two passes —
-  * pass 2's broadcast offsets are keyed by partition id, and re-running the
-  * range partitioner would resample different boundaries. The persist is at
-  * the RDD level, NOT `DataFrame.persist`: an SQL-level cache registers a
-  * session-lifetime CacheManager entry no caller could release, whereas a
-  * persisted RDD is tracked by Spark's ContextCleaner and is unpersisted
-  * automatically once the returned frame (whose lineage is the only
-  * reference) becomes unreachable — a long-lived service planning
-  * compactions in a loop (ADVICE r10) leaks nothing once it drops each
-  * result. The bound while live is benign by construction: callers pass the
-  * NARROW projection (group, order keys, one Long), never document text,
-  * and the blocks are spill-safe (MEMORY_AND_DISK).
+  * Both passes read ONE RDD object, `sortedDf.rdd`: its range shuffle,
+  * boundaries sampled once, runs once, and pass 2 reads the very partitions
+  * pass 1 totalled, so the broadcast offsets keyed by partition id stay
+  * valid without a persist. Nothing is cached: each read of the result
+  * re-runs pass 2 over that shuffle's output. Two reads agree when
+  * (group, orderCols) is a unique key, as every engine caller's is; rows
+  * tied on it may take their running sums in another order on another
+  * read, the tie ambiguity of the window form itself.
   * Group keys must be non-null ATOMIC values (validated): array/binary/
   * struct keys would compare by reference in the run detection and silently
   * misplace boundaries. Null VALUES count as 0, matching the null-skipping
   * window sum this replaces. */
 object PrefixScan {
-
-  // Weak registry of live persisted scan RDDs: spark.catalog.clearCache()
-  // releases SQL-level caches only, so a caller that needs the scan frames
-  // gone (between measurements, say) calls [[releaseAll]] as well. Weak
-  // keys — the registry never delays the ContextCleaner path.
-  private val live = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[Row], java.lang.Boolean]())
-
-  /** Eagerly unpersist every scan frame still alive. A released-then-reread
-    * result recomputes from the shuffle lineage; that replay is
-    * value-identical ONLY when (group, orderCols) is a UNIQUE key per row —
-    * with duplicate keys, shuffle fetch order can permute tied rows between
-    * materializations and the running sum lands on different tied rows
-    * (the window form this operator replaces has the same tie ambiguity).
-    * Every engine caller orders by a unique id; callers with ties should
-    * either add a tiebreaker column or not re-read after release. For
-    * measurement harnesses and long-lived services that want deterministic
-    * release instead of GC-driven. */
-  def releaseAll(): Unit = live.synchronized {
-    live.forEach(r => { r.unpersist(blocking = false); () })
-    live.clear()
-  }
 
   /** EXCLUSIVE per-group running sum of `valueCol` (a Long column) over rows
     * ordered by `orderCols` within `groupCol`, appended as `outCol`. Row set
@@ -97,12 +71,8 @@ object PrefixScan {
             schema(gIdx).dataType.simpleString)
       case _ =>
     }
-    // one RDD instance shared by both passes; ContextCleaner unpersists it
-    // when the returned frame is garbage collected (see scaladoc), and
-    // releaseAll() offers the deterministic path
+    // one RDD instance shared by both passes (see scaladoc)
     val sorted = sortedDf.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    live.synchronized { live.add(sorted); () }
 
     // pass 1: ordered (group, localTotal) runs per partition
     val totals: Array[(Int, Seq[(Any, Long)])] =

@@ -7,7 +7,7 @@ import graft.dedup.{MinHashDedup, PrefixJoin, SimHash}
 import graft.io.Tables
 import graft.linalg.Dimsum
 import graft.lsh.LshJoins
-import graft.similarity.Kernels
+import graft.similarity.{BlockScore, Kernels}
 import graft.text.{FeatureConfig, FeaturePipeline, TextOps}
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -206,25 +206,16 @@ object MlQueries {
     // ----- workflow-3 end to end: LDA topic label as the BLOCKING key — the
     // reference's third workflow (LDAAnalyzer.scala:109-116 assigns argmax
     // topic, then the AggregatorTest2 per-cluster all-pairs pattern runs
-    // inside each topic block). Same skeleton as q_billmatch with the k-means
+    // inside each topic block). BillMatch's BlockScore pass with the k-means
     // blocker swapped for the topic label: candidate pairs must share a topic
     // and differ on lang, cosine kernel, global top-K. rows-only (LDA fit not
     // SQL-replayable); the block-partitioning invariant is ClusteringSpec's.
     "q_lda_candidates" -> QueryDef.rowsOnly { (s, d) =>
       val (_, topical) = Clustering.lda(featurized(s, d), k = 5, maxIter = 10,
         fitOrderCol = Some("doc_id"))
-      val blocked = topical.select(
-        col("doc_id"), col("lang"), col("prediction"), col("features"))
-      val pairs = Candidates.pairs(blocked, CandidateConfig(
-        keyCol = "doc_id", groupCol = "lang", blockCol = Some("prediction")))
-      val withVecs = Candidates.attachBothSides(pairs,
-        blocked.select(col("doc_id"), col("features")), "doc_id", "features")
-      val cosine = Kernels.udfFor("cosine")
-      withVecs
-        .select(col("pk1"), col("pk2"),
-          cosine(col("features_1"), col("features_2")).as("similarity"))
-        .orderBy(desc("similarity"), asc("pk1"), asc("pk2"))
-        .limit(50)
+      BlockScore.topK(topical, CandidateConfig(
+          keyCol = "doc_id", groupCol = "lang", blockCol = Some("prediction")),
+        "features", "cosine", 50).top
     }.expectAtGate(50L, "32199987269354545395"),
 
     // ----- M10: key-preserving LSA projection (fixes SURVEY J6), ORACLE-

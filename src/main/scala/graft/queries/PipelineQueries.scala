@@ -646,7 +646,7 @@ object PipelineQueries {
     // ----- §2.13 STREAMING + dedup composition: incremental NEAR-DUP
     // flagging of a document stream against a static corpus — the streaming
     // twin of q_dedup_incremental. The corpus sketch (MinHashDedup.sketch)
-    // is static and persisted once; each micro-batch maps its docs to band
+    // is static and persisted for the replay; each micro-batch maps its docs to band
     // hashes (narrow), stream-static equi-joins on (band, bandhash), and
     // exact-Jaccard-verifies the candidates. The only stateful operator is
     // the per-doc match counter; the stream's shingle sets ride with the
@@ -693,12 +693,15 @@ object PipelineQueries {
           org.apache.spark.sql.graft.bridge.expression(col("t1")),
           org.apache.spark.sql.graft.bridge.expression(col("t2")),
           assumeDistinct = true))
-      Streaming.replayToTable(
+      // the replay blocks until the stream ends, and its result is the
+      // memory table, so nothing reads corpusSide after it
+      try Streaming.replayToTable(
           streamCands.filter(jacRaw >= cfg.jaccardThreshold * 100.0)
             .groupBy("doc_id").agg(count(lit(1)).as("n_cand")),
           s"stream_neardup_${System.nanoTime()}")
         .select("doc_id")
         .orderBy("doc_id")
+      finally corpusSide.unpersist()
     }.serial,
 
     // ----- §2.13 STREAMING: stateless corpus quality gate over the document

@@ -566,8 +566,7 @@ object TextQueries {
       // the oracle uses.
       graft.dedup.PrefixJoin.allPairsOnSets(
         Tables.spread(Tables.documents(s, d)).select(col("doc_id"), col("lang"),
-          array_sort(graft.dedup.MinHashDedup.shingleIds(col("text"), 1))
-            .as("sids")),
+          graft.dedup.MinHashDedup.shingleIds(col("text"), 1).as("sids")),
         "doc_id", "sids", tau = 0.8, minJacPct = 80.0,
         blockCol = Some("lang"))
         .orderBy("d1", "d2")

@@ -95,37 +95,69 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  /** Each document is signed once per call. Without a persisted sketch, the
-    * band self-join signed every document four times: once on each join
-    * side, and again on each side in the Filter that InferFiltersFromGenerate
-    * adds under the explode. A test-only optimizer rule wraps every
-    * MinHashSignature in a counter, so the count covers every plan the call
-    * executes. */
-  test("nearDupPairs and CorpusBuild.build sign every document once") {
+  /** Evaluations of every `K` kernel while `run` runs. A test-only
+    * optimizer rule wraps each one in [[Counted]], so the count covers
+    * every plan the call executes. A kernel in a Filter and again in the
+    * Project above it counts twice. */
+  private def evaluations[K <: org.apache.spark.sql.catalyst.expressions.Expression](
+      run: => Unit)(implicit k: scala.reflect.ClassTag[K]): Long = {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.catalyst.rules.Rule
-    import org.apache.spark.sql.functions.col
-    import graft.dedup.MinHashDedup
-    val signed = spark.sparkContext.longAccumulator("MinHash signatures")
+    val evals = spark.sparkContext.longAccumulator(s"${k.runtimeClass.getSimpleName} evaluations")
     val counting = new Rule[LogicalPlan] {
       def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-        case s: graft.expressions.MinHashSignature => CountedSignature(s, signed)
+        case e: K => Counted(e, evals)
       }
     }
-    def signatures(run: => Unit): Long = { signed.reset(); run; signed.value }
     val experimental = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     val rules = experimental.extraOptimizations
     experimental.extraOptimizations = rules :+ counting
-    try {
-      val docs = graft.io.Tables.documents(spark, dir)
-      assert(signatures(MinHashDedup.nearDupPairs(docs).collect()) == docs.count())
-      // CorpusBuild signs the gated, exactly deduplicated documents
-      val cfg = CorpusBuild.Config()
-      val exact = MinHashDedup.dedupExact(docs
-        .withColumn("n_tok", graft.text.TextOps.tokenCount(col("text")).cast("long"))
-        .filter(col("n_tok").between(cfg.minTok, cfg.maxTok)), "doc_id", "text")
-      assert(signatures(CorpusBuild.build(spark, dir, cfg).collect()) == exact.count())
-    } finally experimental.extraOptimizations = rules
+    try { run; evals.value } finally experimental.extraOptimizations = rules
+  }
+
+  /** Each document is signed once per call. Without a persisted sketch, the
+    * band self-join signed every document four times: once on each join
+    * side, and again on each side in the Filter that InferFiltersFromGenerate
+    * adds under the explode. */
+  test("nearDupPairs and CorpusBuild.build sign every document once") {
+    import org.apache.spark.sql.functions.col
+    import graft.dedup.MinHashDedup
+    def signatures(run: => Unit): Long =
+      evaluations[graft.expressions.MinHashSignature](run)
+    val docs = graft.io.Tables.documents(spark, dir)
+    assert(signatures(MinHashDedup.nearDupPairs(docs).collect()) == docs.count())
+    // CorpusBuild signs the gated, exactly deduplicated documents
+    val cfg = CorpusBuild.Config()
+    val exact = MinHashDedup.dedupExact(docs
+      .withColumn("n_tok", graft.text.TextOps.tokenCount(col("text")).cast("long"))
+      .filter(col("n_tok").between(cfg.minTok, cfg.maxTok)), "doc_id", "text")
+    assert(signatures(CorpusBuild.build(spark, dir, cfg).collect()) == exact.count())
+  }
+
+  /** Each PrefixJoin call builds every input document's shingle set once,
+    * with nothing cached. A filter on an alias of the set's size re-runs
+    * the kernel below it, and so does an inner explode's inferred
+    * size > 0 filter; a persist of the sets hid that rather than fixing
+    * it. The incremental form builds the sets of the batch rows that pass
+    * the exact gate and of every corpus row. */
+  test("PrefixJoin builds each shingle set once per call") {
+    import org.apache.spark.sql.functions.col
+    import graft.dedup.{MinHashDedup, PrefixJoin}
+    def built(run: => Unit): Long = evaluations[graft.expressions.ShingleHashes](run)
+    val docs = graft.io.Tables.documents(spark, dir)
+    val n = docs.count()
+    val cfg = PrefixJoin.Config(shingleSize = 3, jaccardThreshold = 0.7)
+    assert(built(PrefixJoin.allPairs(docs, cfg).collect()) == n, "allPairs")
+    assert(built(PrefixJoin.allPairsOnSets(
+        docs.select(col("doc_id"), col("lang"),
+          MinHashDedup.shingleIds(col("text"), 1).as("sids")),
+        "doc_id", "sids", tau = 0.8, minJacPct = 80.0, blockCol = Some("lang"))
+      .collect()) == n, "allPairsOnSets with a block column")
+    val batch = docs.filter(col("doc_id") % 4 === 0)
+    val corpus = docs.filter(col("doc_id") % 4 =!= 0)
+    val survivors = batch.join(corpus.select("text"), Seq("text"), "left_anti").count()
+    assert(built(PrefixJoin.dedupAgainst(batch, corpus, cfg).collect()) ==
+      survivors + corpus.count(), "dedupAgainst")
   }
 
   /** The featurization kernels lowercase their raw input in their own scan.
@@ -344,17 +376,20 @@ class PlanShapeSpec extends SparkSpec {
   }
 }
 
-/** `sig`, adding one to `evals` each time a row evaluates it. A codegen
-  * fallback: the operators holding it leave whole-stage codegen, and each
-  * still evaluates it once per row. */
-case class CountedSignature(sig: graft.expressions.MinHashSignature,
-                            evals: org.apache.spark.util.LongAccumulator)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+/** `kernel`, adding one to `evals` each time a row evaluates it. A
+  * codegen fallback: the operators holding it leave whole-stage codegen,
+  * and each still evaluates it once per row. Its children are the
+  * kernel's, so a rule that wraps kernels never wraps one twice. */
+case class Counted(kernel: org.apache.spark.sql.catalyst.expressions.Expression,
+                   evals: org.apache.spark.util.LongAccumulator)
+    extends org.apache.spark.sql.catalyst.expressions.Expression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.Expression
-  def child: Expression = sig.child
-  def dataType: org.apache.spark.sql.types.DataType = sig.dataType
-  override def eval(input: InternalRow): Any = { evals.add(1); sig.eval(input) }
-  protected def withNewChildInternal(c: Expression): Expression = copy(sig = sig.copy(child = c))
+  def children: Seq[Expression] = kernel.children
+  def nullable: Boolean = kernel.nullable
+  def dataType: org.apache.spark.sql.types.DataType = kernel.dataType
+  override def eval(input: InternalRow): Any = { evals.add(1); kernel.eval(input) }
+  protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(kernel = kernel.withNewChildren(c))
 }

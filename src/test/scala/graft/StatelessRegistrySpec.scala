@@ -4,8 +4,9 @@ package graft
   * RDD and no cached plan to the session, and a second run gives
   * the same result as the first. The queries cover both registry
   * featurizations (TF-IDF and hashed counts), the seeded k-means fit,
-  * every graph operator, MinHash near-dup dedup (self and incremental),
-  * the MinHash LSH join and the LSH k-NN probe.
+  * every graph operator, MinHash near-dup dedup (self, incremental and
+  * streaming), the MinHash LSH join, the LSH k-NN probe, the exact prefix
+  * join (self, blocked and incremental) and the prefix-scan compaction plan.
   * The test session is shared across suites, so every check compares
   * before with after rather than against zero. Results compare as row
   * count plus Verify's non-float checksum — the pin gate's notion of
@@ -27,7 +28,9 @@ class StatelessRegistrySpec extends SparkSpec {
                    "q_label_propagation", "q_triangles", "q_connected_components",
                    "q_shortest_paths", "q_scc", "q_link_prediction",
                    "q_minhash_dedup", "q_dedup_clusters", "q_dedup_incremental",
-                   "q_minhash_lsh", "q_knn_probe"))
+                   "q_minhash_lsh", "q_knn_probe", "q_allpairs_jaccard",
+                   "q_dedup_clusters_exact", "q_dedup_incremental_exact",
+                   "q_jaccard_pairs", "q_compaction_plan", "q_stream_neardup"))
     test(s"$name leaves no cached state and repeats its result") {
       val runs = (1 to 2).map { run =>
         val before = cachedState

@@ -27,7 +27,8 @@ class BlockScoreSpec extends SparkSpec {
     (r.getLong(0), r.getLong(1), java.lang.Float.floatToIntBits(r.getFloat(2))))
 
   /** The pair count and the top `k` of the replaced chain. */
-  private def reference(df: DataFrame, measure: String, k: Int): (Long, Top) = {
+  private def reference(df: DataFrame, measure: String, k: Int,
+                        cfg: CandidateConfig = cfg): (Long, Top) = {
     val sims = Candidates.attachBothSides(Candidates.pairs(df, cfg),
         df.select("doc_id", "features"), "doc_id", "features")
       .select(col("pk1"), col("pk2"),
@@ -35,7 +36,8 @@ class BlockScoreSpec extends SparkSpec {
     (sims.count(), rows(Post.topK(sims, k)))
   }
 
-  private def kernel(df: DataFrame, measure: String, k: Int, tileRows: Int): (Long, Top) = {
+  private def kernel(df: DataFrame, measure: String, k: Int, tileRows: Int,
+                     cfg: CandidateConfig = cfg): (Long, Top) = {
     val s = BlockScore.run(df, cfg, "features", measure, k, tileRows)
     (s.pairs, rows(s.top))
   }
@@ -96,6 +98,20 @@ class BlockScoreSpec extends SparkSpec {
     assert(java.lang.Float.isNaN(java.lang.Float.intBitsToFloat(cosine.head._3)),
       "the zero vector's NaN cosine does not rank first")
     assert(cosine.map(_._3).distinct.size < cosine.size, "no similarity ties in the top 30")
+  }
+
+  test("with no length band, every measure matches the chain, whole and tiled") {
+    // workflow 3's form (q_lda_candidates): block and group only
+    val unbanded = cfg.copy(lengthCol = None)
+    for ((df, k) <- Seq(clustered -> 100, skewed -> 60)) {
+      assert(reference(df, "cosine", k, unbanded)._1 > reference(df, "cosine", k)._1,
+        "the length band drops no pair here")
+      for (measure <- Kernels.byName.keys.toSeq.sorted) {
+        val want = reference(df, measure, k, unbanded)
+        assert(kernel(df, measure, k, BlockScore.TileRows, unbanded) == want, measure)
+        assert(kernel(df, measure, k, 40, unbanded) == want, s"$measure, 40-row tiles")
+      }
+    }
   }
 
   test("the result does not depend on the partition count, and rows counts every input row") {
