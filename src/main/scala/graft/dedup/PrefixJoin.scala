@@ -108,8 +108,14 @@ object PrefixJoin {
                      tau: Double, minJacPct: Double,
                      blockCol: Option[String] = None): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"threshold in (0,1]: $tau")
+    // A null block pairs with nothing. Dropped here, once: the pair
+    // predicate's inferred isnotnull(__tag) would otherwise reach only the
+    // prefix branch, and the two branches would aggregate the token
+    // exchange apart. Dropping it moves only document frequencies, and any
+    // shared total order keeps the prefix theorem.
     val sets = sets0.select(blockCol.fold(lit(true))(c => col(c)).as("__tag"),
-      col(idCol).as("__id"), col(setCol).as("__sids"))
+        col(idCol).as("__id"), col(setCol).as("__sids"))
+      .filter(col("__tag").isNotNull)
     join(sets, tau, minJacPct, lit(true), lit(true),
         col("__taga") === col("__tagb") && col("__a") < col("__b"))
       .select(col("__a").as("d1"), col("__b").as("d2"),

@@ -34,9 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * measured ~35 s CPU per bench pass at sf0.1 on q_minhash_lsh's map
   * stage alone. One linear character scan with no allocation beyond the
   * token buffer and the output array computes the identical set
-  * (CleanTokenBucketsSpec fuzzes parity against the stock
-  * FeaturePipeline on adversarial inputs; the q_minhash_lsh DuckDB hash
-  * gate replays the same pipeline end-to-end).
+  * (CleanTokenBucketsSpec fuzzes parity against the stock chain, kept in
+  * test scope as the StockPipeline oracle, on adversarial inputs; the
+  * q_minhash_lsh DuckDB hash gate replays the same pipeline end-to-end).
   */
 case class CleanTokenBuckets(child: Expression, numFeatures: Int,
                              stopWords: Seq[String])

@@ -8,12 +8,12 @@ import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen TF(-IDF) featurization kernels (r14, guide §4.1) — the
-  * corpus-scale replacement for the stock FeaturePipeline UDF chain
-  * (RegexTokenizer → StopWordsRemover → HashingTF → IDFModel.transform),
-  * which ran four boxed per-row UDFs over every document TWICE per
-  * featurization (once under the IDF fit, once in the transform) and fed
-  * q_tfidf_features (headline), the pinned k-means/LDA fits, q_dimsum and
-  * q_billmatch.
+  * corpus-scale replacement for the stock MLlib UDF chain (RegexTokenizer →
+  * StopWordsRemover → HashingTF → IDFModel.transform), which ran four boxed
+  * per-row UDFs over every document TWICE per featurization (once under
+  * the IDF fit, once in the transform). They are all of
+  * FeaturePipeline.features, which feeds q_tfidf_features (headline), the
+  * pinned k-means/LDA fits, q_dimsum and q_billmatch.
   *
   * [[CleanTokenTf]] replays the exact [[CleanTokenBuckets]] scan (clean →
   * drop-short-words → \W tokenize → english stop words → HashingTF murmur3
@@ -41,9 +41,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * aggregate and replays mllib `IDF`'s idf formula over those integer
   * counts on the driver.
   *
-  * Parity is proven corpus-wide in TfIdfKernelsSpec (stock
-  * FeaturePipeline.features vs the kernel path, bit-for-bit on
-  * (indices, values)) and gated end-to-end by the q_tfidf_features /
+  * Parity is proven corpus-wide in TfIdfKernelsSpec (the stock chain, kept
+  * in test scope as the StockPipeline oracle, vs the kernel path,
+  * bit-for-bit on (indices, values)) and gated end-to-end by the q_tfidf_features /
   * q_billmatch DuckDB oracles and the four pinned fits downstream.
   */
 case class CleanTokenTf(child: Expression, numFeatures: Int,

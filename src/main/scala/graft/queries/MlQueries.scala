@@ -155,10 +155,10 @@ object MlQueries {
         .orderBy("doc_id")
     },
 
-    // ----- M6: CountVectorizer path. Gate variant uses an unbounded vocab so
-    // nnz == per-doc distinct post-pipeline terms, which the oracle mirrors
-    // exactly (clean -> drop-short-words -> \W tokenize -> english stopwords);
-    // the bounded-vocab cut is order-dependent at ties and stays spec-covered.
+    // ----- M6: CountVectorizer nnz with an unbounded vocab == per-doc distinct
+    // post-pipeline terms (clean -> drop-short-words -> \W tokenize ->
+    // english stopwords), the size of TextOps.termSet; no fit job. The
+    // oracle mirrors the same tokenization.
     "q_count_vectorized" -> QueryDef.sql(s"""
       SELECT doc_id, CAST(len(list_filter(list_distinct(
                regexp_split_to_array(
@@ -166,12 +166,8 @@ object MlQueries {
                                 '\\b\\w{1,2}\\b', '', 'g'), '\\W')),
              x -> x <> '' AND x NOT IN (${MlQueries.stopwordSqlList}))) AS INTEGER) AS nnz
       FROM documents ORDER BY doc_id""") { (s, d) =>
-      val cfg = FeatureConfig(useCountVectorizer = true, vocabLimit = 1 << 18, useIdf = false)
-      val nnz = size(org.apache.spark.sql.graft.bridge.column(
-        graft.expressions.VectorNzIndices(
-          org.apache.spark.sql.graft.bridge.expression(col("features")))))
-      FeaturePipeline.features(spread(Tables.documents(s, d)), cfg)
-        .select(col("doc_id"), nnz.as("nnz"))
+      spread(Tables.documents(s, d))
+        .select(col("doc_id"), size(TextOps.termSet(col("text"))).as("nnz"))
         .orderBy("doc_id")
     },
 
@@ -534,9 +530,13 @@ object MlQueries {
             ORDER BY raw, doc_id LIMIT 25)
       SELECT doc_id, ROUND(raw, 6) AS jaccard_dist FROM d
       ORDER BY jaccard_dist, doc_id""") { (s, d) =>
-      val cfg = FeatureConfig(useCountVectorizer = true, vocabLimit = 1 << 18,
-        useIdf = false)
-      val feats = FeaturePipeline.features(spread(Tables.documents(s, d)), cfg)
+      // injective term indices; the Jaccard distances do not depend on the
+      // vocabulary order
+      val terms = spread(Tables.documents(s, d))
+        .select(col("doc_id"), TextOps.termSet(col("text")).as("terms"))
+      val feats = new org.apache.spark.ml.feature.CountVectorizer()
+        .setInputCol("terms").setOutputCol("features")
+        .fit(terms).transform(terms)
         .select("doc_id", "features")
       val probe: Vector =
         feats.filter(col("doc_id") === 0).head.getAs[Vector]("features")

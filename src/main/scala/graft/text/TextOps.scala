@@ -34,6 +34,16 @@ object TextOps {
       graft.expressions.SplitNonEmpty(
         org.apache.spark.sql.graft.bridge.expression(c)))
 
+  /** M1-M3 as a set: the distinct terms of clean → dropSmallWords →
+    * RegexTokenizer(`\W`) → english StopWordsRemover, in any order — the
+    * per-document term set a CountVectorizer vector's nonzeros index, and
+    * what the DuckDB oracles compute (`regexp_split_to_array(…, '\W')`,
+    * `list_filter(x <> '' AND x NOT IN stop)`, `list_distinct`). */
+  def termSet(text: Column): Column =
+    array_except(split(dropSmallWords(clean(text)), "\\W"),
+      typedLit("" +: org.apache.spark.ml.feature.StopWordsRemover
+        .loadDefaultStopWords("english").toSeq))
+
   /** M4: n-grams over a token array (reference NGram usage Utils.scala:206-216)
     * — ml.feature.NGram per-row semantics as a native codegen expression
     * ([[graft.expressions.NGramJoin]]; spec-checked against NGram itself). */

@@ -143,7 +143,7 @@ object DimsumFork {
 
   /** Map-side combiner: one `add` per sampled product, `emit`/`drain` hand
     * full per-reducer chunks to the iterator. */
-  private sealed trait PairAccumulator {
+  private[graft] sealed trait PairAccumulator {
     def add(key: Long, value: Double): Unit
     /** Move every live entry into per-reducer chunk buffers. */
     def flushAll(): Unit
@@ -153,7 +153,7 @@ object DimsumFork {
   }
 
   /** Per-reducer chunk buffers shared by both accumulators. */
-  private abstract class ChunkedAccumulator(numReducers: Int)
+  private[graft] abstract class ChunkedAccumulator(numReducers: Int)
       extends PairAccumulator {
     private val bufKeys = Array.ofDim[Long](numReducers, ChunkSize)
     private val bufVals = Array.ofDim[Double](numReducers, ChunkSize)
@@ -223,16 +223,21 @@ object DimsumFork {
   }
 
   /** Open-addressing long→double accumulator with a capacity flush valve:
-    * when an insert would pass 2/3 load at maxCapacity (possible MID-row —
-    * one dense row emits up to nnz²/2 distinct pairs) the live entries are
-    * emitted as partials and the map cleared; downstream the reduce re-sums
-    * the split chunks in chronological order. */
-  private final class HashPairAccumulator(maxCapacity: Int, numReducers: Int)
+    * when a new key would bring the map to 2/3 load at maxCapacity (possible
+    * MID-row — one dense row emits up to nnz²/2 distinct pairs) the live
+    * entries are emitted as partials and the map cleared, before the insert
+    * could grow the table past maxCapacity slots; downstream the reduce
+    * re-sums the split chunks in chronological order. */
+  private[graft] final class HashPairAccumulator(maxCapacity: Int, numReducers: Int)
       extends ChunkedAccumulator(numReducers) {
     private val m = new LongDoubleMap(math.min(1 << 16, maxCapacity))
 
+    /** Slots of the table (its memory bound). */
+    def slots: Int = m.slots
+
     override def add(key: Long, value: Double): Unit = {
-      if (m.size + (m.size >> 1) >= maxCapacity && !m.contains(key)) {
+      val after = m.size + 1
+      if (after + (after >> 1) >= maxCapacity && !m.contains(key)) {
         m.foreach(emit)
         m.clear()
       }
@@ -255,6 +260,8 @@ object DimsumFork {
     private var vals = new Array[Double](capacity)
     private var mask = capacity - 1
     var size = 0
+
+    def slots: Int = capacity
 
     private def scramble(key: Long): Int = {
       val h = key * 0x9E3779B97F4A7C15L

@@ -160,6 +160,27 @@ class PlanShapeSpec extends SparkSpec {
       survivors + corpus.count(), "dedupAgainst")
   }
 
+  /** The blocked self form reads one token exchange: the prefix and the
+    * verify branch share the document-frequency window and the
+    * per-document aggregate above it, so the executed plan runs the window
+    * once and reuses the aggregate's exchange. A null-block filter that
+    * reaches only one branch makes the two aggregates differ, and the
+    * window runs twice. */
+  test("blocked PrefixJoin runs its document-frequency window once") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.col
+    import graft.dedup.{MinHashDedup, PrefixJoin}
+    val df = PrefixJoin.allPairsOnSets(
+      graft.io.Tables.documents(spark, dir).select(col("doc_id"), col("lang"),
+        MinHashDedup.shingleIds(col("text"), 1).as("sids")),
+      "doc_id", "sids", tau = 0.8, minJacPct = 80.0, blockCol = Some("lang"))
+    df.collect()
+    val windows = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case w: WindowExec => w }
+    assert(windows.size == 1, s"${windows.size} windows run:\n${df.queryExecution.executedPlan}")
+  }
+
   /** The featurization kernels lowercase their raw input in their own scan.
     * A `Lower` in front of them costs a cold JVM the class init of
     * CollationAwareUTF8String: ICU title case for all 1.1M code points,

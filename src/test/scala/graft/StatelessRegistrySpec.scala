@@ -3,14 +3,17 @@ package graft
 /** Registry queries keep no state across calls: a run adds no persisted
   * RDD and no cached plan to the session, and a second run gives
   * the same result as the first. The queries cover both registry
-  * featurizations (TF-IDF and hashed counts), the seeded k-means fit,
+  * featurizations (TF-IDF and hashed counts), the term-set count and the
+  * CountVectorizer fit behind exact k-NN, the seeded k-means fit,
   * every graph operator, MinHash near-dup dedup (self, incremental and
   * streaming), the MinHash LSH join, the LSH k-NN probe, the exact prefix
   * join (self, blocked and incremental) and the prefix-scan compaction plan.
   * The test session is shared across suites, so every check compares
-  * before with after rather than against zero. Results compare as row
-  * count plus Verify's non-float checksum — the pin gate's notion of
-  * equality, insensitive to float-reduction order.
+  * before with after rather than against zero, and each case first clears
+  * the session's cached plans: a persist of a plan that an earlier suite
+  * already cached adds no cache entry and no RDD, and would pass unseen.
+  * Results compare as row count plus Verify's non-float checksum — the pin
+  * gate's notion of equality, insensitive to float-reduction order.
   */
 class StatelessRegistrySpec extends SparkSpec {
 
@@ -22,7 +25,8 @@ class StatelessRegistrySpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.keySet.toSet,
     org.apache.spark.sql.graft.CacheProbe.entries(spark))
 
-  for (name <- Seq("q_tfidf_features", "q_kmeans_blocks", "q_dimsum",
+  for (name <- Seq("q_tfidf_features", "q_count_vectorized", "q_knn_exact",
+                   "q_kmeans_blocks", "q_dimsum",
                    "q_billmatch", "q_pagerank", "q_pagerank_weighted",
                    "q_pagerank_personalized", "q_hits", "q_kcore",
                    "q_label_propagation", "q_triangles", "q_connected_components",
@@ -32,6 +36,7 @@ class StatelessRegistrySpec extends SparkSpec {
                    "q_dedup_clusters_exact", "q_dedup_incremental_exact",
                    "q_jaccard_pairs", "q_compaction_plan", "q_stream_neardup"))
     test(s"$name leaves no cached state and repeats its result") {
+      spark.catalog.clearCache()
       val runs = (1 to 2).map { run =>
         val before = cachedState
         val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,13 +1,14 @@
 package graft.expressions
 
 import graft.SparkSpec
-import graft.text.{FeatureConfig, FeaturePipeline}
+import graft.text.{FeatureConfig, FeaturePipeline, StockPipeline}
 import org.apache.spark.ml.feature.StopWordsRemover
 import org.apache.spark.sql.functions._
 
 /** CleanTokenBuckets must equal the stock pipeline it replaces — clean →
   * dropSmallWords → RegexTokenizer(\W) → english StopWordsRemover →
-  * HashingTF — nonzero-index set, element for element. */
+  * HashingTF, the test-scope StockPipeline oracle — nonzero-index set,
+  * element for element. */
 class CleanTokenBucketsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,11 +24,8 @@ class CleanTokenBucketsSpec extends SparkSpec {
   }
 
   private def pipelineSets(df: org.apache.spark.sql.DataFrame, n: Int) = {
-    // fitTransform = the STOCK transformer chain (r14: `features` itself now
-    // routes hashing configs through the CleanTokenTf kernel, so the parity
-    // reference must name the stock path explicitly)
-    val feats = FeaturePipeline.fitTransform(df,
-      FeatureConfig(numTextFeatures = n, useIdf = false))._2
+    val feats = StockPipeline.features(df,
+      FeatureConfig(numTextFeatures = n, useIdf = false))
     val nz = org.apache.spark.sql.graft.bridge.column(
       VectorNzIndices(
         org.apache.spark.sql.graft.bridge.expression(col("features"))))
@@ -73,7 +71,7 @@ class CleanTokenBucketsSpec extends SparkSpec {
     // diverge on non-ASCII input, and the gates hold because the fixture
     // corpus is ASCII-only. The kernel applies the ASCII definition
     // consistently (run length over [a-zA-Z_] chars), matching the oracle.
-    val doc = Seq((9L, "café menü résumé plain words")).toDF("doc_id", "text")
+    val doc = CleanTokenBucketsSpec.nonAsciiRows.toDF("doc_id", "text")
     val k = kernelSets(doc, 1024)(9L).toSet
     def bucket(t: String) = graft.text.Murmur3.bucket(t, 1024).toLong
     assert(k == Set("caf", "men", "sum", "plain", "words").map(bucket),
@@ -85,12 +83,7 @@ class CleanTokenBucketsSpec extends SparkSpec {
   }
 
   test("fuzz parity against the stock pipeline") {
-    val rnd = new scala.util.Random(7)
-    val alphabet = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJ0123456789 ,:;?!._-'\"()\t\n"
-    val docs = (0L until 200L).map { i =>
-      val len = rnd.nextInt(240)
-      (i, (0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
-    }.toDF("doc_id", "text")
+    val docs = TfIdfKernelsSpec.fuzzRows(7, 200).toDF("doc_id", "text")
     val k = kernelSets(docs, 256)
     val p = pipelineSets(docs, 256)
     assert(k.keySet == p.keySet)
@@ -141,4 +134,11 @@ class CleanTokenBucketsSpec extends SparkSpec {
     assert(viaSets.map(r => (r._1, r._2)).contains((1L, 2L)))
     assert(viaSets.map(r => (r._1, r._2)).contains((1L, 4L)))
   }
+}
+
+object CleanTokenBucketsSpec {
+
+  /** Accented words, where the kernel's ASCII `\b` and the stock chain's
+    * Java `\b` disagree. */
+  val nonAsciiRows: Seq[(Long, String)] = Seq((9L, "café menü résumé plain words"))
 }

@@ -19,17 +19,7 @@ class RawTextLowerSpec extends SparkSpec {
 
   private val stop = StopWordsRemover.loadDefaultStopWords("english").toSeq
 
-  private val texts: Seq[String] = Seq(
-    "The Quick BROWN Fox JUMPS over THE lazy dog, THE END",
-    "ALPHA Alpha alpha_BETA Gamma-GAMMA Zebra?LION Under_Scored THING",
-    "\u0130stanbul \u0130\u0130\u0130 THE \u0130TEM is \u0130s", // İ → i̇, two chars
-    "\u212Aelvin \u212A\u212A\u212A KELVIN temperature", // Kelvin sign → ASCII k
-    "Stra\u1E9Ee GRO\u1E9EE stra\u00DFe", // ẞ → ß
-    "\u039F\u0394\u039F\u03A3 \u03A3\u039F\u03A6\u039F\u03A3 THE", // final Σ → ς
-    "\uFF21\uFF22\uFF23 \uFF41\uFF42\uFF43 ABC Full-Width", // Ａ → ａ
-    "§ 12 Section §§ the Sections §ING",
-    "",
-    null)
+  private val texts = RawTextLowerSpec.texts
 
   /** Text whose bytes are not valid UTF-8 (lone continuation bytes, a
     * truncated sequence, 0xFF). */
@@ -92,4 +82,21 @@ class RawTextLowerSpec extends SparkSpec {
       assert(e.getMessage.contains("UTF8_BINARY"), s"$name: ${e.getMessage}")
     }
   }
+}
+
+object RawTextLowerSpec {
+
+  /** Text whose lowercasing changes length or produces ASCII, plus empty
+    * and null text. */
+  val texts: Seq[String] = Seq(
+    "The Quick BROWN Fox JUMPS over THE lazy dog, THE END",
+    "ALPHA Alpha alpha_BETA Gamma-GAMMA Zebra?LION Under_Scored THING",
+    "\u0130stanbul \u0130\u0130\u0130 THE \u0130TEM is \u0130s", // İ → i̇, two chars
+    "\u212Aelvin \u212A\u212A\u212A KELVIN temperature", // Kelvin sign → ASCII k
+    "Stra\u1E9Ee GRO\u1E9EE stra\u00DFe", // ẞ → ß
+    "\u039F\u0394\u039F\u03A3 \u03A3\u039F\u03A6\u039F\u03A3 THE", // final Σ → ς
+    "\uFF21\uFF22\uFF23 \uFF41\uFF42\uFF43 ABC Full-Width", // Ａ → ａ
+    "§ 12 Section §§ the Sections §ING",
+    "",
+    null)
 }

@@ -1,14 +1,14 @@
 package graft.expressions
 
 import graft.SparkSpec
-import graft.text.{FeatureConfig, FeaturePipeline}
+import graft.text.{FeatureConfig, FeaturePipeline, StockPipeline}
 import org.apache.spark.ml.linalg.{SparseVector, Vector}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The CleanTokenTf/IdfScale kernel path (FeaturePipeline.features, hashing
-  * configs) must equal the STOCK transformer chain
-  * (FeaturePipeline.fitTransform) bit-for-bit: same sparse indices, same
+/** The CleanTokenTf/IdfScale kernel path (FeaturePipeline.features) must
+  * equal the STOCK transformer chain (the test-scope StockPipeline oracle)
+  * bit-for-bit: same sparse indices, same
   * value BITS (Double.doubleToLongBits) — the features feed four pinned
   * fits, q_dimsum's pinned sampling and the q_tfidf_features/q_billmatch
   * oracles, so "approximately equal" is not a meaningful parity notion
@@ -33,7 +33,7 @@ class TfIdfKernelsSpec extends SparkSpec {
     }.toMap
 
   private def compare(docs: DataFrame, cfg: FeatureConfig): Unit = {
-    val stock = fingerprint(FeaturePipeline.fitTransform(docs, cfg)._2)
+    val stock = fingerprint(StockPipeline.features(docs, cfg))
     val kernel = fingerprint(FeaturePipeline.features(docs, cfg))
     assert(stock.keySet == kernel.keySet)
     val bad = stock.keySet.filter(id => stock(id) != kernel(id))
@@ -41,18 +41,7 @@ class TfIdfKernelsSpec extends SparkSpec {
       s"feature mismatch for docs ${bad.take(3).map(id => (id, stock(id), kernel(id)))}")
   }
 
-  private val advDocs = Seq(
-    (1L, "ab,cd and ab12cd share one merged token"),
-    (2L, "a,b xy z win the quick brown foxes"),
-    (3L, "the quick_brown fox. of! and? under_scored_token stays"),
-    (4L, "the of and a an"),          // all stopwords → empty vector
-    (5L, ""),                          // empty doc
-    (6L, "   \t \n  "),
-    (7L, "Alpha ALPHA alpha BETA beta gamma-gamma"), // counts > 1
-    (8L, "2026 101 x: y; zebra?lion 42nd street"),
-    (9L, "repeat repeat repeat repeat distinct singleton"),
-    (10L, "abcd abcde abcdef abcdefg abcdefgh longertokenvalue")
-  ).toDF("doc_id", "text")
+  private val advDocs = TfIdfKernelsSpec.advRows.toDF("doc_id", "text")
 
   test("TF counts: kernel == stock HashingTF, bit-for-bit") {
     for (n <- Seq(64, 1024))
@@ -60,24 +49,12 @@ class TfIdfKernelsSpec extends SparkSpec {
   }
 
   test("TF-IDF: kernel == stock HashingTF→IDF, bit-for-bit") {
-    for (n <- Seq(64, 1024); mdf <- Seq(0, 1, 3))
-      compare(advDocs,
-        FeatureConfig(numTextFeatures = n, useIdf = true, minDocFreq = mdf))
-  }
-
-  test("mixed-case extraStopWords: kernel == case-insensitive stock remover") {
-    for (useIdf <- Seq(false, true))
-      compare(advDocs, FeatureConfig(numTextFeatures = 1024, useIdf = useIdf,
-        extraStopWords = Seq("Quick", "ZEBRA")))
+    for (n <- Seq(64, 1024))
+      compare(advDocs, FeatureConfig(numTextFeatures = n, useIdf = true))
   }
 
   test("fuzz parity against the stock pipeline (counts + idf)") {
-    val rnd = new scala.util.Random(13)
-    val alphabet = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJ0123456789 ,:;?!._-'\"()\t\n"
-    val docs = (0L until 150L).map { i =>
-      val len = rnd.nextInt(240)
-      (i, (0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
-    }.toDF("doc_id", "text")
+    val docs = TfIdfKernelsSpec.fuzzRows(13, 150).toDF("doc_id", "text")
     compare(docs, FeatureConfig(numTextFeatures = 256, useIdf = false))
     compare(docs, FeatureConfig(numTextFeatures = 256, useIdf = true))
   }
@@ -169,5 +146,33 @@ class TfIdfKernelsSpec extends SparkSpec {
     val out = IdfScale.eval(in, idf)
     assert(out.getByte(0) == 1.toByte)
     assert(out.getArray(3).toDoubleArray().toSeq == Seq(0.0, 2.0, 10.0))
+  }
+}
+
+object TfIdfKernelsSpec {
+
+  /** Adversarial documents for the featurization parity specs. */
+  val advRows: Seq[(Long, String)] = Seq(
+    (1L, "ab,cd and ab12cd share one merged token"),
+    (2L, "a,b xy z win the quick brown foxes"),
+    (3L, "the quick_brown fox. of! and? under_scored_token stays"),
+    (4L, "the of and a an"),          // all stopwords → empty vector
+    (5L, ""),                          // empty doc
+    (6L, "   \t \n  "),
+    (7L, "Alpha ALPHA alpha BETA beta gamma-gamma"), // counts > 1
+    (8L, "2026 101 x: y; zebra?lion 42nd street"),
+    (9L, "repeat repeat repeat repeat distinct singleton"),
+    (10L, "abcd abcde abcdef abcdefg abcdefgh longertokenvalue"))
+
+  /** `n` documents (ids 0 until n) of up to 239 characters drawn from
+    * letters of both cases, digits, the clean-deleted punctuation,
+    * separators and whitespace by a `seed`ed Random. */
+  def fuzzRows(seed: Int, n: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val alphabet = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJ0123456789 ,:;?!._-'\"()\t\n"
+    (0L until n.toLong).map { i =>
+      val len = rnd.nextInt(240)
+      (i, (0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
+    }
   }
 }

@@ -103,6 +103,14 @@ class DimsumForkSpec extends SparkSpec {
     rows.unpersist()
   }
 
+  test("flush valve: the hash table never grows past maxCapacity slots") {
+    // the valve flushes before the insert that would reach 2/3 load; a
+    // check of the pre-insert size lets that insert grow the table to 2x
+    val keys = (1L to 1000L).iterator.map(i => (i << 32) | (i + 1))
+    val peak = org.apache.spark.mllib.graft.DimsumProbe.peakSlots(64, keys)
+    assert(peak <= 64, s"the table grew to $peak slots at maxCapacity 64")
+  }
+
   test("docSimilarities end-to-end still matches the exact-cosine limit") {
     // threshold 0 ⇒ no sampling ⇒ exact cosine through the fork
     import spark.implicits._
