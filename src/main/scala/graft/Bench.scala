@@ -134,10 +134,10 @@ object Bench {
       for (pass <- 1 to math.max(1, reps); (name, fn) <- work if !failed(name))
         rep(name, fn, s"pass $pass")
       if (reps > 1) for ((name, fn) <- work) {
-        def spread = times(name).max / times(name).min
+        def maxOverMin = times(name).max / times(name).min
         var budget = extraReps
-        while (budget > 0 && !failed(name) && spread > 2.0) {
-          rep(name, fn, f"guard (spread $spread%.1fx)")
+        while (budget > 0 && !failed(name) && maxOverMin > 2.0) {
+          rep(name, fn, f"guard (spread $maxOverMin%.1fx)")
           budget -= 1
         }
       }

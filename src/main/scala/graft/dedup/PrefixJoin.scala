@@ -78,14 +78,9 @@ object PrefixJoin {
   def allPairs(df: DataFrame, cfg: Config = Config()): DataFrame = {
     val tau = cfg.jaccardThreshold
     require(tau > 0.0 && tau <= 1.0, s"threshold in (0,1]: $tau")
-    // spread: shingling is winnow-class per-row compute, all of it in the
-    // map stage of the token shuffle, so a one-row-group input would build
-    // every set on one task (graft.io.Tables.spread scaladoc; no-op on
-    // well-split tables)
     allPairsOnSets(
-      graft.io.Tables.spread(df)
-        .select(col(cfg.idCol).as("__id"),
-          MinHashDedup.shingleIds(col(cfg.textCol), cfg.shingleSize).as("__sids")),
+      df.select(col(cfg.idCol).as("__id"),
+        MinHashDedup.shingleIds(col(cfg.textCol), cfg.shingleSize).as("__sids")),
       "__id", "__sids", tau, tau * 100.0)
   }
 
@@ -140,9 +135,9 @@ object PrefixJoin {
     val exactSurvivors = batch.join(
       corpus.select(md5(col(cfg.textCol).cast("binary")).as("__h")).distinct(),
       md5(col(cfg.textCol).cast("binary")) === col("__h"), "left_anti")
-    // __tag marks the batch rows; spread as in allPairs
-    def sets(df: DataFrame, isBatch: Boolean) = graft.io.Tables.spread(df)
-      .select(lit(isBatch).as("__tag"), col(cfg.idCol).as("__id"),
+    // __tag marks the batch rows
+    def sets(df: DataFrame, isBatch: Boolean) =
+      df.select(lit(isBatch).as("__tag"), col(cfg.idCol).as("__id"),
         MinHashDedup.shingleIds(col(cfg.textCol), cfg.shingleSize).as("__sids"))
     val dupIds = join(sets(exactSurvivors, true).union(sets(corpus, false)),
         tau, tau * 100.0, col("__tag"), !col("__tag"), lit(true))

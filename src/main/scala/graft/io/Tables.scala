@@ -167,7 +167,12 @@ object Tables {
     * shuttle a 2.5 KB row), one id+text repartition is ~100× cheaper than
     * serial execution. Conditional on purpose: when the source already
     * splits at least as wide as the executor slots (every healthy table at
-    * real scale), this is a NO-OP — no shuffle is added at 100 TB. */
+    * real scale), this is a NO-OP — no shuffle is added at 100 TB.
+    *
+    * This is the engine's one input fan-out. Callers spread what they read;
+    * library operators take their input as it comes and spread nothing.
+    * The one fixed count is q_dimsum's 32-way input: DIMSUM seeds its
+    * sampler by partition index, so that pin depends on the count. */
   def spread(df: DataFrame): DataFrame = {
     val slots = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= slots) df else df.repartition(slots)

@@ -75,6 +75,8 @@ object AnalyticsQueries {
       // parallel. xxhash64(doc_id), never rand() (retry-safe, §2.5).
       // S scales with the executor slots (values are per-pair scalars, so
       // the result is S-independent); never a constant tuned for one host.
+      // The explode rides the streamed probe side a and the broadcast side b
+      // is hashed, so the broadcast stays one copy of the table at any S.
       val S = s.sparkContext.defaultParallelism
       val t = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), substring(col("text"), 1, 25).as("s"))
@@ -82,10 +84,10 @@ object AnalyticsQueries {
       // probe side to ONE scan partition — the fan-out key alone cannot
       // re-parallelize a map-side join (no-op on any well-split table)
       val a = Tables.spread(t)
-        .withColumn("__bk", pmod(xxhash64(col("doc_id")), lit(S.toLong)))
+        .withColumn("__bk", explode(sequence(lit(0L), lit(S.toLong - 1))))
         .alias("a")
-      val b = t.withColumn("__bk",
-          explode(sequence(lit(0L), lit(S.toLong - 1)))).alias("b")
+      val b = broadcast(t.withColumn("__bk",
+          pmod(xxhash64(col("doc_id")), lit(S.toLong)))).alias("b")
       a.join(b, col("a.lang") === col("b.lang") &&
           col("a.__bk") === col("b.__bk") &&
           col("a.doc_id") < col("b.doc_id"))

@@ -86,23 +86,12 @@ object MlQueries {
       s"($j, [${u.mkString(", ")}])"
     }.mkString(", ")
 
-  /** The testdata ships one small parquet file per table = ONE input split,
-    * which would serialize every per-row featurization map on a single core.
-    * Spread it across a FIXED fan-out of 32, not a slot-scaled one: q_dimsum's
-    * pin depends on the partition count, because DimsumFork seeds each
-    * partition's sampler with `XORShiftRandom(partitionIndex)`
-    * (DimsumFork.scala), so a different fan-out draws different samples.
-    * The seeded fits do not depend on it: they train on the hash-ordered
-    * `Clustering.fitSample`, in one sequence at any partition count. The repartition is NOT dropped on a
-    * well-split input — it shuffles at every scale. */
-  private def spread(df: DataFrame): DataFrame = df.repartition(32)
-
   /** documents → (doc_id, lang, n_chars, features) with TF-IDF features.
     * Built fresh on every call (the IDF fit runs eagerly here) and never
     * cached, so no query's output or timing depends on what ran before it
     * in the session. */
   private def featurized(s: SparkSession, d: String): DataFrame =
-    FeaturePipeline.features(spread(Tables.documents(s, d)), tfidfCfg)
+    FeaturePipeline.features(Tables.spread(Tables.documents(s, d)), tfidfCfg)
       .select("doc_id", "lang", "n_chars", "features")
 
   /** No-IDF murmur3-hashed COUNT features (1024 buckets) — the fully
@@ -111,7 +100,7 @@ object MlQueries {
     * q_candidates_budget, q_candidates_budget_exact). Uncached, like
     * [[featurized]]. */
   private def featurizedCounts(s: SparkSession, d: String): DataFrame =
-    FeaturePipeline.features(spread(Tables.documents(s, d)),
+    FeaturePipeline.features(Tables.spread(Tables.documents(s, d)),
       FeatureConfig(numTextFeatures = 1024, useIdf = false))
       .select("doc_id", "lang", "n_chars", "features")
 
@@ -166,7 +155,7 @@ object MlQueries {
                                 '\\b\\w{1,2}\\b', '', 'g'), '\\W')),
              x -> x <> '' AND x NOT IN (${MlQueries.stopwordSqlList}))) AS INTEGER) AS nnz
       FROM documents ORDER BY doc_id""") { (s, d) =>
-      spread(Tables.documents(s, d))
+      Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"), size(TextOps.termSet(col("text"))).as("nnz"))
         .orderBy("doc_id")
     },
@@ -240,7 +229,7 @@ object MlQueries {
             FROM d GROUP BY vec_id)
       SELECT vec_id, ROUND(raw, 6) AS lsa_norm FROM n ORDER BY vec_id""") { (s, d) =>
       import org.apache.spark.ml.functions.array_to_vector
-      val t = spread(Tables.embeddings(s, d))
+      val t = Tables.spread(Tables.embeddings(s, d))
         .select(col("vec_id"), array_to_vector(col("embedding")).as("features"))
       val dim = 64
       // pinned basis: embeddings 1..8, column-major — a bounded driver
@@ -309,7 +298,7 @@ object MlQueries {
       FROM scored WHERE jd < 0.6 ORDER BY pk1, pk2""") { (s, d) =>
       // spread BEFORE the join: the single-file corpus otherwise leaves the
       // bucket join's probe side one partition (observed 19 min at sf0.1;
-      // 32-way spread makes it minutes of parallel work)
+      // spread across the executor slots it is minutes of parallel work)
       //
       // r13: the featurization is the CleanTokenBuckets kernel — one codegen
       // scan computing the binary-TF nonzero-index SET directly (identical
@@ -333,7 +322,7 @@ object MlQueries {
           1024,
           org.apache.spark.ml.feature.StopWordsRemover
             .loadDefaultStopWords("english").toSeq))
-      val sets = spread(Tables.documents(s, d))
+      val sets = Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"), buckets.as("__set"))
       LshJoins.minHashSelfJoinSets(sets, "doc_id", "__set", threshold = 0.6)
         .select(col("pk1"), col("pk2"),
@@ -375,7 +364,7 @@ object MlQueries {
       SELECT pk1, pk2, ROUND(d, 6) AS dist FROM s
       WHERE d < 1.15 ORDER BY pk1, pk2"""
     } { (s, d) =>
-      val vecs = spread(Tables.embeddings(s, d))
+      val vecs = Tables.spread(Tables.embeddings(s, d))
         .select(col("vec_id"),
           org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("features"))
       LshJoins.brpSelfJoin(vecs, "vec_id", "features",
@@ -420,7 +409,7 @@ object MlQueries {
       ORDER BY pk1, pk2"""
     } { (s, d) =>
       import graft.similarity.ArrayOps
-      val t = spread(Tables.embeddings(s, d))
+      val t = Tables.spread(Tables.embeddings(s, d))
         .select(col("vec_id"), ArrayOps.asDouble(col("embedding")).as("v"))
       val dirs = t.filter(col("vec_id").isin(1L, 2L, 3L))
         .select(col("vec_id").as("tid"), col("v").as("rv"))
@@ -492,7 +481,7 @@ object MlQueries {
       SELECT doc_id, ROUND(raw, 6) AS jaccard_dist FROM d
       ORDER BY jaccard_dist, doc_id""") { (s, d) =>
       val cfg = FeatureConfig(numTextFeatures = 1024, useIdf = false)
-      val tf = FeaturePipeline.features(spread(Tables.documents(s, d)), cfg)
+      val tf = FeaturePipeline.features(Tables.spread(Tables.documents(s, d)), cfg)
         .select("doc_id", "features")
       import s.implicits._
       val probe: Vector = FeaturePipeline.features(
@@ -532,7 +521,7 @@ object MlQueries {
       ORDER BY jaccard_dist, doc_id""") { (s, d) =>
       // injective term indices; the Jaccard distances do not depend on the
       // vocabulary order
-      val terms = spread(Tables.documents(s, d))
+      val terms = Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"), TextOps.termSet(col("text")).as("terms"))
       val feats = new org.apache.spark.ml.feature.CountVectorizer()
         .setInputCol("terms").setOutputCol("features")
@@ -548,7 +537,9 @@ object MlQueries {
 
     // ----- M13/J10: DIMSUM sampled cosine all-pairs
     "q_dimsum" -> QueryDef.rowsOnly { (s, d) =>
-      Dimsum.docSimilarities(featurized(s, d), "doc_id", "features", threshold = 0.3)
+      // DIMSUM seeds its sampler by partition index: the pin depends on this count
+      val feats = FeaturePipeline.features(Tables.documents(s, d).repartition(32), tfidfCfg)
+      Dimsum.docSimilarities(feats, "doc_id", "features", threshold = 0.3)
         .filter(col("cos_sim") >= 0.5)
         .orderBy("d1", "d2")
     }.expectAtGate(93956L, "54071171296996192912380"),
@@ -624,7 +615,7 @@ object MlQueries {
       WHERE CAST(len(list_intersect(a.s,b.s)) AS DOUBLE)*100.0
             / len(list_distinct(list_concat(a.s,b.s))) >= 70.0
       ORDER BY d1, d2""") { (s, d) =>
-      MinHashDedup.nearDupPairs(spread(Tables.documents(s, d)),
+      MinHashDedup.nearDupPairs(Tables.spread(Tables.documents(s, d)),
         MinHashDedup.Config(shingleSize = 3, jaccardThreshold = 0.7))
         .orderBy("d1", "d2")
     },
@@ -649,7 +640,7 @@ object MlQueries {
       WHERE CAST(len(list_intersect(a.s,b.s)) AS DOUBLE)*100.0
             / len(list_distinct(list_concat(a.s,b.s))) >= 70.0
       ORDER BY d1, d2""") { (s, d) =>
-      PrefixJoin.allPairs(spread(Tables.documents(s, d)),
+      PrefixJoin.allPairs(Tables.spread(Tables.documents(s, d)),
         PrefixJoin.Config(shingleSize = 3, jaccardThreshold = 0.7))
         .orderBy("d1", "d2")
     },
@@ -677,7 +668,7 @@ object MlQueries {
       comp AS (SELECT vertex, MIN(root) AS survivor FROM reach GROUP BY vertex)
       SELECT survivor, COUNT(*) AS n_members
       FROM comp GROUP BY survivor ORDER BY survivor""") { (s, d) =>
-      val pairs = MinHashDedup.nearDupPairs(spread(Tables.documents(s, d)),
+      val pairs = MinHashDedup.nearDupPairs(Tables.spread(Tables.documents(s, d)),
         MinHashDedup.Config(shingleSize = 3, jaccardThreshold = 0.7))
       graft.graph.GraphOps.connectedComponents(
           pairs.select(col("d1").as("src"), col("d2").as("dst")))
@@ -709,7 +700,7 @@ object MlQueries {
       comp AS (SELECT vertex, MIN(root) AS survivor FROM reach GROUP BY vertex)
       SELECT survivor, COUNT(*) AS n_members
       FROM comp GROUP BY survivor ORDER BY survivor""") { (s, d) =>
-      val pairs = PrefixJoin.allPairs(spread(Tables.documents(s, d)),
+      val pairs = PrefixJoin.allPairs(Tables.spread(Tables.documents(s, d)),
         PrefixJoin.Config(shingleSize = 3, jaccardThreshold = 0.7))
       graft.graph.GraphOps.connectedComponents(
           pairs.select(col("d1").as("src"), col("d2").as("dst")))
@@ -743,8 +734,8 @@ object MlQueries {
       ORDER BY doc_id""") { (s, d) =>
       val docs = Tables.documents(s, d)
       MinHashDedup.dedupAgainst(
-          spread(docs.filter(col("doc_id") % 4 === 0)),
-          spread(docs.filter(col("doc_id") % 4 =!= 0)),
+          Tables.spread(docs.filter(col("doc_id") % 4 === 0)),
+          Tables.spread(docs.filter(col("doc_id") % 4 =!= 0)),
           MinHashDedup.Config(shingleSize = 3, jaccardThreshold = 0.7))
         .select("doc_id").orderBy("doc_id")
     },
@@ -773,8 +764,8 @@ object MlQueries {
       ORDER BY doc_id""") { (s, d) =>
       val docs = Tables.documents(s, d)
       PrefixJoin.dedupAgainst(
-          spread(docs.filter(col("doc_id") % 4 === 0)),
-          spread(docs.filter(col("doc_id") % 4 =!= 0)),
+          Tables.spread(docs.filter(col("doc_id") % 4 === 0)),
+          Tables.spread(docs.filter(col("doc_id") % 4 =!= 0)),
           PrefixJoin.Config(shingleSize = 3, jaccardThreshold = 0.7))
         .select("doc_id").orderBy("doc_id")
     },
@@ -801,7 +792,7 @@ object MlQueries {
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
       WHERE bit_count(xor(a.sig, b.sig)) <= 3
       ORDER BY d1, d2""") { (s, d) =>
-      SimHash.nearDupPairs(spread(Tables.documents(s, d)),
+      SimHash.nearDupPairs(Tables.spread(Tables.documents(s, d)),
         SimHash.Config(maxHammingDistance = 3, tokenHash = SimHash.md5Hash60))
         .orderBy("d1", "d2")
     },
@@ -1093,7 +1084,7 @@ object MlQueries {
       FROM dots JOIN nrm n1 ON dots.d1 = n1.doc_id
                 JOIN nrm n2 ON dots.d2 = n2.doc_id
       ORDER BY similarity DESC, d1, d2 LIMIT 50""") { (s, d) =>
-      val tf = spread(Tables.documents(s, d))
+      val tf = Tables.spread(Tables.documents(s, d))
         .filter(col("doc_id") < 2000)
         .select(col("doc_id"), col("lang"),
           explode(graft.text.TextOps.tokens(col("text"))).as("token"))
@@ -1178,7 +1169,7 @@ object MlQueries {
       ORDER BY vec_id"""
     } { (s, d) =>
       import graft.similarity.ArrayOps
-      val t = spread(Tables.embeddings(s, d))
+      val t = Tables.spread(Tables.embeddings(s, d))
         .select(col("vec_id"), pmod(col("vec_id"), lit(16)).as("prediction"),
           ArrayOps.asDouble(col("embedding")).as("v"))
       val a = t.select(col("prediction"), col("vec_id").as("id1"), col("v").as("v1"))
@@ -1238,7 +1229,7 @@ object MlQueries {
     } { (s, d) =>
       import graft.similarity.ArrayOps
       import org.apache.spark.sql.expressions.Window
-      val emb = spread(Tables.embeddings(s, d))
+      val emb = Tables.spread(Tables.embeddings(s, d))
         .select(col("vec_id"), ArrayOps.asDouble(col("embedding")).as("v"))
       val cents = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("cid"), col("v").as("cv"))

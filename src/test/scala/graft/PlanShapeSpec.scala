@@ -53,6 +53,34 @@ class PlanShapeSpec extends SparkSpec {
       "q_allpairs_jaccard plans a cartesian product")
   }
 
+  /** Callers fan a one-split input out through `Tables.spread`, to the
+    * executor slots. A fixed `repartition(32)` pays a 32-way shuffle at
+    * any scale. The exact prefix join takes its caller's fan-out. */
+  test("ML queries spread their input to the executor slots, not to 32") {
+    val slots = spark.sparkContext.defaultParallelism
+    for (q <- Seq("q_simhash_dedup", "q_minhash_lsh", "q_allpairs_jaccard")) {
+      val p = planOf(q)
+      assert(p.contains(s"RoundRobinPartitioning($slots)"),
+        s"$q does not spread its input to $slots slots:\n$p")
+      assert(!p.contains("RoundRobinPartitioning(32)"), s"$q spreads to a fixed 32:\n$p")
+    }
+  }
+
+  /** q_edit_distance explodes its streamed probe side across the sub-block
+    * buckets and broadcasts the table once. An explode under the broadcast
+    * makes the broadcast grow with the executor slots. */
+  test("q_edit_distance broadcasts no exploded side") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val plan = SparkEntry.queries("q_edit_distance")(spark, dir).queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val broadcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.nonEmpty, s"q_edit_distance broadcasts nothing:\n$plan")
+    assert(broadcasts.forall(helper.find(_)(_.isInstanceOf[GenerateExec]).isEmpty),
+      s"q_edit_distance broadcasts an exploded side:\n$plan")
+  }
+
   /** Winnowing fingerprint extraction must stay inside whole-stage codegen
     * (WinnowPack is an interpreted-fallback-prone custom expression; a
     * regression here costs the map-side of the whole dedup family). */

@@ -4,9 +4,11 @@ package graft
   * RDD and no cached plan to the session, and a second run gives
   * the same result as the first. The queries cover both registry
   * featurizations (TF-IDF and hashed counts), the term-set count and the
-  * CountVectorizer fit behind exact k-NN, the seeded k-means fit,
+  * CountVectorizer fit behind exact k-NN, the seeded k-means fit, the
+  * cached one-partition samples of the bisecting k-means and LDA fits,
   * every graph operator, MinHash near-dup dedup (self, incremental and
-  * streaming), the MinHash LSH join, the LSH k-NN probe, the exact prefix
+  * streaming), SimHash near-dup dedup, the MinHash and BRP LSH joins, the
+  * budgeted LSH candidate pairs, the LSH k-NN probe, the exact prefix
   * join (self, blocked and incremental) and the prefix-scan compaction plan.
   * The test session is shared across suites, so every check compares
   * before with after rather than against zero, and each case first clears
@@ -26,13 +28,15 @@ class StatelessRegistrySpec extends SparkSpec {
     org.apache.spark.sql.graft.CacheProbe.entries(spark))
 
   for (name <- Seq("q_tfidf_features", "q_count_vectorized", "q_knn_exact",
-                   "q_kmeans_blocks", "q_dimsum",
+                   "q_kmeans_blocks", "q_bisecting_blocks", "q_lda_candidates",
+                   "q_dimsum",
                    "q_billmatch", "q_pagerank", "q_pagerank_weighted",
                    "q_pagerank_personalized", "q_hits", "q_kcore",
                    "q_label_propagation", "q_triangles", "q_connected_components",
                    "q_shortest_paths", "q_scc", "q_link_prediction",
                    "q_minhash_dedup", "q_dedup_clusters", "q_dedup_incremental",
-                   "q_minhash_lsh", "q_knn_probe", "q_allpairs_jaccard",
+                   "q_simhash_dedup", "q_minhash_lsh", "q_brp_lsh",
+                   "q_candidates_budget", "q_knn_probe", "q_allpairs_jaccard",
                    "q_dedup_clusters_exact", "q_dedup_incremental_exact",
                    "q_jaccard_pairs", "q_compaction_plan", "q_stream_neardup"))
     test(s"$name leaves no cached state and repeats its result") {
